@@ -229,8 +229,8 @@ def main() -> None:
         #   per node) runs in; measured 0.91 efficiency vs 0.85 at
         #   level 6. The HEADLINE throughput above is measured at the
         #   default codec level and is unaffected.
-        # * window dedup pinned (the max_by default halves per-event
-        #   work and shifts weight to fixed costs at this small scale).
+        # * max_by-agg dedup, the only implementation (the recorded
+        #   r01-r05 gate numbers pinned the since-deleted window dedup).
         # * EQUAL-WALL-TIME LEGS over ONE SHARED LOG (round-3 study):
         #   the 4N leg replays the full 4×40M-event log as one slice;
         #   the N leg replays the first 40M-event LSN slice of the SAME
@@ -249,10 +249,10 @@ def main() -> None:
         #   pair reported, every raw draw persisted (round-2 verdict
         #   item 1) so a miss is auditable from the artifact alone.
         #   (zstd-10 measured and rejected: 0.873 at ~30% slower legs;
-        #   max_by-agg dedup measured and rejected for the GATE config:
-        #   0.50 — it triples the N leg's rate via map-side combine and
-        #   shifts weight back to fixed costs.) Failures degrade to an
-        #   error field.
+        #   max_by-agg dedup read 0.50 on these asymmetric legs — it
+        #   triples the N leg's rate via map-side combine and shifts
+        #   weight back to fixed costs.) Failures degrade to an error
+        #   field.
         try:
             sc_events = int(os.environ.get("BENCH_SCALING_EVENTS", "40000000"))
             # 3 brackets (7 legs): the r3b config halved leg wall time,
@@ -299,10 +299,8 @@ def main() -> None:
             sconf_4n = dict(sconf, **{
                 "spark.sql.shuffle.partitions": str(4 * base_parts),
             })
-            args_4n = ["--dedup-impl", "window",
-                       "--slice-size", str(4 * sc_events)]
-            args_n = ["--dedup-impl", "window",
-                      "--slice-size", str(sc_events), "--max-slices", "1"]
+            args_4n = ["--slice-size", str(4 * sc_events)]
+            args_n = ["--slice-size", str(sc_events), "--max-slices", "1"]
             # A-B-A bracketing: 4N legs BRACKET each N leg
             # (4N, N, 4N, N, ..., 4N); each N leg's efficiency uses the
             # MEAN of its two bracketing 4N rates, so monotone host

@@ -1,17 +1,24 @@
-"""Max-LSN deduplication of change events per key.
+"""Max-LSN deduplication of change events per key — the engine's ONE
+winner rule.
 
-The north rule requires change events "deduplicated per key via max-LSN
-window ranking" before the merge-apply stage. Within a slice several
-events may touch the same (conv_id, turn_idx) — multiple updates, a
-delete then re-insert, plus duplicate deliveries of the SAME lsn
-(at-least-once transport). The winner is the event with the highest LSN;
-equal-LSN duplicates are identical payloads, broken deterministically on
-op so the result is stable.
+Before a merge, each (conv_id, turn_idx) keeps only its max-LSN event.
+Within a slice several events may touch the same key — multiple
+updates, a delete then re-insert, plus duplicate deliveries of the SAME
+lsn (at-least-once transport). The winner is the event with the highest
+LSN; equal-LSN duplicates are identical payloads, broken
+deterministically on op so the result is stable.
 
-Implementation is a plain window ranking — Catalyst plans it as a single
-hash-partitioned sort, and because the window keys equal the merge-join
-keys, a preceding ``repartition(n, *keys)`` is reused by BOTH the window
-and the merge join (one shuffle total for dedup + merge probe side).
+Every per-key winner pick in the engine goes through this module, and
+the caller's input kind picks the implementation:
+
+* :func:`dedup_max_lsn_agg` — raw change batches (replay slices, stream
+  micro-batches, the change-log fold of ``reconcile_job``): a hash
+  aggregate whose map-side partial combine collapses duplicates BEFORE
+  the shuffle;
+* :func:`dedup_max_lsn` — a sort-based window ranking, used by
+  ``TargetTable`` to resolve base + delta dirs at read time (ordered on
+  ``_lsn``; cheaper than the aggregate there) and as the reference the
+  aggregate is tested against.
 """
 
 from __future__ import annotations
@@ -21,11 +28,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 from etl_reconciliate_spark.schemas import KEY_COLS
 
 
-def dedup_max_lsn(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
-    """One row per key: the max-LSN event (ties broken on op desc, so a
-    duplicated delivery pair (same lsn, same op) collapses stably)."""
+def dedup_max_lsn(
+    df: DataFrame,
+    key_cols: list[str] | None = None,
+    order: tuple[str, ...] = ("lsn", "op"),
+) -> DataFrame:
+    """One row per key: the row ranking first on ``order`` descending
+    (default: max-LSN, ties broken on op desc, so a duplicated delivery
+    pair (same lsn, same op) collapses stably)."""
     keys = key_cols or KEY_COLS
-    w = Window.partitionBy(*keys).orderBy(F.col("lsn").desc(), F.col("op").desc())
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order])
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -37,14 +49,14 @@ def dedup_max_lsn_agg(df: DataFrame, key_cols: list[str] | None = None) -> DataF
     """Same result as :func:`dedup_max_lsn`, as a hash AGGREGATE instead
     of a sort-based window: ``max_by(payload, (lsn, op))`` per key.
 
-    Why it wins at scale: HashAggregate does a map-side partial combine,
-    so duplicate deliveries and multi-update keys collapse BEFORE the
-    shuffle (the window must shuffle every raw event, then sort each
-    partition). The agg's own exchange hash-partitions by exactly the
-    merge keys, so no separate ``repartition`` is needed upstream.
-    Tie-break matches the window: lexicographic (lsn, op) descending —
-    equal-LSN duplicates are identical payloads, op breaks I/U/D ties
-    deterministically."""
+    Why it wins on change batches: HashAggregate does a map-side partial
+    combine, so duplicate deliveries and multi-update keys collapse
+    BEFORE the shuffle (the window must shuffle every raw event, then
+    sort each partition). The agg's own exchange hash-partitions by
+    exactly the merge keys, so no separate ``repartition`` is needed
+    upstream. Tie-break matches the window: lexicographic (lsn, op)
+    descending — equal-LSN duplicates are identical payloads, op breaks
+    I/U/D ties deterministically."""
     keys = key_cols or KEY_COLS
     payload = [c for c in df.columns if c not in keys]
     ordk = F.struct(F.col("lsn"), F.col("op"))

@@ -89,42 +89,6 @@ def slice_lineage(index: list[dict], lo: int, hi: int) -> list[dict]:
     ]
 
 
-def partition_lineage(slice_df: DataFrame) -> list[dict]:
-    """Per-input-file lineage of a change-log slice: file, row count,
-    min/max LSN. Must be called on the RAW scan (before any shuffle —
-    ``input_file_name()`` is empty past an exchange). One cheap columnar
-    aggregate job (reads only the lsn column + file metadata)."""
-    rows = (
-        slice_df.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min("lsn").alias("lsn_lo"),
-            F.max("lsn").alias("lsn_hi"),
-        )
-        .collect()
-    )
-    return [
-        {
-            "file": "/".join(r["file"].rsplit("/", 2)[-2:]) if r["file"] else "",
-            "rows": r["rows"],
-            "lsn_lo": r["lsn_lo"],
-            "lsn_hi": r["lsn_hi"],
-        }
-        for r in sorted(rows, key=lambda r: r["file"] or "")
-    ]
-
-
-def op_counts(deduped: DataFrame) -> dict:
-    """I/U/D counts of the winning (post-dedup) events in a slice.
-
-    Prefer :func:`observe_ops` — it collects the same counts for free on
-    the merge write; this standalone version costs a full extra
-    computation of the dedup (AQE compiles a separate physical plan per
-    action, so the dedup shuffle is NOT reused across actions)."""
-    rows = deduped.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {r["op"]: r["n"] for r in rows}
-
-
 def observed_or(obs, keys: tuple[str, ...], default: int = 0) -> dict:
     """Read an ``Observation``'s metrics, tolerating the empty-plan
     failure: on an empty input AQE propagates the empty relation and

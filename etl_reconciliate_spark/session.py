@@ -7,6 +7,7 @@ partition count (sized to cores instead of to data volume).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -49,3 +50,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def pinned_shuffle_partitions(spark: SparkSession, n: int | None):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` (default: the
+    session's current value) for the block, yielding the pinned count.
+
+    The runners' dedup exchange, merge join and read-time window all
+    size off the session conf, so an explicit partition count must be
+    set there to govern them. The prior value is restored on exit: a
+    runner may be embedded in a longer-lived session that must not
+    inherit this parallelism."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions", "32")
+    n = n or int(prior)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)

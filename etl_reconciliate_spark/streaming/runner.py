@@ -1,4 +1,4 @@
-"""CDC replay loop: tail → dedup → repartition → MERGE → metrics.
+"""CDC replay loop: tail → dedup → MERGE → metrics.
 
 The Spark-first replacement for the reference's four sequential Spring
 Batch tasklets (reference: config/BatchConfig.java:59-68). Structured
@@ -6,17 +6,18 @@ Streaming's file source can't give us LSN-bounded, resumable-by-offset
 slices over an evolving-schema table, so the loop is the standard
 "bounded micro-batch driven by our own offset store" pattern
 (functionally ``foreachBatch`` with a custom source): each iteration
-reads one (lo, hi] LSN slice, max-LSN-dedups it per key, repartitions by
-key, MERGEs into the target, and commits offsets atomically with the
-snapshot.
+reads one (lo, hi] LSN slice, max-LSN-dedups it per key, MERGEs into
+the target, and commits offsets atomically with the snapshot.
 
 Scale notes (the 100 TB story):
 * the slice read is pruned by the pushed lsn predicate — cost ∝ slice;
-* ONE shuffle per slice on the key covers both the dedup window and the
-  merge join probe side (same partitioning);
+* the dedup is a ``max_by`` hash aggregate: its map-side partial
+  combine collapses duplicate deliveries and multi-update keys BEFORE
+  the shuffle, and its exchange hash-partitions by the key (the merge's
+  partitioning) at the width of the pinned session shuffle partitions;
 * size ``n_partitions`` for constant rows-per-task (~0.5-1M rows), NOT
   as a fixed constant: the r3b bench study measured the reduce stage
-  (window sort + merge + write) at 3.2x the per-event CPU when task
+  (then a window sort + merge + write) at 3.2x the per-event CPU when task
   volume grew 637k → 2.55M rows (sort locality), with zero spill — at
   cluster scale let AQE's advisory partition size enforce this; and
   with a heavy shuffle codec (zstd level >= 8) pin the sort shuffle
@@ -26,10 +27,10 @@ Scale notes (the 100 TB story):
 * the target side of the merge is hash-clustered on the key at write
   time (bucket emulation) — with real Iceberg bucket partitioning +
   storage-partitioned joins that side never shuffles either;
-* merge is copy-on-write here (full rewrite per slice — fine for the
-  emulation); at 10^10 events the Iceberg backend flips to
-  merge-on-read (positional deletes) with periodic compaction, with no
-  change above this layer.
+* every job defaults to merge-on-read (``--target-mode mor``): one
+  delta file set per slice, periodic compaction, and readers resolve
+  base + deltas with a max-``_lsn`` window; the Iceberg backend maps
+  this to positional deletes, with no change above this layer.
 
 Kill/resume: stop after any slice (or kill -9 mid-merge) and re-invoke —
 the resume point is read from the last committed snapshot, and an
@@ -41,9 +42,9 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from etl_reconciliate_spark.operators.dedup import dedup_max_lsn, dedup_max_lsn_agg
+from etl_reconciliate_spark.operators.dedup import dedup_max_lsn_agg
 from etl_reconciliate_spark.plans.checkpoint import CheckpointManager
 from etl_reconciliate_spark.plans.metrics import (
     observe_count,
@@ -51,9 +52,32 @@ from etl_reconciliate_spark.plans.metrics import (
     observed_or,
     slice_lineage,
 )
-from etl_reconciliate_spark.schemas import KEY_COLS
+from etl_reconciliate_spark.session import pinned_shuffle_partitions
 from etl_reconciliate_spark.sources.changelog import ChangeLogSource
 from etl_reconciliate_spark.target.table import TargetTable
+
+
+def apply_slice(
+    table: TargetTable, raw: DataFrame, offsets: dict, count_ops: bool
+) -> tuple[dict, int, dict]:
+    """Dedup one raw change batch per key and MERGE it into ``table``.
+
+    The per-slice step shared by the bounded loop and the stream
+    runner's ``foreachBatch``. The input event count (and, with
+    ``count_ops``, the winners' I/U/D counts) ride along with the
+    merge's own write action via Observation, at no extra Spark job.
+    Returns ``(merge stats, events, ops)``."""
+    raw, obs_raw = observe_count(raw)
+    deduped = dedup_max_lsn_agg(raw)
+    obs = None
+    if count_ops:
+        deduped, obs = observe_ops(deduped)
+    stats = table.merge_apply(deduped, offsets)
+    # observed_or tolerates the empty-plan case where AQE eliminated
+    # the CollectMetrics nodes
+    n_events = observed_or(obs_raw, ("n",))["n"]
+    ops = observed_or(obs, ("I", "U", "D")) if obs is not None else {}
+    return stats, n_events, ops
 
 
 def replay(
@@ -67,29 +91,18 @@ def replay(
     expire_keep: int = 2,
     target_mode: str = "cow",
     compact_threshold: int = 8,
-    dedup_impl: str = "agg",
 ) -> dict:
     """Replay the change log into the target table; resumable.
 
     Returns run statistics: events applied, slices, wall seconds of the
     apply loop (excluding session startup), events/sec.
     """
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    n_partitions = n_partitions or int(prior_shuffle)
-    # the agg-dedup exchange (and any other induced shuffle) sizes off
-    # the session conf — pin it so an explicit n_partitions is honored
-    # by both dedup impls, not only the window path's repartition.
-    # Restored on exit: replay() may be embedded in a longer-lived
-    # session that must not inherit this parallelism (r4 advice).
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    try:
+    with pinned_shuffle_partitions(spark, n_partitions) as n_partitions:
         return _replay_loop(
             spark, changelog_path, target_path, slice_size, n_partitions,
             max_slices, collect_lineage, expire_keep, target_mode,
-            compact_threshold, dedup_impl,
+            compact_threshold,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def _replay_loop(
@@ -103,7 +116,6 @@ def _replay_loop(
     expire_keep: int,
     target_mode: str,
     compact_threshold: int,
-    dedup_impl: str,
 ) -> dict:
     from pyspark.sql import types as T
 
@@ -156,33 +168,14 @@ def _replay_loop(
             )
             continue
         trailing_gap_hi = -1
-        raw = source.read_slice(lo, hi)
         # Per-file lineage comes from the footer index (driver-side
-        # metadata, built once at open); the exact event count and the
-        # I/U/D counters ride along with the merge's own write action
-        # via Observation. Net: exactly ONE Spark job per slice.
+        # metadata, built once at open); the event and op counts ride
+        # along with the merge's write (apply_slice).
         lineage = overlap if collect_lineage else []
-        raw, obs_raw = observe_count(raw)
-        if dedup_impl == "agg":
-            # max_by aggregate: map-side partial combine collapses
-            # duplicates pre-shuffle; its exchange hash-partitions by the
-            # merge keys, so no explicit repartition node is needed — but
-            # the exchange's width comes from the SESSION shuffle
-            # partitions, which replay() pins to n_partitions below so
-            # the --partitions knob governs this (the heaviest) stage in
-            # BOTH dedup impls.
-            deduped = dedup_max_lsn_agg(raw)
-        else:
-            deduped = dedup_max_lsn(raw.repartition(n_partitions, *KEY_COLS))
-        obs = None
-        if collect_lineage:
-            deduped, obs = observe_ops(deduped)
-        stats = table.merge_apply(deduped, ckpt.offsets_for(hi, lineage))
-        # observed_or tolerates the (now rare — the footer-index gap
-        # skip above catches provable emptiness first) empty-plan case
-        # where AQE eliminated the CollectMetrics nodes
-        n_events = observed_or(obs_raw, ("n",))["n"]
-        ops = observed_or(obs, ("I", "U", "D")) if obs is not None else {}
+        stats, n_events, ops = apply_slice(
+            table, source.read_slice(lo, hi), ckpt.offsets_for(hi, lineage),
+            count_ops=collect_lineage,
+        )
         events += n_events
         ckpt.append_manifest(
             {

@@ -5,8 +5,8 @@ slices from the engine's own offset store — that is what gives
 schema-per-epoch reads and LSN-aligned commits. This module is the
 same pipeline on Spark's native streaming engine for deployments that
 want it: ``readStream`` file source over the change-log directory →
-``foreachBatch`` (max-LSN dedup → key repartition → MERGE apply) →
-Spark's checkpointLocation for source offsets.
+``foreachBatch`` (the bounded loop's per-slice step: max-LSN dedup →
+MERGE apply) → Spark's checkpointLocation for source offsets.
 
 Correctness under arbitrary file-discovery order: each micro-batch is
 deduped per key (max LSN within the batch) and ``merge_apply`` keeps a
@@ -32,8 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
-from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA, KEY_COLS
+from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA
+from etl_reconciliate_spark.session import pinned_shuffle_partitions
+from etl_reconciliate_spark.streaming.runner import apply_slice
 from etl_reconciliate_spark.target.table import TargetTable
 
 
@@ -70,21 +71,12 @@ def replay_stream(
     timestamp to push them through it either contaminates the
     watermark (wall-clock) or goes late itself (a constant) — see the
     inline note at the dedup stage."""
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    n_partitions = n_partitions or int(prior_shuffle)
-    # pin the session shuffle width so --partitions governs the merge
-    # join and the mor read-time window too, not only the explicit
-    # repartition (r5 review — same pin/restore replay() has); restored
-    # on exit for embedding sessions
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    try:
+    with pinned_shuffle_partitions(spark, n_partitions) as n_partitions:
         return _replay_stream_impl(
             spark, changelog_path, target_path, checkpoint_dir,
             n_partitions, max_files_per_trigger, target_mode,
             compact_threshold, dedup_within_watermark, changelog_format,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def _replay_stream_impl(
@@ -99,7 +91,7 @@ def _replay_stream_impl(
     dedup_within_watermark: str | None,
     changelog_format: str,
 ) -> dict:
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     # ordered_commits=False: the file source discovers files in mtime
@@ -177,20 +169,17 @@ def _replay_stream_impl(
         # stage makes Spark run a trailing empty batch after the
         # watermark advances, and a checkpoint-restart can replay an
         # empty batch with dedup off — in both cases committing an empty
-        # version is wasted work, and on an EMPTY plan AQE eliminates
-        # the CollectMetrics node so the unguarded `obs.get` below would
-        # crash the stream (same failure the compaction path hit).
+        # version is wasted work.
         if batch_df.isEmpty():
             return
-        obs = Observation()
-        batch_df = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
-        deduped = dedup_max_lsn(batch_df.repartition(n_partitions, *KEY_COLS))
-        stats = table.merge_apply(deduped, {"stream_batch_id": batch_id})
+        stats, n_events, _ops = apply_slice(
+            table, batch_df, {"stream_batch_id": batch_id}, count_ops=False
+        )
         batches.append(
             {
                 "batch_id": batch_id,
                 "version": stats["version"],
-                "input_rows": int(obs.get["n"] or 0),
+                "input_rows": n_events,
             }
         )
 

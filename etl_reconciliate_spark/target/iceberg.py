@@ -92,7 +92,6 @@ class IcebergTargetTable:
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
-        keys = ", ".join(KEY_COLS)
         # bucket partitioning on the merge key: storage-partitioned joins
         # make the MERGE's target side shuffle-free.
         self.spark.sql(
@@ -108,7 +107,6 @@ class IcebergTargetTable:
             f"CREATE TABLE IF NOT EXISTS {_q(self.offsets_name)} "
             f"(lsn_hi BIGINT, committed_at TIMESTAMP) USING iceberg"
         )
-        _ = keys
 
     # ------------------------------------------------------------- merge
     def merge_apply(self, batch: DataFrame, offsets: dict) -> dict:

@@ -32,6 +32,7 @@ emulation approximates this by hash-clustering data files on the key.
 from __future__ import annotations
 
 import errno
+import functools
 import glob
 import json
 import os
@@ -44,8 +45,9 @@ try:  # POSIX advisory locks back the commit protocol; absent (non-POSIX
 except ImportError:  # grace-period heuristic it used before r5.
     fcntl = None
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
 from etl_reconciliate_spark.schemas import KEY_COLS, META_LSN
 
 META_DELETED = "_deleted"
@@ -121,6 +123,34 @@ def _conform(df: DataFrame, want: T.StructType) -> DataFrame:
         if f_.name not in have:
             cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
     return df.select(cols)
+
+
+def _with_meta(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the stored meta columns (``_lsn``, ``_deleted``)."""
+    return T.StructType(
+        list(schema.fields)
+        + [
+            T.StructField(META_LSN, T.LongType(), True),
+            T.StructField(META_DELETED, T.BooleanType(), True),
+        ]
+    )
+
+
+def _winners(parts: list[DataFrame]) -> DataFrame:
+    """Union data dirs padded to one schema and keep each key's
+    max-``_lsn`` row — base + delta resolution."""
+    return dedup_max_lsn(
+        functools.reduce(DataFrame.unionByName, parts), order=(META_LSN,)
+    )
+
+
+def _visible(df: DataFrame, want: T.StructType, include_meta: bool) -> DataFrame:
+    """``want``'s columns of resolved rows: live rows only, or every row
+    with the meta columns when ``include_meta``."""
+    cols = [f_.name for f_ in want.fields]
+    if include_meta:
+        return df.select(cols + META_COLS)
+    return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(cols)
 
 
 class CommitConflictError(RuntimeError):
@@ -320,17 +350,9 @@ class TargetTable:
     def init(self, schema: T.StructType, offsets: dict | None = None) -> None:
         """Create version 0: an empty snapshot."""
         os.makedirs(self.path, exist_ok=True)
-        full = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(META_LSN, T.LongType(), True),
-                T.StructField(META_DELETED, T.BooleanType(), True),
-            ]
-        )
         data_dir = f"snap-{0:06d}"
-        self.spark.createDataFrame([], schema=full).write.mode("overwrite").parquet(
-            os.path.join(self.path, data_dir)
-        )
+        empty = self.spark.createDataFrame([], schema=_with_meta(schema))
+        empty.write.mode("overwrite").parquet(os.path.join(self.path, data_dir))
         self._commit(
             0, schema, data_dir, offsets or {}, row_count=0, parent=None,
             mode=self._init_mode, deltas=[],
@@ -357,22 +379,13 @@ class TargetTable:
         # the PINNED version's schema — time-travel must not show columns
         # added after that snapshot (round-1 verdict item 7)
         want = T.StructType.fromJson(meta["schema"])
-        df = self._read_padded(meta["data_dir"], want)
-        deltas = meta.get("deltas", [])
-        if deltas:
-            for d in deltas:
-                df = df.unionByName(self._read_padded(d, want))
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if include_meta:
-            return df.select([f_.name for f_ in want.fields] + META_COLS)
-        return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(
-            [f_.name for f_ in want.fields]
-        )
+        parts = [
+            self._read_padded(d, want)
+            for d in [meta["data_dir"], *meta.get("deltas", [])]
+        ]
+        # a lone base dir already holds one row per key
+        df = _winners(parts) if len(parts) > 1 else parts[0]
+        return _visible(df, want, include_meta)
 
     def read_keys(
         self,
@@ -450,32 +463,11 @@ class TargetTable:
             + [_read_pruned(d) for d in meta.get("deltas", [])]
             if p is not None
         ]
-        if not parts:
-            df = self.spark.createDataFrame(
-                [],
-                schema=T.StructType(
-                    list(want.fields)
-                    + [
-                        T.StructField(META_LSN, T.LongType(), True),
-                        T.StructField(META_DELETED, T.BooleanType(), True),
-                    ]
-                ),
-            )
+        if parts:
+            df = _winners(parts)
         else:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if include_meta:
-            return df.select([f_.name for f_ in want.fields] + META_COLS)
-        return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(
-            [f_.name for f_ in want.fields]
-        )
+            df = self.spark.createDataFrame([], schema=_with_meta(want))
+        return _visible(df, want, include_meta)
 
     CHANGE_TYPE = "_change_type"
 
@@ -578,15 +570,7 @@ class TargetTable:
         if new_deltas is not None:
             if not new_deltas:
                 return self.read_changes(from_version, from_version)
-            delta = self._read_padded(new_deltas[0], want)
-            for d in new_deltas[1:]:
-                delta = delta.unionByName(self._read_padded(d, want))
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            winner = (
-                delta.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            winner = _winners([self._read_padded(d, want) for d in new_deltas])
             prior = _pad_to_want(
                 self.read(include_meta=True, version=from_version)
             )

@@ -72,7 +72,7 @@ def main() -> int:
     spark = SparkSession.builder.appName("cdc_reconcile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
+    from etl_reconciliate_spark.operators.dedup import dedup_max_lsn_agg
     from etl_reconciliate_spark.operators.reconcile import (
         reconcile,
         rollup_conversations,
@@ -84,7 +84,9 @@ def main() -> int:
     if args.source_kind == "changelog":
         src_log = ChangeLogSource(spark, args.source)
         full = src_log.read_slice(-1, src_log.max_lsn())
-        source = dedup_max_lsn(full).filter(F.col("op") != "D").drop("lsn", "op")
+        source = (
+            dedup_max_lsn_agg(full).filter(F.col("op") != "D").drop("lsn", "op")
+        )
     else:
         source = spark.read.parquet(args.source)
 

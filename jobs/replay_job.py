@@ -43,8 +43,6 @@ def main() -> int:
                          "(rewrite per slice)")
     ap.add_argument("--compact-every", type=int, default=8,
                     help="mor: fold deltas into the base every N commits")
-    ap.add_argument("--dedup-impl", choices=["window", "agg"], default="agg",
-                    help="max-LSN dedup: sort window or max_by aggregate")
     ap.add_argument("--expire-keep", type=int, default=2,
                     help="keep the newest N snapshots after each slice "
                          "(0 disables expiry). Raise this — or disable — "
@@ -83,7 +81,6 @@ def main() -> int:
         collect_lineage=not args.no_lineage,
         target_mode=args.target_mode,
         compact_threshold=args.compact_every,
-        dedup_impl=args.dedup_impl,
         max_slices=args.max_slices,
         expire_keep=args.expire_keep,
     )

@@ -48,15 +48,17 @@ def assert_matches_oracle(spark, target_path, changelog_df):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
+TIE_ROWS = [
+    (10, "I", "c1", 0, "user", "a", None, None),
+    (12, "U", "c1", 0, "user", "b", None, None),
+    (12, "U", "c1", 0, "user", "b", None, None),  # duplicate delivery
+    (11, "U", "c1", 0, "user", "stale", None, None),
+    (5, "I", "c2", 3, "user", "z", None, None),
+]
+
+
 def test_dedup_max_lsn(spark):
-    rows = [
-        (10, "I", "c1", 0, "user", "a", None, None),
-        (12, "U", "c1", 0, "user", "b", None, None),
-        (12, "U", "c1", 0, "user", "b", None, None),  # duplicate delivery
-        (11, "U", "c1", 0, "user", "stale", None, None),
-        (5, "I", "c2", 3, "user", "z", None, None),
-    ]
-    df = spark.createDataFrame(rows, schema=CHANGELOG_SCHEMA)
+    df = spark.createDataFrame(TIE_ROWS, schema=CHANGELOG_SCHEMA)
     out = dedup_max_lsn(df).orderBy("conv_id").collect()
     assert len(out) == 2
     assert out[0]["text"] == "b" and out[0]["lsn"] == 12
@@ -147,11 +149,14 @@ def test_lineage_manifest(spark, changelog_path, changelog_df, tmp_path):
 
 def test_dedup_agg_equals_window(spark, changelog_df):
     """The hash-aggregate (max_by) dedup must produce exactly the window
-    dedup's rows — same winners, same tie-breaks — since the runner uses
-    it by default for the pre-shuffle partial-combine win."""
+    dedup's rows — same winners, same (lsn, op) tie-breaks — since replay,
+    the stream runner and the recon change-log fold all dedup with it.
+    The input includes the equal-LSN duplicate deliveries of TIE_ROWS."""
     from etl_reconciliate_spark.operators.dedup import dedup_max_lsn_agg
 
-    df = spark.createDataFrame(changelog_df, schema=CHANGELOG_SCHEMA)
+    df = spark.createDataFrame(changelog_df, schema=CHANGELOG_SCHEMA).unionByName(
+        spark.createDataFrame(TIE_ROWS, schema=CHANGELOG_SCHEMA)
+    )
     a = (
         dedup_max_lsn(df)
         .orderBy("conv_id", "turn_idx")
@@ -166,6 +171,35 @@ def test_dedup_agg_equals_window(spark, changelog_df):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_reconcile_job_changelog_source(
+    spark, changelog_df, changelog_path, tmp_path, capsys, monkeypatch
+):
+    """reconcile_job --source-kind changelog folds the log (max_by dedup,
+    deletes dropped) and must find a target replayed from the same log
+    all-MATCH, one row per live key of the pandas fold."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    try:
+        import reconcile_job
+    finally:
+        sys.path.pop(0)
+
+    tgt = str(tmp_path / "target")
+    replay(spark, changelog_path, tgt, slice_size=6000, target_mode="mor")
+    monkeypatch.setattr(sys, "argv", [
+        "reconcile_job.py", "--source", changelog_path,
+        "--source-kind", "changelog", "--target", tgt,
+    ])
+    assert reconcile_job.main() == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    n_live = len(fold_changelog(changelog_df))
+    assert got["status_counts"] == {"MATCH": n_live}
+    assert got["total"] == n_live
 
 
 def test_replay_with_empty_slices(spark, tmp_path):
