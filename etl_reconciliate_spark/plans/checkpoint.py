@@ -5,9 +5,9 @@ The reference tracks restart state in the Spring Batch job repository
 READ_COUNT/WRITE_COUNT counters + serialized execution contexts). Our
 engine replaces that with per-partition LSN offsets embedded directly in
 the target table's snapshot metadata (``TargetTable._commit``): because
-offsets and data are one JSON written behind one atomic pointer swap,
-there is no window where data is applied but offsets are not (or vice
-versa) — that's the whole exactly-once argument, plus row-level
+offsets and data are one JSON published by one atomic put-if-absent
+link of the version file, there is no window where data is applied but
+offsets are not (or vice versa) — that's the whole exactly-once argument, plus row-level
 newer-LSN-wins for overlapping replays (see ``target.table``).
 
 This module is the thin view over those embedded offsets: resume point,

@@ -34,11 +34,10 @@ _MIN_LITTER_AGE_SECS = 60.0
 
 
 def _flock_probe(fd: int, shared: bool = False) -> str:
-    """Non-blocking flock on ``fd`` — the writer-liveness probe (the
-    ``table._try_flock`` return contract plus a shared mode, duplicated
-    so this module stays importable without pyspark): ``"acquired"``
-    (lock now held by us until the fd closes), ``"held"`` (a live
-    process owns it), ``"unsupported"`` (no advisory locks here).
+    """Non-blocking flock on ``fd`` — the build-claim writer-liveness
+    probe: ``"acquired"`` (lock now held by us until the fd closes),
+    ``"held"`` (a live process owns it), ``"unsupported"`` (no advisory
+    locks here).
 
     ``shared=True`` probes with ``LOCK_SH``: it still conflicts with a
     writer's ``LOCK_EX`` (correctly reporting "held") but NOT with

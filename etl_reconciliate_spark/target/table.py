@@ -2,16 +2,18 @@
 
 No ``iceberg-spark-runtime`` jar ships offline with PySpark 4.1.2 (SURVEY
 §7.4), so the engine's sink is a small table abstraction with
-Iceberg-equivalent semantics implemented over parquet snapshots + JSON
-metadata + an atomically-swapped pointer file:
+Iceberg-equivalent semantics implemented over parquet snapshots + one
+JSON metadata file per version:
 
 * **snapshot isolation** — every MERGE writes a brand-new data directory
-  and metadata file; readers only ever see the version named by
-  ``_current``;
-* **atomic commit** — ``os.replace`` of the pointer file is the single
-  commit point; checkpoint offsets are embedded IN the snapshot
-  metadata, so offsets and data commit together (exactly-once without a
-  separate transaction coordinator — SURVEY §7.3);
+  and metadata file; the current version is the highest published
+  ``v{n:06d}.json``, and readers only ever see a fully written one;
+* **atomic commit** — ``os.link`` of the finished metadata file into its
+  version slot is the single commit point (put-if-absent, the Delta Lake
+  / Iceberg Hadoop-table log store); checkpoint offsets are embedded IN
+  the snapshot metadata, so offsets and data commit together
+  (exactly-once without a separate transaction coordinator — SURVEY
+  §7.3);
 * **schema evolution** — each snapshot records its schema; columns
   present in an incoming batch but absent from the table are appended
   (add-column), and old snapshots read with nulls for them;
@@ -31,7 +33,6 @@ emulation approximates this by hash-clustering data files on the key.
 
 from __future__ import annotations
 
-import errno
 import functools
 import glob
 import json
@@ -39,11 +40,6 @@ import os
 import shutil
 import time
 import uuid
-
-try:  # POSIX advisory locks back the commit protocol; absent (non-POSIX
-    import fcntl  # or exotic FS) the protocol falls back to the
-except ImportError:  # grace-period heuristic it used before r5.
-    fcntl = None
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -154,42 +150,12 @@ def _visible(df: DataFrame, want: T.StructType, include_meta: bool) -> DataFrame
 
 
 class CommitConflictError(RuntimeError):
-    """Another writer committed (or is committing) the same version.
+    """Another writer already committed the same version, or this
+    writer's base snapshot was stale.
 
     The caller's view of the table is stale: re-read metadata, recompute
     the merge/compaction from the fresh state, and retry — exactly
     Iceberg's optimistic-concurrency contract."""
-
-
-def _try_flock(fd: int) -> str:
-    """Non-blocking exclusive ``flock`` on ``fd``; the commit protocol's
-    writer-liveness probe.
-
-    Returns ``"acquired"`` (we own the lock until the fd closes — the
-    kernel also releases it if this process dies, which is what makes
-    crashed-writer takeover safe without trusting mtimes alone),
-    ``"held"`` (a live process owns it), or ``"unsupported"`` (no
-    ``fcntl`` on this platform, or the filesystem refuses advisory
-    locks — callers fall back to the grace-period heuristic)."""
-    if fcntl is None:
-        return "unsupported"
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        return "acquired"
-    except OSError as e:
-        if e.errno in (errno.EACCES, errno.EAGAIN, errno.EWOULDBLOCK):
-            return "held"
-        return "unsupported"
-
-
-def _claim_is_current(claim_fd: int, mp: str) -> bool:
-    """True iff ``claim_fd``'s inode is still what ``mp`` names — i.e.
-    the claimed file has not been replaced (another writer's publish)
-    or removed out from under its holder. False on any stat failure."""
-    try:
-        return os.fstat(claim_fd).st_ino == os.stat(mp).st_ino
-    except OSError:
-        return False
 
 
 class TargetTable:
@@ -225,19 +191,14 @@ class TargetTable:
       (they only leave the table via ``expire_snapshots`` of pre-delete
       history, never silently).
 
-    Writers use optimistic concurrency: the version slot is claimed by
-    exclusive creation of the metadata file and OWNED via a kernel
-    advisory lock (flock) held from claim through pointer swap; a
-    concurrent second writer gets :class:`CommitConflictError` and must
-    recompute from fresh metadata (Iceberg-style CAS). A slot older
-    than ``claim_grace_secs`` whose version was never published
-    (pointer still behind) AND whose lock is free is a dead
-    half-commit from a crashed writer (the kernel released its lock at
-    death) and is taken over; a LIVE writer — however stalled — keeps
-    its lock and is never taken over. On filesystems without advisory
-    locks the protocol degrades to the mtime-grace heuristic alone,
-    where a live writer stalled past the grace period CAN be taken
-    over (the pre-lock behavior).
+    Writers use optimistic concurrency: a commit publishes version
+    ``n`` by hard-linking its finished metadata file into the empty slot
+    ``v{n:06d}.json``. A second writer for the same slot gets
+    :class:`CommitConflictError` and must recompute from fresh metadata
+    (Iceberg-style CAS). A crashed writer leaves only a temp file, which
+    ``expire_snapshots`` reaps once it is older than
+    ``orphan_grace_secs``; it never holds a slot, so nothing has to be
+    taken over.
     """
 
     def __init__(
@@ -248,7 +209,6 @@ class TargetTable:
         mode: str = "cow",
         compact_threshold: int = 8,
         ordered_commits: bool = True,
-        claim_grace_secs: float = 60.0,
         orphan_grace_secs: float = 600.0,
     ):
         self.spark = spark
@@ -259,7 +219,6 @@ class TargetTable:
         self.compact_threshold = compact_threshold
         self._ordered_commits_arg = ordered_commits
         self._ordered_commits_cache: bool | None = None
-        self.claim_grace_secs = claim_grace_secs
         self.orphan_grace_secs = orphan_grace_secs
 
     def mode(self) -> str:
@@ -308,16 +267,27 @@ class TargetTable:
         return self._n_buckets_arg
 
     # ------------------------------------------------------------ state
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_current")
+    def versions(self) -> list[int]:
+        """Published versions, ascending: every ``v{n:06d}.json`` in the
+        table dir (a commit's in-flight ``*.tmp`` is not a version)."""
+        try:
+            names = os.listdir(self.path)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[1:-5]) for n in names
+            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
+        )
 
     def exists(self) -> bool:
-        return os.path.exists(self._pointer)
+        return bool(self.versions())
 
     def current_version(self) -> int:
-        with open(self._pointer) as f:
-            return int(f.read().strip())
+        """The highest published version (one directory listing)."""
+        vs = self.versions()
+        if not vs:
+            raise FileNotFoundError(f"no committed version under {self.path}")
+        return vs[-1]
 
     def _meta_path(self, version: int) -> str:
         return os.path.join(self.path, f"v{version:06d}.json")
@@ -326,17 +296,7 @@ class TargetTable:
         if version is None:
             version = self.current_version()
         with open(self._meta_path(version)) as f:
-            body = f.read()
-        if not body.strip():
-            # an EMPTY vNNNNNN.json is a concurrent writer's O_EXCL
-            # claim placeholder (see _commit), not published metadata —
-            # surface it as not-found so readers/expire treat the
-            # version as nonexistent instead of dying on JSON parse
-            raise FileNotFoundError(
-                f"version {version} of {self.path} is claimed but not "
-                f"yet published"
-            )
-        return json.loads(body)
+            return json.load(f)
 
     def schema(self) -> T.StructType:
         """Current user-facing schema (no metadata columns)."""
@@ -647,13 +607,13 @@ class TargetTable:
         commit conflicts.
 
         A :class:`CommitConflictError` means a concurrent writer
-        published (or claimed) our version slot; each retry recomputes
+        published our version slot first; each retry recomputes
         from fresh table state (new version, evolved schema, their
         committed rows visible), so the merge lands correctly ON TOP of
         the racing commit — the batch itself is deterministic input and
         the merge idempotent, making blind retry safe. After ``retries``
-        failed attempts (a LIVE writer squatting the slot, e.g. a
-        stuck claim that is not yet stale) the conflict propagates.
+        failed attempts (writers that keep winning the race for the
+        next slot) the conflict propagates.
         See :meth:`_merge_apply_once` for the merge semantics.
         """
         for attempt in range(retries + 1):
@@ -729,7 +689,7 @@ class TargetTable:
         # committed between our state read and our slot computation
         # would be silently overwritten instead of conflicting. With
         # the slot pinned to the SNAPSHOT WE READ, any racing commit
-        # takes our slot first and the O_EXCL claim raises
+        # takes our slot first and our link raises
         # CommitConflictError -> merge_apply retries from fresh state.
         base_meta = self.metadata()
         cur_schema = T.StructType.fromJson(base_meta["schema"])
@@ -999,27 +959,6 @@ class TargetTable:
         return rc
 
     # ----------------------------------------------------------- commit
-    def _conflict_if_published(
-        self, version: int, cleanup: str | None = None, what: str = ""
-    ) -> None:
-        """Raise :class:`CommitConflictError` if the pointer already
-        names ``version`` or newer, removing ``cleanup`` first.
-
-        The shared check-then-act guard of the commit protocol: under
-        flock ownership it is defense-in-depth; under the no-flock
-        fallback it is the only protection (narrowed, not closed —
-        plain files offer no atomic compare-and-swap)."""
-        if self.exists() and self.current_version() >= version:
-            if cleanup is not None:
-                try:
-                    os.remove(cleanup)
-                except OSError:
-                    pass
-            raise CommitConflictError(
-                f"version {version} of {self.path} {what}; re-read "
-                f"metadata and retry"
-            )
-
     def _commit(
         self,
         version: int,
@@ -1031,6 +970,26 @@ class TargetTable:
         mode: str = "cow",
         deltas: list[str] | None = None,
     ) -> None:
+        """Publish version ``version`` or raise :class:`CommitConflictError`.
+
+        Put-if-absent: the complete metadata is written to a unique temp
+        file and hard-linked into the slot ``v{version:06d}.json``.
+        ``os.link`` is atomic and fails if the slot exists, so the link
+        IS the commit point — a reader sees either no file or a finished
+        one, and of two writers for one slot exactly one wins. On an
+        object store the same contract is a conditional PUT
+        (``If-None-Match: *``). A filesystem without hard links makes
+        ``os.link`` raise a non-``FileExistsError`` ``OSError``, which
+        propagates: the commit fails loudly rather than degrading.
+
+        A slot can be empty because ``expire_snapshots`` freed it after
+        newer versions were published. A writer whose base is that old
+        links into it successfully, so after the link it checks for a
+        higher version; if one exists it removes its own link and
+        conflicts as stale, and ``current_version()`` never rewinds.
+        (A fresh commit that a racing writer builds on within that
+        link-then-list window conflicts too; the newer version already
+        carries its rows, and the idempotent retry re-applies them.)"""
         meta = {
             "version": version,
             "schema": schema.jsonValue(),
@@ -1049,287 +1008,47 @@ class TargetTable:
             "ordered_commits": self.ordered_commits,
         }
         mp = self._meta_path(version)
-        # Optimistic concurrency (Iceberg-style CAS): claim the version
-        # slot by exclusive creation, then hold a kernel advisory lock
-        # (flock) on it from claim through pointer swap. The LOCK is the
-        # liveness signal the mtime heuristic alone could not give: a
-        # writer killed mid-commit releases it instantly, while an
-        # alive-but-stalled writer KEEPS it — so a stale-looking claim
-        # whose owner is still running can no longer be taken over and
-        # later clobbered by the owner's resume (r5 final review: the
-        # check-then-act ``>=`` guards below are not atomic; only the
-        # lock closes that window). If the slot exists, either (a) that
-        # version is already published (pointer >= version) or its
-        # owner is provably live (lock held) or plausibly live (claim
-        # younger than the grace period — covers the claimant's
-        # create-to-flock window and lock-less filesystems) → conflict,
-        # caller must recompute from fresh metadata; or (b) the claim
-        # is stale, unlocked and unpublished — a crashed writer's
-        # half-commit that nothing references → take it over (this is
-        # what makes kill -9/resume work even when the kill lands
-        # between claim and publish). Where flock is unavailable the
-        # protocol degrades to the pre-r5 grace heuristic and the
-        # ``>=`` guards are the only — narrowed, not closed — defense.
-        claim_fd = None
-        meta_fd = None
+        tmp = f"{mp}.{uuid.uuid4().hex}.tmp"
         try:
-            fresh = True
-            lock = "unsupported"
-            try:
-                claim_fd = os.open(mp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                if hasattr(os, "fchmod"):  # absent on Windows < 3.13
-                    try:
-                        # world-readable regardless of umask: another
-                        # user's writer must be able to open+flock this
-                        # claim for the liveness probe — a 0o700 claim
-                        # (umask 0o077) would push cross-user writers
-                        # onto the lock-less EACCES degrade below, which
-                        # can take over a LIVE stalled owner (review
-                        # round 4)
-                        os.fchmod(claim_fd, 0o644)
-                    except OSError:
-                        pass
-            except FileExistsError:
-                fresh = False
-                try:
-                    # O_RDONLY, not O_RDWR: flock needs no write access,
-                    # and another user's 0644 claim in a shared table
-                    # dir would make O_RDWR raise EACCES (review of
-                    # this commit)
-                    claim_fd = os.open(mp, os.O_RDONLY)
-                except FileNotFoundError:
-                    # the slot vanished between O_EXCL and this open
-                    # (concurrent expire_snapshots, or a loser cleaning
-                    # up) — the table is moving under us
-                    raise CommitConflictError(
-                        f"version {version} of {self.path} is contended; "
-                        f"re-read metadata and retry"
-                    ) from None
-                except PermissionError:
-                    # another user's UNREADABLE claim (umask 0o077 makes
-                    # O_EXCL create 0o700): the flock liveness probe is
-                    # unavailable, but the mtime heuristic below needs
-                    # only directory access. Degrade to the pre-lock
-                    # protocol for this slot rather than conflicting
-                    # forever on a dead owner's claim (review of this
-                    # commit — mapping EACCES to a conflict made such a
-                    # slot permanently un-takeover-able).
-                    claim_fd = None
-            if claim_fd is not None:
-                lock = _try_flock(claim_fd)
-            if lock == "held" and fresh:
-                # we CREATED this claim, so the only possible holder is
-                # a prober that flocked it inside our create-to-flock
-                # window (a takeover needs the claim to be older than
-                # the grace period); it will see age < grace, conflict,
-                # and release. Wait it out briefly instead of
-                # conflicting — otherwise the slot is left
-                # claimed-but-ownerless and poisons BOTH writers for
-                # claim_grace_secs (review of this commit; the O_EXCL
-                # winner must keep its pre-lock always-proceeds
-                # property).
-                deadline = time.monotonic() + 1.0
-                while lock == "held" and time.monotonic() < deadline:
-                    time.sleep(0.02)
-                    lock = _try_flock(claim_fd)
-            if lock == "held":
-                if fresh:
-                    # the holder outlasted the wait. If the claim is
-                    # still YOUNGER than the grace period no takeover
-                    # can have passed the age gate, so the holder can
-                    # only be a stuck prober that will never publish —
-                    # remove our own claim so the slot doesn't sit
-                    # claimed-but-ownerless for the rest of the grace
-                    # period (review of this commit). If it is already
-                    # older (we stalled past grace before flocking), the
-                    # holder may be a legitimate takeover writer
-                    # mid-publish — leave the slot alone. BOTH gates are
-                    # checked against the inode WE created (review round
-                    # 4): after a taker's os.replace, mp's mtime is the
-                    # fresh PUBLISH time — young alone would then remove
-                    # the taker's published metadata. Same-inode ∧ young
-                    # means the mtime is our creation time, so no taker
-                    # can have passed the age gate, and none can be
-                    # mid-replace. Residual (review round 5, accepted):
-                    # the inode is re-checked immediately before the
-                    # unlink, but stat→unlink is still two syscalls — a
-                    # stall between them that ALSO outlasts the
-                    # remaining grace, combined with a lock-less taker,
-                    # could remove a publish; plain files offer no
-                    # unlink-if-inode-matches to close that.
-                    try:
-                        st = os.stat(mp)
-                        ours = os.fstat(claim_fd).st_ino == st.st_ino
-                        young = (
-                            time.time() - st.st_mtime
-                        ) < self.claim_grace_secs
-                    except OSError:
-                        ours = young = False
-                    if ours and young and _claim_is_current(claim_fd, mp):
-                        try:
-                            os.remove(mp)
-                        except OSError:
-                            pass
-                # a LIVE writer owns this slot: never take over a
-                # living writer — conflicting here (even past the grace
-                # period) is what makes the stalled-writer clobber
-                # unreachable.
-                raise CommitConflictError(
-                    f"version {version} of {self.path} is being committed "
-                    f"by a live writer; re-read metadata and retry"
-                )
-            if claim_fd is not None:
-                # Revalidate that the claimed fd's inode is still the
-                # slot path — in BOTH branches. Prober side: the claim
-                # we opened may have been replaced or removed while we
-                # raced here, leaving our lock on an ORPHANED inode
-                # while another writer holds the CURRENT one — two
-                # simultaneous "owners" and the clobber race returns.
-                # Creator side: a creator that stalled past the grace
-                # period between O_EXCL and flock can resume AFTER a
-                # takeover writer republished the path; without this
-                # check the expired-slot cleanup below would os.remove
-                # the taker's PUBLISHED v{version}.json that _current
-                # references — destroying an acknowledged commit
-                # (review of this commit).
-                if not _claim_is_current(claim_fd, mp):
-                    raise CommitConflictError(
-                        f"version {version} of {self.path} slot changed "
-                        f"under its claim; re-read metadata and retry"
-                    )
-            if fresh:
-                # the O_EXCL claim can SUCCEED on a slot whose published
-                # metadata expire_snapshots already deleted — a stale
-                # writer (base read minutes ago, table since advanced
-                # past `version` and expired it) would otherwise proceed
-                # and REWIND the pointer, silently discarding every newer
-                # commit (r5 review). The pointer is the commit truth,
-                # not the slot file: re-check it after claiming. No
-                # cleanup of mp here (review round 4): between the inode
-                # revalidation above and a remove, a lock-less
-                # (EACCES-degraded or no-flock-FS) taker could republish
-                # mp — removing would destroy its acknowledged metadata.
-                # The cost of NOT removing is one inert empty claim file
-                # at a below-pointer version nobody will ever target
-                # again (version numbers are monotone; ``versions()``
-                # skips empty files).
-                self._conflict_if_published(
-                    version,
-                    what="was already published and expired; this "
-                         "writer's base snapshot is stale",
-                )
-            else:
-                self._conflict_if_published(
-                    version, what="was committed by another writer"
-                )
-                try:
-                    age = time.time() - os.path.getmtime(mp)
-                except OSError:
-                    # the claim vanished under us (a loser's cleanup or
-                    # concurrent expire) — retryable, not a crash
-                    # (review of this commit: getmtime on a removed
-                    # claim raised FileNotFoundError out of the
-                    # protocol)
-                    raise CommitConflictError(
-                        f"version {version} of {self.path} is contended; "
-                        f"re-read metadata and retry"
-                    ) from None
-                if age < self.claim_grace_secs:
-                    raise CommitConflictError(
-                        f"version {version} of {self.path} is being "
-                        f"committed by another writer; re-read metadata "
-                        f"and retry"
-                    )
-                # else: stale, unlocked, unpublished → orphaned claim of
-                # a crashed writer; we now hold its lock → take it over
-            # UNIQUE temp names: under the no-flock fallback two writers
-            # can both proceed, and a SHARED .tmp path would let one
-            # truncate the inode the other is mid-write on — torn JSON
-            # published by os.replace (r4 core review)
-            tmp = f"{mp}.{uuid.uuid4().hex[:8]}.tmp"
             with open(tmp, "w") as f:
                 json.dump(meta, f, indent=1, sort_keys=True)
-            # Lock the inode that is ABOUT to become v{version}.json:
-            # os.replace swaps mp to this new inode and the claim lock
-            # stays on the OLD one, so without this a takeover attempt
-            # arriving between our metadata replace and pointer swap
-            # would flock the new inode, succeed, and proceed against a
-            # slot whose owner is still mid-publish.
-            meta_fd = os.open(tmp, os.O_RDWR)
-            _try_flock(meta_fd)
-            # Re-check BEFORE replacing the metadata file: under the
-            # no-flock fallback a writer stalled past claim_grace_secs
-            # may have had its slot taken over AND fully published by
-            # another writer — replacing that winner's v{version}.json
-            # with ours would silently drop its acknowledged deltas even
-            # though we then lose the pointer race (r5 final review; the
-            # post-replace `>` check missed the exactly-equal case).
-            # With flock held this is unreachable; it stays as the only
-            # guard for lock-less filesystems.
-            self._conflict_if_published(
-                version, cleanup=tmp,
-                what="was published by a takeover writer while this "
-                     "commit was stalled",
-            )
-            os.replace(tmp, mp)
-            ptmp = f"{self._pointer}.{uuid.uuid4().hex[:8]}.tmp"
-            with open(ptmp, "w") as f:
-                f.write(str(version))
-            # never move the pointer BACKWARD or sideways: under the
-            # no-flock fallback a racing writer may have published
-            # `version` itself or a newer one between our claim and here
-            # (both sides of a stale-claim takeover proceeding) — `>=`,
-            # not `>`: current == version means the takeover writer won
-            # and our swap would re-point to OUR metadata, dropping its
-            # committed deltas. With flock held a loser here is
-            # unreachable (newer versions can only follow OUR pointer
-            # swap). The real backend (an Iceberg catalog) makes this a
-            # true CAS.
-            self._conflict_if_published(
-                version, cleanup=ptmp,
-                what="was overtaken by a newer published version before "
-                     "its pointer swap",
-            )
-            os.replace(ptmp, self._pointer)  # THE atomic commit point
+            try:
+                os.link(tmp, mp)  # THE atomic commit point
+            except FileExistsError:
+                raise CommitConflictError(
+                    f"version {version} of {self.path} was committed by "
+                    f"another writer; re-read metadata and retry"
+                ) from None
         finally:
-            # closing the fds releases both locks — AFTER the pointer
-            # swap, so the slot is owned for the full claim→publish span
-            for fd in (claim_fd, meta_fd):
-                if fd is not None:
-                    try:
-                        os.close(fd)
-                    except OSError:
-                        pass
+            try:
+                os.remove(tmp)
+            except FileNotFoundError:
+                pass
+        if self.current_version() > version:
+            os.remove(mp)
+            raise CommitConflictError(
+                f"version {version} of {self.path} was already published "
+                f"and expired; this writer's base snapshot is stale"
+            )
 
     # ---------------------------------------------------------- history
-    def versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name.endswith(".json"):
-                # skip claim placeholders (empty files): they are
-                # in-flight commits, not published versions. A file
-                # removed between listdir and stat (concurrent
-                # expire_snapshots — r5 review) is simply gone.
-                try:
-                    if os.path.getsize(os.path.join(self.path, name)) == 0:
-                        continue
-                except FileNotFoundError:
-                    continue
-                out.append(int(name[1:-5]))
-        return sorted(out)
-
     def expire_snapshots(
         self, keep_last: int = 2, orphan_grace_secs: float | None = None
     ) -> None:
-        """Drop metadata of all but the newest snapshots, then delete any
-        data/delta dirs no kept snapshot references (MoR versions share
-        the base and earlier deltas, so removal is by reference count,
-        exactly like Iceberg's expire-snapshots + orphan-file cleanup).
+        """Drop metadata of all but the newest ``keep_last`` (>= 1)
+        snapshots, then delete any data/delta dirs no kept snapshot
+        references (MoR versions share the base and earlier deltas, so
+        removal is by reference count, exactly like Iceberg's
+        expire-snapshots + orphan-file cleanup) and any commit temp file
+        a crashed writer left behind.
 
-        An unreferenced dir younger than ``orphan_grace_secs`` (default:
-        the table's setting) is SKIPPED: a concurrent writer stages its
-        data dir before committing, so a fresh "orphan" may be an
-        in-flight merge — deleting it would corrupt that commit."""
+        An unreferenced dir or temp file younger than
+        ``orphan_grace_secs`` (default: the table's setting) is SKIPPED:
+        a concurrent writer stages its data dir and metadata temp before
+        committing, so a fresh "orphan" may be an in-flight merge —
+        deleting it would corrupt that commit."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         if orphan_grace_secs is None:
             orphan_grace_secs = self.orphan_grace_secs
         # a CONCURRENT expirer (replay loop expires per slice while a
@@ -1347,9 +1066,7 @@ class TargetTable:
         drop: list = []
         for _attempt in range(5):
             vs = self.versions()
-            cur = self.current_version()
-            drop = [v for v in vs[:-keep_last] if v != cur]
-            keep = [v for v in vs if v not in drop]
+            drop, keep = vs[:-keep_last], vs[-keep_last:]
             refs = set()
             consistent = True
             for v in keep:
@@ -1368,60 +1085,11 @@ class TargetTable:
                 os.remove(self._meta_path(v))
             except FileNotFoundError:
                 pass
-        # Reap inert EMPTY claims at or below the published pointer
-        # (review round 5): the expired-slot conflict path deliberately
-        # leaves its empty claim behind (removing it raced a lock-less
-        # taker's republish), and nothing else reclaimed them —
-        # versions() skips empty files, so the drop list above never
-        # contains one, and a table whose writers repeatedly hit the
-        # stale-base conflict would grow one permanent file per
-        # conflict. An empty claim with version <= pointer can never be
-        # republished — the pre-replace pointer guard conflicts any
-        # holder before its os.replace — so once its flock is free it
-        # is pure litter; a held lock (live claimant about to conflict)
-        # defers it to the next expire.
-        ptr = self.current_version()
-        for name in os.listdir(self.path):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                ver = int(name[1:-5])
-            except ValueError:
-                continue
-            if ver > ptr:
-                continue  # an in-flight claim for a future version
-            p = os.path.join(self.path, name)
-            fd = None
-            try:
-                if os.path.getsize(p) != 0:
-                    continue
-                fd = os.open(p, os.O_RDONLY)
-                # _claim_is_current: the probe's lock lives on the
-                # OPENED inode — if the path was reaped by a racing
-                # expirer and re-created (O_EXCL) by a new claimant
-                # between our open and here, removing by path would
-                # yank that claimant's flock-HELD claim (review round
-                # 6; bounded — it conflicts retryably either way — but
-                # the held-lock-defers contract should hold)
-                if (
-                    _try_flock(fd) != "held"
-                    and _claim_is_current(fd, p)
-                    and os.fstat(fd).st_size == 0
-                ):
-                    os.remove(p)
-            except OSError:
-                pass
-            finally:
-                if fd is not None:
-                    try:
-                        os.close(fd)
-                    except OSError:
-                        pass
         if referenced is None:
             return
         now = time.time()
         for name in os.listdir(self.path):
-            if (
+            if (name.startswith("v") and name.endswith(".tmp")) or (
                 (name.startswith("snap-") or name.startswith("delta-"))
                 and name not in referenced
             ):
@@ -1429,6 +1097,9 @@ class TargetTable:
                 try:
                     if now - os.path.getmtime(p) < orphan_grace_secs:
                         continue
+                    if os.path.isdir(p):
+                        shutil.rmtree(p, ignore_errors=True)
+                    else:
+                        os.remove(p)
                 except OSError:
                     continue
-                shutil.rmtree(p, ignore_errors=True)

@@ -126,7 +126,14 @@ def test_mor_expire_keeps_shared_deltas(spark, changelog_df, changelog_path, tmp
         expire_keep=0,  # keep all, then expire manually
     )
     table = TargetTable(spark, tgt)
-    assert len(table.versions()) >= 4
+    n_versions = len(table.versions())
+    assert n_versions >= 4
+    # keep_last < 1 is refused: as a slice bound, -1 would drop only
+    # the oldest version instead of keeping the newest
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            table.expire_snapshots(keep_last=bad)
+    assert len(table.versions()) == n_versions
     table.expire_snapshots(keep_last=1)
     assert len(table.versions()) == 1
     assert_matches_oracle(spark, tgt, changelog_df)

@@ -48,40 +48,38 @@ def test_time_travel_uses_pinned_schema(spark, tmp_path):
 
 
 def test_commit_conflict_and_stale_takeover(spark, tmp_path):
+    """A PUBLISHED next slot is a conflict for any writer still targeting
+    it; a crashed writer leaves only aged temp litter, which blocks
+    nothing and is reaped by expire_snapshots."""
     t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
-    # a FRESH claim on the next version slot = a live concurrent writer
+    # another writer publishes the next slot first
     nxt = t.current_version() + 1
-    claim = os.path.join(t.path, f"v{nxt:06d}.json")
-    open(claim, "w").close()
+    b = TargetTable(spark, t.path, n_buckets=2)
+    assert b.commit_offsets({"lsn_hi": 2})["version"] == nxt
+    # a second writer still targeting that slot conflicts
     with pytest.raises(CommitConflictError):
-        t.merge_apply(_batch(spark, [(2, "U", "c1", 0, "b")]), {"lsn_hi": 2})
+        t._commit(nxt, SCHEMA, t.metadata()["data_dir"], {},
+                  row_count=0, parent=nxt - 1, mode="mor", deltas=[])
+    assert t.current_version() == nxt
+    assert t.metadata(nxt)["offsets"] == {"lsn_hi": 2}  # winner intact
 
-    # an already-PUBLISHED version is always a conflict, however old
-    with open(claim, "w") as f:
-        json.dump({**t.metadata(), "version": nxt}, f)
-    with open(t._pointer, "w") as f:
-        f.write(str(nxt))
-    os.utime(claim, (time.time() - 3600, time.time() - 3600))
-    try:
-        t2 = TargetTable(spark, t.path, n_buckets=2)
-        nxt2 = nxt  # a second writer still targeting the published slot
-        with pytest.raises(CommitConflictError):
-            t2._commit(nxt2, SCHEMA, t2.metadata()["data_dir"], {},
-                       row_count=0, parent=nxt2 - 1, mode="mor", deltas=[])
-    finally:
-        pass
-
-    # a STALE unpublished claim (crashed writer) is taken over: resume works
-    nxt3 = t.current_version() + 1
-    stale = os.path.join(t.path, f"v{nxt3:06d}.json")
-    open(stale, "w").close()
-    os.utime(stale, (time.time() - 3600, time.time() - 3600))
+    # a crashed writer's half-written temp for the next slot is not a
+    # version and does not block the next merge
+    nxt2 = nxt + 1
+    litter = t._meta_path(nxt2) + ".deadbeef.tmp"
+    with open(litter, "w") as f:
+        f.write('{"version": ')
+    os.utime(litter, (time.time() - 3600, time.time() - 3600))
+    assert nxt2 not in t.versions()
     stats = t.merge_apply(_batch(spark, [(3, "U", "c1", 0, "c")]), {"lsn_hi": 3})
-    assert stats["version"] == nxt3
-    assert t.current_version() == nxt3
+    assert stats["version"] == nxt2
+    assert t.current_version() == nxt2
+    t.expire_snapshots(keep_last=2)  # litter is past the orphan grace
+    assert not os.path.exists(litter)
+    assert [r["text"] for r in t.read().collect()] == ["c"]
 
 
 def test_merge_retry_after_conflict(spark, tmp_path):
@@ -413,21 +411,24 @@ def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path, mode):
 
 
 def test_claim_placeholder_not_a_published_version(spark, tmp_path):
-    """An empty vNNNNNN.json is a concurrent writer's O_EXCL claim, not
-    metadata: versions() must skip it, metadata() must surface
-    not-found, and expire_snapshots must neither crash on it nor
-    remove it (r4 core review)."""
+    """An in-flight commit's ``v{n}.json.<hex>.tmp`` is not metadata:
+    versions() must skip it, current_version() must not move, and
+    expire_snapshots must leave it alone while it is younger than the
+    orphan grace (it may be milliseconds from its link)."""
     t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
     t.init(SCHEMA)
     for i in range(1, 4):
         t.merge_apply(_batch(spark, [(i, "I", f"c{i}", 0, "x")]), {"lsn_hi": i})
-    claim = os.path.join(t.path, f"v{t.current_version() + 1:06d}.json")
-    open(claim, "w").close()
-    assert t.current_version() + 1 not in t.versions()
-    with pytest.raises(FileNotFoundError, match="claimed"):
-        t.metadata(t.current_version() + 1)
-    t.expire_snapshots(keep_last=2)  # must not JSONDecodeError
-    assert os.path.exists(claim)  # the claim file itself is untouched
+    cur = t.current_version()
+    tmp = t._meta_path(cur + 1) + ".0123abcd.tmp"
+    with open(tmp, "w") as f:
+        json.dump({**t.metadata(), "version": cur + 1}, f)
+    assert cur + 1 not in t.versions()
+    assert t.current_version() == cur
+    with pytest.raises(FileNotFoundError):
+        t.metadata(cur + 1)
+    t.expire_snapshots(keep_last=2)
+    assert os.path.exists(tmp)  # young in-flight temp is untouched
     assert t.read().count() == 3
 
 
@@ -555,10 +556,10 @@ def test_compact_refuses_explicit_drop_on_unordered_table(spark, tmp_path):
 
 
 def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
-    """The O_EXCL slot claim can succeed on a version whose metadata
+    """The link can succeed into a version slot whose metadata
     expire_snapshots already deleted; the commit must still detect the
-    published pointer is ahead and raise instead of REWINDING it
-    (r5 review: a rewind silently discards every newer commit)."""
+    newer published versions and withdraw instead of REWINDING the
+    table (r5 review: a rewind silently discards every newer commit)."""
     t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
     t.init(SCHEMA)
     for i in range(4):
@@ -574,18 +575,13 @@ def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
     with pytest.raises(CommitConflictError, match="stale"):
         t._commit(version=v, schema=SCHEMA, data_dir="snap-bogus",
                   offsets={}, row_count=0, parent=v - 1)
-    assert t.current_version() == cur  # pointer untouched
-    # the empty claim is deliberately LEFT BEHIND (review round 4:
-    # removing it raced a lock-less taker's republish and could destroy
-    # published metadata); it is inert — below the pointer, never
-    # targeted again, skipped by versions()
-    assert os.path.getsize(t._meta_path(v)) == 0
+    assert t.current_version() == cur  # version untouched
+    # the stale writer withdrew its link: slot v holds no file
+    assert not os.path.exists(t._meta_path(v))
     assert v not in t.versions()
     # and the table keeps working normally after the stale conflict
     t.merge_apply(_batch(spark, [(50, "I", "c9", 0, "y")]), {"b": 9})
     assert t.current_version() == cur + 1
-    # expire reaps the inert litter (review round 5): an empty,
-    # unlocked claim at or below the pointer can never be republished
     t.expire_snapshots(keep_last=2)
     assert not os.path.exists(t._meta_path(v))
 
@@ -634,51 +630,42 @@ def test_expire_skips_sweep_when_kept_metadata_unreadable(spark, tmp_path, monke
 def test_stalled_creator_resume_preserves_takeover_publish(
     spark, tmp_path, monkeypatch
 ):
-    """r5 final review round 3: writer A creates its claim, then stalls
-    PAST the grace period before flocking it; writer B legitimately
-    takes the stale slot over and publishes. When A resumes, its lock
-    lands on the ORPHANED claim inode (B's publish replaced the path),
-    and without the inode revalidation A's expired-slot cleanup would
-    os.remove B's PUBLISHED v{version}.json — the file _current points
-    at — destroying an acknowledged commit. A must instead conflict and
-    retry onto the next slot with B's metadata intact."""
-    import etl_reconciliate_spark.target.table as tbl_mod
-
+    """Writer A finishes its metadata temp, then stalls just before its
+    link; writer B commits the same slot in the meantime. When A
+    resumes, its link must fail on B's published v{version}.json — never
+    replace it — and A must conflict and retry onto the next slot with
+    B's metadata intact."""
     t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c0", 0, "base")]), {"lsn_hi": 1})
     contested = t.current_version() + 1
 
     state = {"fired": False}
-    real_flock = tbl_mod._try_flock
+    real_link = os.link
 
-    def stall_then_flock(fd):
-        # fire once, at A's FIRST flock attempt — i.e. in the window
-        # between A's O_EXCL create and its lock acquisition
+    def stall_then_link(src, dst):
+        # fire once, at A's FIRST link — its temp is written, the slot
+        # is still empty
         if not state["fired"]:
             state["fired"] = True
-            # A's stall pushes its claim past the grace period...
-            mp = t._meta_path(contested)
-            os.utime(mp, (time.time() - 3600, time.time() - 3600))
-            # ...and writer B takes the stale, UNLOCKED slot over and
-            # fully publishes it (B's own flock calls recurse here with
-            # fired already set, passing straight through)
+            # writer B commits the slot while A is stalled (B's own link
+            # recurses here with fired already set, passing through)
             b = TargetTable(spark, t.path, n_buckets=2)
             b.merge_apply(
                 _batch(spark, [(99, "I", "cB", 0, "winner")]),
                 {"lsn_hi": 99},
             )
             assert b.current_version() == contested
-        return real_flock(fd)
+        return real_link(src, dst)
 
-    monkeypatch.setattr(tbl_mod, "_try_flock", stall_then_flock)
+    monkeypatch.setattr(os, "link", stall_then_link)
     stats = t.merge_apply(
         _batch(spark, [(2, "I", "cA", 0, "resumed")]), {"lsn_hi": 2}
     )
     monkeypatch.undo()
     assert state["fired"]
 
-    # A conflicted on the orphaned inode and retried onto the next slot
+    # A conflicted on B's published slot and retried onto the next slot
     assert stats["version"] == contested + 1
     # B's published metadata survived A's resume
     assert int(t.metadata(contested)["offsets"]["lsn_hi"]) == 99
@@ -687,15 +674,11 @@ def test_stalled_creator_resume_preserves_takeover_publish(
 
 
 def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
-    """r5 final reviews, two generations of the same race: writer A
-    stalls mid-commit on version v with its claim looking STALE
-    (mtime past the grace period). Under the pre-flock protocol B would
-    take the slot over and publish, and A's resume could then clobber
-    B's metadata in the check-then-replace window. Under the flock
-    protocol A — being alive — still HOLDS the slot's lock, so B's
-    attempt must conflict outright, however stale the claim looks; A
-    then publishes v unopposed and B's retry lands on v+1. Both rows
-    present, no clobber window at all."""
+    """Writer A stalls mid-commit on version v, while writing its
+    metadata temp. A stall holds no slot: B's commit of v succeeds
+    meanwhile, because the first writer to link wins. A's resumed link
+    then fails, A retries onto v+1, and B's metadata is never
+    clobbered. All rows present, no clobber window at all."""
     import json as json_mod
 
     t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
@@ -707,24 +690,20 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
     real_dump = json_mod.dump
 
     def hook(obj, fh, **kw):
-        # fire once, on A's metadata write for the contested slot —
-        # A is past its claim (holding the flock) and mid-stall
+        # fire once, on A's metadata write for the contested slot
         if (
             not state["fired"]
             and isinstance(obj, dict)
             and obj.get("version") == contested
         ):
             state["fired"] = True
-            # A "stalls": its claim LOOKS stale to the mtime heuristic...
-            mp = t._meta_path(contested)
-            os.utime(mp, (time.time() - 3600, time.time() - 3600))
-            # ...but A is alive and holds the slot lock, so B's takeover
-            # attempt must conflict instead of proceeding
+            # while A stalls, B links the contested slot first
             b = TargetTable(spark, t.path, n_buckets=2)
-            with pytest.raises(CommitConflictError, match="live writer"):
-                b._commit(contested, SCHEMA, b.metadata()["data_dir"], {},
-                          row_count=0, parent=contested - 1, mode="mor",
-                          deltas=list(b.metadata().get("deltas") or []))
+            b._commit(contested, SCHEMA, b.metadata()["data_dir"],
+                      {"lsn_hi": 50}, row_count=0, parent=contested - 1,
+                      mode="mor",
+                      deltas=list(b.metadata().get("deltas") or []))
+            assert b.current_version() == contested
         return real_dump(obj, fh, **kw)
 
     monkeypatch.setattr(
@@ -736,24 +715,26 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert state["fired"]
 
-    # A published its own slot unopposed
-    assert stats["version"] == contested
-    assert int(t.metadata(contested)["offsets"]["lsn_hi"]) == 2
-    # B retries AFTER A's commit and lands on the next slot
+    # A lost the link race and retried onto the next slot
+    assert stats["version"] == contested + 1
+    # B's metadata is intact
+    assert t.metadata(contested)["offsets"] == {"lsn_hi": 50}
+    assert int(t.metadata(contested + 1)["offsets"]["lsn_hi"]) == 2
+    # B's next merge lands after A's commit
     b = TargetTable(spark, t.path, n_buckets=2)
     stats_b = b.merge_apply(
         _batch(spark, [(99, "I", "cB", 0, "after")]), {"lsn_hi": 99}
     )
-    assert stats_b["version"] == contested + 1
+    assert stats_b["version"] == contested + 2
     texts = {r["conv_id"]: r["text"] for r in t.read().collect()}
     assert texts == {"c0": "base", "cA": "stalled", "cB": "after"}
 
 
 def test_concurrent_writer_hammer_loses_nothing(spark, tmp_path):
-    """End-to-end contention evidence for the flock commit protocol:
-    four writers (own TargetTable instances, one shared session — flock
-    conflicts between fds within one process exactly as across
-    processes) race 5 merges each onto one MoR table, crossing a
+    """End-to-end contention evidence for the link commit protocol:
+    four writers (own TargetTable instances, one shared session —
+    ``os.link`` put-if-absent conflicts between threads exactly as
+    across processes) race 5 merges each onto one MoR table, crossing a
     compaction threshold mid-hammer. Every CommitConflictError is
     retried from fresh state. NOTHING may be lost: all 20 batches'
     rows present with their final text, versions strictly monotone,
@@ -806,3 +787,91 @@ def test_concurrent_writer_hammer_loses_nothing(spark, tmp_path):
     assert vs == sorted(set(vs))
     assert t.metadata()["version"] == t.current_version()
     assert t.count_live() == n_writers * n_batches
+
+
+def test_commit_crash_at_every_step_recovers(spark, tmp_path, monkeypatch):
+    """Kill the commit at every file-system call it makes — the temp
+    write, the link, the stale-check listing and the temp removal, each
+    just before and just after the call. Whatever the crash point, a
+    fresh handle sees either the prior version or the new one with its
+    matching offsets, the next commit succeeds, and expire_snapshots
+    leaves no temp litter. Driven through commit_offsets, so no step
+    runs a Spark job. A link the filesystem refuses (PermissionError)
+    propagates as that error, not as a retryable conflict."""
+
+    class Crash(BaseException):
+        """Stands in for a kill: not caught by ``except Exception``."""
+
+    path = str(tmp_path / "t")
+    t = TargetTable(spark, path, n_buckets=2, mode="mor")
+    t.init(SCHEMA, offsets={"lsn_hi": 0})
+
+    armed = {"on": False}
+    real_commit = TargetTable._commit
+
+    def armed_commit(self, *a, **k):
+        armed["on"] = True
+        try:
+            return real_commit(self, *a, **k)
+        finally:
+            armed["on"] = False
+
+    monkeypatch.setattr(TargetTable, "_commit", armed_commit)
+
+    def crash_at(module, name, after):
+        real = getattr(module, name)
+
+        def hooked(*a, **k):
+            if not armed["on"]:
+                return real(*a, **k)
+            armed["on"] = False  # one crash per commit
+            if after:
+                real(*a, **k)
+            raise Crash(f"{name} {'after' if after else 'before'}")
+
+        monkeypatch.setattr(module, name, hooked)
+        return real
+
+    # crash point -> does the new version survive? Only the link
+    # publishes, so every crash before it leaves the prior version.
+    published = {
+        ("dump", False): False, ("dump", True): False,
+        ("link", False): False, ("link", True): True,
+        ("listdir", False): True, ("listdir", True): True,
+        ("remove", False): True, ("remove", True): True,
+    }
+    lsn = 0
+    for module, name in [(json, "dump"), (os, "link"), (os, "listdir"),
+                         (os, "remove")]:
+        for after in (False, True):
+            prior = t.current_version()
+            prior_offsets = t.committed_offsets()
+            lsn += 1
+            real = crash_at(module, name, after)
+            with pytest.raises(Crash):
+                t.commit_offsets({"lsn_hi": lsn})
+            monkeypatch.setattr(module, name, real)
+
+            fresh = TargetTable(spark, path, n_buckets=2)
+            v = fresh.current_version()
+            assert v == prior + published[name, after], (name, after, v)
+            want = prior_offsets if v == prior else {"lsn_hi": lsn}
+            assert fresh.committed_offsets() == want, (name, after)
+
+            lsn += 1
+            stats = fresh.commit_offsets({"lsn_hi": lsn})
+            assert stats["version"] == v + 1
+            fresh.expire_snapshots(keep_last=2, orphan_grace_secs=0)
+            assert not [n for n in os.listdir(path) if n.endswith(".tmp")]
+            assert fresh.committed_offsets() == {"lsn_hi": lsn}
+
+    def refuse_link(src, dst):
+        raise PermissionError(1, "hard links not permitted", dst)
+
+    cur = t.current_version()
+    monkeypatch.setattr(os, "link", refuse_link)
+    with pytest.raises(PermissionError):
+        t.commit_offsets({"lsn_hi": lsn + 1})
+    monkeypatch.undo()
+    assert t.current_version() == cur
+    assert not [n for n in os.listdir(path) if n.endswith(".tmp")]
