@@ -122,8 +122,8 @@ def _replay_once(
     stats = _spark_submit(
         master,
         ["--changelog", log, "--target", tgt,
-         "--slice-size", str((events + SLICES - 1) // SLICES),
-         "--target-mode", "mor"] + (extra_args or []),
+         "--slice-size", str((events + SLICES - 1) // SLICES)]
+        + (extra_args or []),
         conf=conf,
     )
     shutil.rmtree(tgt, ignore_errors=True)
@@ -444,7 +444,6 @@ def main() -> None:
         "replay_sec": round(replay["secs"], 2),
         "slices": replay["slices"],
         "target_rows": replay["target_rows"],
-        "mode": replay["mode"],
         "master": master,
         "executors": n_exec,
     })

@@ -43,7 +43,7 @@ from etl_reconciliate_spark.operators.textstats import (
 )
 
 # most recent call's persisted survivor frame (single slot; see the
-# cache contract in curate_corpus and the handle variant in plans.cache)
+# cache contract in curate_corpus)
 _LAST_SURVIVORS: list[DataFrame] = []
 
 
@@ -69,7 +69,6 @@ def curate_corpus(
     jaccard_threshold: float = 0.5,
     keep_cols: tuple[str, ...] = (),
     persist_survivors: bool = True,
-    cache=None,
 ) -> DataFrame:
     """Returns the curated corpus: (doc_id, lang_pred, n_tokens,
     quality_score) for every document surviving all four stages.
@@ -91,8 +90,7 @@ def curate_corpus(
     the full text-bearing frame instead measured SLOWER locally
     (serialization tax) and would materialize a corpus-sized cache at
     100 TB to save scans that are embarrassingly parallel anyway.
-    Lifecycle follows the standard pattern: pass ``cache``
-    (plans.cache.CacheHandle) to own it; else the module slot holds it
+    Lifecycle follows the standard pattern: the module slot holds it
     and :func:`release_curate_cache` (or the next call) releases it."""
     qc = quality_columns()
     # keep_cols beyond the five standard outputs must enter the gated
@@ -124,16 +122,11 @@ def curate_corpus(
     if persist_survivors:
         from pyspark import StorageLevel
 
-        if cache is not None:
-            exact_keep = cache.add(
-                exact_keep.persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        else:
-            # release BEFORE persisting (same-CacheManager-entry rule —
-            # see spans.duplicated_span_stats)
-            release_curate_cache()
-            exact_keep = exact_keep.persist(StorageLevel.MEMORY_AND_DISK)
-            _LAST_SURVIVORS.append(exact_keep)
+        # release BEFORE persisting (same-CacheManager-entry rule — see
+        # spans.duplicated_span_stats)
+        release_curate_cache()
+        exact_keep = exact_keep.persist(StorageLevel.MEMORY_AND_DISK)
+        _LAST_SURVIVORS.append(exact_keep)
     exact = gated.join(exact_keep, "doc_id")
 
     pairs = lsh_jaccard_pairs(

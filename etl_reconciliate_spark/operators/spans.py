@@ -77,7 +77,6 @@ def duplicated_span_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     persist_pairs: bool = True,
-    cache=None,
 ) -> DataFrame:
     """Per-document duplicated-span statistics.
 
@@ -93,14 +92,11 @@ def duplicated_span_stats(
     doc's duplicated positions. Without the persist the lazy plan would
     re-explode the corpus for each consumer (the r3 two-pass shape);
     with it the second pass reads the distinct-pairs cache, orders of
-    magnitude smaller than the positional explode. Cache lifecycle:
-    pass ``cache`` (a ``plans.cache.CacheHandle``) and the persisted
-    pairs register on that caller-owned handle — two concurrent
-    pipelines with their own handles never evict each other (r5).
-    Without a handle, the module single-slot behavior applies: each
-    call releases the PREVIOUS call's cache (bounding residency to one
-    corpus in a long-lived session), and :func:`release_span_cache`
-    releases the last one once the result is materialized.
+    magnitude smaller than the positional explode. Cache lifecycle: a
+    module single slot — each call releases the PREVIOUS call's cache
+    (bounding residency to one corpus in a long-lived session), and
+    :func:`release_span_cache` releases the last one once the result is
+    materialized.
     ``persist_pairs=False`` opts out entirely (two explodes, zero
     cache).
     """
@@ -113,15 +109,12 @@ def duplicated_span_stats(
     if persist_pairs:
         from pyspark import StorageLevel
 
-        if cache is not None:
-            pairs = cache.add(pairs.persist(StorageLevel.MEMORY_AND_DISK))
-        else:
-            # release BEFORE persisting: an identical corpus would map
-            # to the same CacheManager entry, and releasing afterwards
-            # would evict the fresh cache too
-            release_span_cache()
-            pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-            _LAST_PAIRS.append(pairs)
+        # release BEFORE persisting: an identical corpus would map to
+        # the same CacheManager entry, and releasing afterwards would
+        # evict the fresh cache too
+        release_span_cache()
+        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+        _LAST_PAIRS.append(pairs)
     # pairs is distinct per (sh, doc): count(*) == countDistinct(doc)
     dup = (
         pairs.groupBy("sh")

@@ -289,7 +289,6 @@ def rollup_timeseries(
     ts_col: str = "ts",
     key_cols: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
-    cache=None,
 ) -> DataFrame:
     """Multi-granularity rollup re-aggregated from partials.
 
@@ -308,13 +307,10 @@ def rollup_timeseries(
     persisted so the output union does not re-scan the raw table once
     per grain. The cache is bucket-count-sized, but a long-lived
     session calling this repeatedly would accumulate one such cache per
-    call. Pass ``cache`` (a ``plans.cache.CacheHandle``) to own the
-    lifecycle per pipeline — concurrent pipelines with separate handles
-    never evict each other (r5); without one, each call releases the
-    PREVIOUS call's partials (module slot), bounding residency to the
-    latest call, and :func:`release_rollup_partials` releases that one
-    too once the caller has materialized (written/collected) the
-    result.
+    call, so each call releases the PREVIOUS call's partials (module
+    slot), bounding residency to the latest call, and
+    :func:`release_rollup_partials` releases that one too once the
+    caller has materialized (written/collected) the result.
     """
     aggs_raw = _rollup_aggs_raw(value_col)
     aggs_partial = _rollup_aggs_partial()
@@ -330,19 +326,16 @@ def rollup_timeseries(
         # re-aggregation; without this the union recomputes them from raw
         # (two raw scans — verified in the executed plan). The cached set
         # is bucket-count-sized, never event-sized.
-        if cache is not None:
-            finest = cache.add(finest.persist())
-        else:
-            # release BEFORE persisting: with an identical input the new
-            # persist would map to the SAME CacheManager entry, and a
-            # release afterwards would evict the fresh cache too
-            while _LAST_PARTIALS:  # bound the leak to ONE cached set
-                try:               # (own slot only — a held refresh
-                    _LAST_PARTIALS.pop().unpersist(blocking=True)
-                except Exception:  # result keeps its caches)
-                    pass
-            finest = finest.persist()
-            _LAST_PARTIALS.append(finest)
+        # release BEFORE persisting: with an identical input the new
+        # persist would map to the SAME CacheManager entry, and a
+        # release afterwards would evict the fresh cache too
+        while _LAST_PARTIALS:  # bound the leak to ONE cached set
+            try:               # (own slot only — a held refresh
+                _LAST_PARTIALS.pop().unpersist(blocking=True)
+            except Exception:  # result keeps its caches)
+                pass
+        finest = finest.persist()
+        _LAST_PARTIALS.append(finest)
     levels = [finest]
     for g in grains[1:]:
         prev = levels[-1]
@@ -368,7 +361,6 @@ def refresh_rollup(
     ts_col: str = "ts",
     key_cols: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
-    cache=None,
 ) -> DataFrame:
     """Incrementally refresh a materialized :func:`rollup_timeseries`
     after a change set touched the raw events — the CDC-native
@@ -416,24 +408,15 @@ def refresh_rollup(
             left[k].eqNullSafe(right[k]) for k in keys
         ]
 
-    # cache=None → module slot: release only the PREVIOUS refresh's
-    # caches — NOT _LAST_PARTIALS: the caller's `rollup` argument may be
-    # a not-yet-materialized rollup_timeseries output whose persisted
-    # partials live there, and evicting them would bring back the
-    # per-grain raw re-scan. With a CacheHandle the caller owns the
-    # lifecycle and nothing global is touched (r5).
-    if cache is None:
-        while _LAST_REFRESH:
-            try:
-                _LAST_REFRESH.pop().unpersist(blocking=True)
-            except Exception:
-                pass
-
-    def _register(df):
-        if cache is not None:
-            return cache.add(df)
-        _LAST_REFRESH.append(df)
-        return df
+    # release only the PREVIOUS refresh's caches — NOT _LAST_PARTIALS:
+    # the caller's `rollup` argument may be a not-yet-materialized
+    # rollup_timeseries output whose persisted partials live there, and
+    # evicting them would bring back the per-grain raw re-scan
+    while _LAST_REFRESH:
+        try:
+            _LAST_REFRESH.pop().unpersist(blocking=True)
+        except Exception:
+            pass
 
     dirty = F.broadcast(
         changes.select(*cell(finest, ts_col)).distinct()
@@ -455,7 +438,8 @@ def refresh_rollup(
     # grain's recompute — persist (bucket-count-sized) so neither the
     # raw semi-join scan nor the kept anti-join runs once per grain;
     # released on the next refresh or via release_rollup_partials()
-    level = _register(kept.unionByName(fresh.select(*kept.columns)).persist())
+    level = kept.unionByName(fresh.select(*kept.columns)).persist()
+    _LAST_REFRESH.append(level)
     out_levels = [level]
     dirty_buckets = dirty
     for g in grains[1:]:
@@ -475,9 +459,8 @@ def refresh_rollup(
         kept_g = rollup_g.join(
             dirty_g, on=cell_match(rollup_g, dirty_g), how="anti"
         )
-        level = _register(
-            kept_g.unionByName(fresh_g.select(*kept_g.columns)).persist()
-        )
+        level = kept_g.unionByName(fresh_g.select(*kept_g.columns)).persist()
+        _LAST_REFRESH.append(level)
         out_levels.append(level)
         dirty_buckets = dirty_g
     out = out_levels[0]

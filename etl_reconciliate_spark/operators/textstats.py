@@ -34,8 +34,11 @@ NWS_RE = rf"[^{WS_CHARS}]"
 # count rollup (jobs/rollup_job.py) stamps this constant directly; the
 # dedup band index (jobs/dedup_index_job.py) stamps
 # dedupe_docs.SIGNATURE_VERSION, which folds this constant together
-# with hashing.HASH_FAMILY_VERSION. The guard contract lives in
-# target/maintenance.measure_changed.
+# with hashing.HASH_FAMILY_VERSION. A --refresh across a mismatch would
+# break refresh == rebuild: a rollup would recompute only dirty cells
+# under the new tokenizer while untouched cells keep old counts, and a
+# band index would union rows hashed under the new family next to stale
+# rows, so identical text stops colliding and near-dup pairs are lost.
 TOKENIZER_VERSION = 2
 
 

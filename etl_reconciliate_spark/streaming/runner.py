@@ -27,10 +27,10 @@ Scale notes (the 100 TB story):
 * the target side of the merge is hash-clustered on the key at write
   time (bucket emulation) — with real Iceberg bucket partitioning +
   storage-partitioned joins that side never shuffles either;
-* every job defaults to merge-on-read (``--target-mode mor``): one
-  delta file set per slice, periodic compaction, and readers resolve
-  base + deltas with a max-``_lsn`` window; the Iceberg backend maps
-  this to positional deletes, with no change above this layer.
+* the target is merge-on-read: one delta file set per slice, periodic
+  compaction, and readers resolve base + deltas with a max-``_lsn``
+  window; the Iceberg backend maps this to positional deletes, with no
+  change above this layer.
 
 Kill/resume: stop after any slice (or kill -9 mid-merge) and re-invoke —
 the resume point is read from the last committed snapshot, and an
@@ -89,19 +89,24 @@ def replay(
     max_slices: int | None = None,
     collect_lineage: bool = True,
     expire_keep: int = 2,
-    target_mode: str = "cow",
+    target_mode: str = "mor",
     compact_threshold: int = 8,
 ) -> dict:
     """Replay the change log into the target table; resumable.
 
     Returns run statistics: events applied, slices, wall seconds of the
-    apply loop (excluding session startup), events/sec.
+    apply loop (excluding session startup), events/sec. ``target_mode``
+    accepts only ``"mor"``, the one table mode.
     """
+    if target_mode != "mor":
+        raise ValueError(
+            f"target_mode {target_mode!r}: the copy-on-write ('cow') mode "
+            "was removed; tables are merge-on-read ('mor') only"
+        )
     with pinned_shuffle_partitions(spark, n_partitions) as n_partitions:
         return _replay_loop(
             spark, changelog_path, target_path, slice_size, n_partitions,
-            max_slices, collect_lineage, expire_keep, target_mode,
-            compact_threshold,
+            max_slices, collect_lineage, expire_keep, compact_threshold,
         )
 
 
@@ -114,7 +119,6 @@ def _replay_loop(
     max_slices: int | None,
     collect_lineage: bool,
     expire_keep: int,
-    target_mode: str,
     compact_threshold: int,
 ) -> dict:
     from pyspark.sql import types as T
@@ -124,7 +128,6 @@ def _replay_loop(
         spark,
         target_path,
         n_buckets=n_partitions,
-        mode=target_mode,
         compact_threshold=compact_threshold,
     )
 
@@ -150,10 +153,9 @@ def _replay_loop(
         # LSN-gap fast path (r5 review): real WAL/Debezium LSNs are
         # sparse byte offsets, so densely-tiled slices routinely cover
         # pure gaps. The driver-side footer index PROVES such a slice
-        # empty — merging it anyway cost a full-table rewrite per gap
-        # slice in cow mode and an empty delta (counting toward the
-        # compaction threshold → a full base rewrite every Nth gap) in
-        # mor. Skip the merge entirely: zero Spark jobs. The offset is
+        # empty — merging it anyway cost an empty delta (counting toward
+        # the compaction threshold → a full base rewrite every Nth gap).
+        # Skip the merge entirely: zero Spark jobs. The offset is
         # NOT advanced per gap — the next non-empty slice's commit
         # carries lsn_hi past the gap; a TRAILING run of gaps gets ONE
         # offsets-only commit after the loop (r5 final review: with
@@ -211,10 +213,6 @@ def _replay_loop(
             table.expire_snapshots(keep_last=expire_keep)
 
     secs = time.monotonic() - t0
-    # the table is unconditionally initialized above, so exists() is
-    # true here; read mode() once (r5 review: three dead exists()
-    # branches, three metadata re-reads)
-    mode = table.mode()
     return {
         "slices": len(slices),
         "events": events,
@@ -222,9 +220,4 @@ def _replay_loop(
         "events_per_sec": events / secs if secs > 0 else float("inf"),
         "final_lsn": ckpt.last_committed_lsn(),
         "target_rows": table.count_live(),
-        "mode": mode,
-        # mode is fixed at init: warn when a pre-existing table silently
-        # overrides the requested --target-mode (a cow-vs-mor comparison
-        # on a reused path would otherwise measure one mode twice)
-        **({"requested_mode_ignored": target_mode} if mode != target_mode else {}),
     }

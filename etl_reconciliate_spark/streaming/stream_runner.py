@@ -45,7 +45,6 @@ def replay_stream(
     checkpoint_dir: str,
     n_partitions: int | None = None,
     max_files_per_trigger: int | None = None,
-    target_mode: str = "mor",
     compact_threshold: int = 8,
     dedup_within_watermark: str | None = None,
     changelog_format: str = "parquet",
@@ -74,8 +73,8 @@ def replay_stream(
     with pinned_shuffle_partitions(spark, n_partitions) as n_partitions:
         return _replay_stream_impl(
             spark, changelog_path, target_path, checkpoint_dir,
-            n_partitions, max_files_per_trigger, target_mode,
-            compact_threshold, dedup_within_watermark, changelog_format,
+            n_partitions, max_files_per_trigger, compact_threshold,
+            dedup_within_watermark, changelog_format,
         )
 
 
@@ -86,7 +85,6 @@ def _replay_stream_impl(
     checkpoint_dir: str,
     n_partitions: int,
     max_files_per_trigger: int | None,
-    target_mode: str,
     compact_threshold: int,
     dedup_within_watermark: str | None,
     changelog_format: str,
@@ -104,7 +102,6 @@ def _replay_stream_impl(
         spark,
         target_path,
         n_buckets=n_partitions,
-        mode=target_mode,
         compact_threshold=compact_threshold,
         ordered_commits=False,
     )
@@ -194,5 +191,4 @@ def _replay_stream_impl(
         "batches": len(batches),
         "input_rows": sum(b["input_rows"] for b in batches),
         "target_rows": table.count_live(),
-        "mode": table.mode(),
     }

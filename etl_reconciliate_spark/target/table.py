@@ -8,12 +8,12 @@ JSON metadata file per version:
 * **snapshot isolation** — every MERGE writes a brand-new data directory
   and metadata file; the current version is the highest published
   ``v{n:06d}.json``, and readers only ever see a fully written one;
-* **atomic commit** — ``os.link`` of the finished metadata file into its
-  version slot is the single commit point (put-if-absent, the Delta Lake
-  / Iceberg Hadoop-table log store); checkpoint offsets are embedded IN
-  the snapshot metadata, so offsets and data commit together
-  (exactly-once without a separate transaction coordinator — SURVEY
-  §7.3);
+* **atomic commit** — one put-if-absent publish of the finished metadata
+  file into its version slot (``target/versions.py``, the version log
+  the rollup and dedup-index jobs publish through too); checkpoint
+  offsets are embedded IN the snapshot metadata, so offsets and data
+  commit together (exactly-once without a separate transaction
+  coordinator — SURVEY §7.3);
 * **schema evolution** — each snapshot records its schema; columns
   present in an incoming batch but absent from the table are appended
   (add-column), and old snapshots read with nulls for them;
@@ -35,16 +35,22 @@ from __future__ import annotations
 
 import functools
 import glob
-import json
 import os
-import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
 from etl_reconciliate_spark.schemas import KEY_COLS, META_LSN
+# CommitConflictError is part of this module's API (callers catch it
+# from here); the version log defines it
+from etl_reconciliate_spark.target.versions import (
+    CommitConflictError,
+    expire_versions,
+    list_versions,
+    publish_version,
+    read_version,
+)
 
 META_DELETED = "_deleted"
 META_COLS = [META_LSN, META_DELETED]
@@ -149,30 +155,15 @@ def _visible(df: DataFrame, want: T.StructType, include_meta: bool) -> DataFrame
     return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(cols)
 
 
-class CommitConflictError(RuntimeError):
-    """Another writer already committed the same version, or this
-    writer's base snapshot was stale.
-
-    The caller's view of the table is stale: re-read metadata, recompute
-    the merge/compaction from the fresh state, and retry — exactly
-    Iceberg's optimistic-concurrency contract."""
-
-
 class TargetTable:
     """A versioned, MERGE-able table rooted at ``path``.
 
-    Two write modes, chosen at ``init`` and recorded in the table
-    metadata (mirroring Iceberg's ``write.merge.mode``):
-
-    * ``cow`` (copy-on-write): every MERGE rewrites the full table into
-      a new snapshot — cheapest reads, O(table) write amplification per
-      slice. Right for small targets / infrequent batches.
-    * ``mor`` (merge-on-read): every MERGE appends only the deduplicated
-      change batch as a hash-clustered **delta** file set; readers
-      resolve the per-key max-``_lsn`` winner across base+deltas at scan
-      time. Write cost is O(slice) regardless of table size — the only
-      viable shape at 10^10 events — with automatic compaction folding
-      deltas back into the base every ``compact_threshold`` commits.
+    Merge-on-read (Iceberg's ``write.merge.mode=merge-on-read``): every
+    MERGE appends only the deduplicated change batch as a
+    hash-clustered **delta** file set; readers resolve the per-key
+    max-``_lsn`` winner across base+deltas at scan time. Write cost is
+    O(slice) regardless of table size, with automatic compaction folding
+    deltas back into the base every ``compact_threshold`` commits.
 
     Tombstones (``_deleted``) are kept in deltas so the read-time winner
     selection sees the delete's LSN high-water mark. Whether compaction
@@ -193,12 +184,12 @@ class TargetTable:
 
     Writers use optimistic concurrency: a commit publishes version
     ``n`` by hard-linking its finished metadata file into the empty slot
-    ``v{n:06d}.json``. A second writer for the same slot gets
-    :class:`CommitConflictError` and must recompute from fresh metadata
-    (Iceberg-style CAS). A crashed writer leaves only a temp file, which
-    ``expire_snapshots`` reaps once it is older than
-    ``orphan_grace_secs``; it never holds a slot, so nothing has to be
-    taken over.
+    ``v{n:06d}.json`` (``versions.publish_version``). A second writer
+    for the same slot gets :class:`CommitConflictError` and must
+    recompute from fresh metadata (Iceberg-style CAS). A crashed writer
+    leaves only a temp file and perhaps a data dir, which
+    ``expire_snapshots`` reaps once their slot is published and they are
+    older than ``orphan_grace_secs``; nothing has to be taken over.
     """
 
     def __init__(
@@ -206,7 +197,6 @@ class TargetTable:
         spark: SparkSession,
         path: str,
         n_buckets: int = 32,
-        mode: str = "cow",
         compact_threshold: int = 8,
         ordered_commits: bool = True,
         orphan_grace_secs: float = 600.0,
@@ -215,14 +205,10 @@ class TargetTable:
         self.path = path
         self._n_buckets_arg = n_buckets
         self._n_buckets_cache: int | None = None
-        self._init_mode = mode
         self.compact_threshold = compact_threshold
         self._ordered_commits_arg = ordered_commits
         self._ordered_commits_cache: bool | None = None
         self.orphan_grace_secs = orphan_grace_secs
-
-    def mode(self) -> str:
-        return self.metadata().get("mode", "cow")
 
     @property
     def ordered_commits(self) -> bool:
@@ -268,16 +254,8 @@ class TargetTable:
 
     # ------------------------------------------------------------ state
     def versions(self) -> list[int]:
-        """Published versions, ascending: every ``v{n:06d}.json`` in the
-        table dir (a commit's in-flight ``*.tmp`` is not a version)."""
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5]) for n in names
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
+        """Published versions, ascending."""
+        return list_versions(self.path)
 
     def exists(self) -> bool:
         return bool(self.versions())
@@ -293,10 +271,7 @@ class TargetTable:
         return os.path.join(self.path, f"v{version:06d}.json")
 
     def metadata(self, version: int | None = None) -> dict:
-        if version is None:
-            version = self.current_version()
-        with open(self._meta_path(version)) as f:
-            return json.load(f)
+        return read_version(self.path, version)
 
     def schema(self) -> T.StructType:
         """Current user-facing schema (no metadata columns)."""
@@ -315,7 +290,7 @@ class TargetTable:
         empty.write.mode("overwrite").parquet(os.path.join(self.path, data_dir))
         self._commit(
             0, schema, data_dir, offsets or {}, row_count=0, parent=None,
-            mode=self._init_mode, deltas=[],
+            deltas=[],
         )
 
     # ------------------------------------------------------------- read
@@ -331,9 +306,9 @@ class TargetTable:
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Current (or pinned-version) table contents.
 
-        Live rows only unless ``include_meta``. In ``mor`` mode the
-        per-key max-``_lsn`` winner is resolved across base + deltas at
-        scan time (one window over a key-hash shuffle — the read-side
+        Live rows only unless ``include_meta``. The per-key
+        max-``_lsn`` winner is resolved across base + deltas at scan
+        time (one window over a key-hash shuffle — the read-side
         cost MoR trades for O(slice) writes)."""
         meta = self.metadata(version)
         # the PINNED version's schema — time-travel must not show columns
@@ -456,16 +431,16 @@ class TargetTable:
 
         Scale shape — two plans, picked from the metadata alone:
 
-        * **delta fast path** (``mor`` and no compaction/base rewrite in
+        * **delta fast path** (no compaction/base rewrite in
           ``(from, to]``, detected as data_dir unchanged + delta-list
           prefix): scans ONLY the delta dirs committed in the range,
           winner-resolves them (one window over the key shuffle,
           O(range deltas)), and probes the from-snapshot once with a
           join to classify insert-vs-update and drop stale replays —
           output and shuffle cost are O(changed keys), never O(table).
-        * **snapshot diff fallback** (cow, or the range crosses a
-          compaction): full-outer join of the two resolved states on the
-          key — correct for ANY pair of retained versions.
+        * **snapshot diff fallback** (the range crosses a compaction):
+          full-outer join of the two resolved states on the key —
+          correct for ANY pair of retained versions.
 
         Both versions' metadata must still be retained
         (``expire_snapshots`` removes old versions); otherwise raises
@@ -512,7 +487,6 @@ class TargetTable:
             to_deltas[len(from_deltas):]
             if (
                 not _force_diff
-                and m_to["mode"] == "mor"
                 and m_to["data_dir"] == m_from["data_dir"]
                 and to_deltas[: len(from_deltas)] == from_deltas
             )
@@ -651,7 +625,6 @@ class TargetTable:
                     offsets,
                     row_count=meta.get("row_count"),
                     parent=meta["version"],
-                    mode=meta.get("mode", "cow"),
                     deltas=meta.get("deltas", []),
                 )
                 return {"version": meta["version"] + 1,
@@ -732,88 +705,12 @@ class TargetTable:
             + [T.StructField(f_.name, f_.dataType, True) for f_ in new_fields]
         )
 
-        if base_meta.get("mode", "cow") == "mor":
-            return self._merge_mor(batch, evolved, offsets, base_meta)
-
-        # read pinned to the SAME snapshot the commit slot is derived from
-        tgt = self.read(include_meta=True, version=base_meta["version"])
-        # pad missing columns and cast widened ones (both the stored side
-        # and an old-epoch batch may be narrower than the evolved schema)
-        tgt = _conform(tgt, evolved)
-        src = _conform(batch, evolved)
-
-        payload_cols = [f_.name for f_ in evolved.fields if f_.name not in KEY_COLS]
-
-        t = tgt.alias("t")
-        s = src.alias("s")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in KEY_COLS]
-        joined = t.join(s, cond, "full_outer")
-
-        take_src = F.col("s.lsn").isNotNull() & (
-            F.col(f"t.{META_LSN}").isNull() | (F.col("s.lsn") > F.col(f"t.{META_LSN}"))
-        )
-        out_cols = [
-            F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in KEY_COLS
-        ]
-        out_cols += [
-            F.when(take_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            for c in payload_cols
-        ]
-        out_cols += [
-            F.when(take_src, F.col("s.lsn"))
-            .otherwise(F.col(f"t.{META_LSN}"))
-            .alias(META_LSN),
-            F.when(take_src, F.col("s.op") == F.lit("D"))
-            .otherwise(F.coalesce(F.col(f"t.{META_DELETED}"), F.lit(False)))
-            .alias(META_DELETED),
-        ]
-        merged = joined.select(out_cols)
-
-        version = base_meta["version"] + 1
-        data_dir = f"snap-{version:06d}-{uuid.uuid4().hex[:8]}"
-        out_path = os.path.join(self.path, data_dir)
-        # Hash-cluster files on the key (emulating Iceberg bucket
-        # partitioning) so downstream reads are co-located.
-        # Live-row count rides the write via Observation (no extra job);
-        # row_count in metadata is LIVE rows (tombstones excluded), the
-        # same semantic as a MoR compaction commit.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        merged = merged.observe(
-            obs,
-            F.sum(
-                F.when(~F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)
-            ).alias("live"),
-        )
-        merged.repartition(self.n_buckets, *KEY_COLS).write.option(
-            "compression", PARQUET_CODEC
-        ).mode("overwrite").parquet(
-            out_path
-        )
-        # _observed_live: AQE can eliminate the CollectMetrics node on an
-        # empty plan (the failure compact() and stream_runner hit) — the
-        # helper falls back to counting the written files
-        row_count = self._observed_live(obs, out_path)
-        self._commit(
-            version, evolved, data_dir, offsets,
-            row_count=row_count, parent=version - 1,
-            mode="cow", deltas=[],
-        )
-        return {"version": version, "row_count": row_count, "data_dir": data_dir}
-
-    def _merge_mor(
-        self, batch: DataFrame, evolved: T.StructType, offsets: dict,
-        meta: dict,
-    ) -> dict:
-        """Merge-on-read apply: append the deduped batch as a delta file
-        set (hash-clustered on the key, like the base); O(slice) write
-        cost regardless of table size. Winner resolution happens at read
-        time; compaction folds deltas into the base every
-        ``compact_threshold`` commits. ``meta`` is the SAME metadata
-        snapshot the caller derived the schema from — the commit slot is
-        meta["version"]+1 so a racing writer conflicts instead of having
-        its delta silently dropped from the list (r4 core review)."""
+        # append the batch as a delta file set, hash-clustered on the
+        # key like the base: O(slice) write cost regardless of table
+        # size; winner resolution happens at read time. The slot is
+        # base_meta["version"]+1, so a racing writer conflicts instead
+        # of having its delta silently dropped from the list (r4 core
+        # review).
         src = _conform(batch, evolved)
         delta_rows = (
             src.select(
@@ -822,20 +719,19 @@ class TargetTable:
                 (F.col("op") == F.lit("D")).alias(META_DELETED),
             )
         )
-        version = meta["version"] + 1
+        version = base_meta["version"] + 1
         delta_dir = f"delta-{version:06d}-{uuid.uuid4().hex[:8]}"
         out_path = os.path.join(self.path, delta_dir)
         delta_rows.repartition(self.n_buckets, *KEY_COLS).write.option(
             "compression", PARQUET_CODEC
         ).mode("overwrite").parquet(out_path)
-        deltas = meta.get("deltas", []) + [delta_dir]
+        deltas = base_meta.get("deltas", []) + [delta_dir]
         self._commit(
-            version, evolved, meta["data_dir"], offsets,
-            row_count=None, parent=version - 1,
-            mode="mor", deltas=deltas,
+            version, evolved, base_meta["data_dir"], offsets,
+            row_count=None, parent=version - 1, deltas=deltas,
         )
-        stats = {"version": version, "row_count": None, "data_dir": meta["data_dir"],
-                 "n_deltas": len(deltas)}
+        stats = {"version": version, "row_count": None,
+                 "data_dir": base_meta["data_dir"], "n_deltas": len(deltas)}
         if len(deltas) >= self.compact_threshold:
             try:
                 stats = self.compact()
@@ -850,11 +746,7 @@ class TargetTable:
         drop_tombstones: bool | None = None,
         allow_unordered_drop: bool = False,
     ) -> dict:
-        """Fold all deltas into a new base snapshot (MoR maintenance);
-        on a cow table, act as the tombstone VACUUM (full sorted rewrite
-        dropping ``_deleted`` rows — without it a delete-heavy cow table
-        carries its dead rows into every subsequent full rewrite
-        forever).
+        """Fold all deltas into a new base snapshot (MoR maintenance).
 
         ``drop_tombstones`` defaults to ``self.ordered_commits``:
         dropping a tombstone is only safe when nothing older than it can
@@ -867,7 +759,7 @@ class TargetTable:
         pass ``allow_unordered_drop=True`` only when the out-of-order
         source is decommissioned and no stale delivery can ever arrive.
 
-        An explicit ``drop_tombstones=True`` on a MoR table with zero
+        An explicit ``drop_tombstones=True`` on a table with zero
         pending deltas still rewrites the base (the vacuum request —
         base-resident tombstones have no other exit); the no-delta
         early-return applies only to the implicit maintenance call."""
@@ -883,16 +775,7 @@ class TargetTable:
                 "decommissioned."
             )
         meta = self.metadata()
-        table_mode = meta.get("mode", "cow")
-        if table_mode == "mor" and not meta.get("deltas") and not explicit_drop:
-            return {"version": meta["version"], "row_count": meta.get("row_count"),
-                    "data_dir": meta["data_dir"], "n_deltas": 0}
-        if table_mode == "cow" and not drop_tombstones:
-            # nothing to fold on a cow table; the only compaction work
-            # is the tombstone vacuum (cow merges retain tombstones so
-            # each MERGE keeps the row-level replay guard — maintenance
-            # reclaims them under the same ordered-commits argument the
-            # MoR drop uses, r4 core review)
+        if not meta.get("deltas") and not explicit_drop:
             return {"version": meta["version"], "row_count": meta.get("row_count"),
                     "data_dir": meta["data_dir"], "n_deltas": 0}
         schema = T.StructType.fromJson(meta["schema"])
@@ -929,8 +812,7 @@ class TargetTable:
         row_count = self._observed_live(obs, out_path)
         self._commit(
             version, schema, data_dir, meta.get("offsets", {}),
-            row_count=row_count, parent=version - 1,
-            mode=table_mode, deltas=[],
+            row_count=row_count, parent=version - 1, deltas=[],
         )
         return {"version": version, "row_count": row_count, "data_dir": data_dir,
                 "n_deltas": 0}
@@ -951,8 +833,8 @@ class TargetTable:
             ).count()
 
     def count_live(self) -> int:
-        """Exact live-row count (cheap in cow — committed metadata;
-        a winner-resolution scan in mor between compactions)."""
+        """Exact live-row count (committed metadata after init or a
+        compaction; a winner-resolution scan while deltas are pending)."""
         rc = self.metadata().get("row_count")
         if rc is None:
             return self.read().count()
@@ -967,29 +849,10 @@ class TargetTable:
         offsets: dict,
         row_count: int | None,
         parent: int | None,
-        mode: str = "cow",
         deltas: list[str] | None = None,
     ) -> None:
-        """Publish version ``version`` or raise :class:`CommitConflictError`.
-
-        Put-if-absent: the complete metadata is written to a unique temp
-        file and hard-linked into the slot ``v{version:06d}.json``.
-        ``os.link`` is atomic and fails if the slot exists, so the link
-        IS the commit point — a reader sees either no file or a finished
-        one, and of two writers for one slot exactly one wins. On an
-        object store the same contract is a conditional PUT
-        (``If-None-Match: *``). A filesystem without hard links makes
-        ``os.link`` raise a non-``FileExistsError`` ``OSError``, which
-        propagates: the commit fails loudly rather than degrading.
-
-        A slot can be empty because ``expire_snapshots`` freed it after
-        newer versions were published. A writer whose base is that old
-        links into it successfully, so after the link it checks for a
-        higher version; if one exists it removes its own link and
-        conflicts as stale, and ``current_version()`` never rewinds.
-        (A fresh commit that a racing writer builds on within that
-        link-then-list window conflicts too; the newer version already
-        carries its rows, and the idempotent retry re-applies them.)"""
+        """Publish version ``version`` or raise :class:`CommitConflictError`
+        (put-if-absent, ``versions.publish_version``)."""
         meta = {
             "version": version,
             "schema": schema.jsonValue(),
@@ -997,7 +860,9 @@ class TargetTable:
             "offsets": offsets,
             "row_count": row_count,
             "parent": parent,
-            "mode": mode,
+            # the only mode; recorded so an older engine reading this
+            # table takes its merge-on-read path
+            "mode": "mor",
             "deltas": deltas or [],
             # recorded so READERS can bucket-prune (read_keys) without
             # having to be constructed with the writer's n_buckets
@@ -1007,99 +872,19 @@ class TargetTable:
             # gates whether compaction may drop tombstones
             "ordered_commits": self.ordered_commits,
         }
-        mp = self._meta_path(version)
-        tmp = f"{mp}.{uuid.uuid4().hex}.tmp"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(meta, f, indent=1, sort_keys=True)
-            try:
-                os.link(tmp, mp)  # THE atomic commit point
-            except FileExistsError:
-                raise CommitConflictError(
-                    f"version {version} of {self.path} was committed by "
-                    f"another writer; re-read metadata and retry"
-                ) from None
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
-        if self.current_version() > version:
-            os.remove(mp)
-            raise CommitConflictError(
-                f"version {version} of {self.path} was already published "
-                f"and expired; this writer's base snapshot is stale"
-            )
+        publish_version(self.path, version, meta)
 
     # ---------------------------------------------------------- history
     def expire_snapshots(
         self, keep_last: int = 2, orphan_grace_secs: float | None = None
     ) -> None:
         """Drop metadata of all but the newest ``keep_last`` (>= 1)
-        snapshots, then delete any data/delta dirs no kept snapshot
-        references (MoR versions share the base and earlier deltas, so
-        removal is by reference count, exactly like Iceberg's
-        expire-snapshots + orphan-file cleanup) and any commit temp file
-        a crashed writer left behind.
-
-        An unreferenced dir or temp file younger than
-        ``orphan_grace_secs`` (default: the table's setting) is SKIPPED:
-        a concurrent writer stages its data dir and metadata temp before
-        committing, so a fresh "orphan" may be an in-flight merge —
-        deleting it would corrupt that commit."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+        snapshots, then delete the data/delta dirs and commit temps no
+        kept snapshot references (the rule is
+        ``versions.expire_versions``'s). ``orphan_grace_secs`` defaults to the table's
+        setting: a concurrent writer stages its data dir and metadata
+        temp before committing, so a fresh "orphan" may be an in-flight
+        merge."""
         if orphan_grace_secs is None:
             orphan_grace_secs = self.orphan_grace_secs
-        # a CONCURRENT expirer (replay loop expires per slice while a
-        # cron maintain_job --expire-keep runs) may remove version
-        # metadata between our listing and our access — losing the race
-        # is fine, crashing the replay run mid-backlog is not (r5
-        # review). But a KEPT version whose metadata vanished must NOT
-        # be treated as "references nothing": its dirs may be the live
-        # MoR base shared by newer snapshots, and sweeping them would
-        # delete live table data (r5 final review). Re-list and retry
-        # until one pass reads every kept snapshot consistently; if
-        # that never happens, drop only our planned metadata and SKIP
-        # the orphan sweep — the next expire picks the garbage up.
-        referenced: set | None = None
-        drop: list = []
-        for _attempt in range(5):
-            vs = self.versions()
-            drop, keep = vs[:-keep_last], vs[-keep_last:]
-            refs = set()
-            consistent = True
-            for v in keep:
-                try:
-                    m = self.metadata(v)
-                except FileNotFoundError:
-                    consistent = False  # racing expirer → re-list
-                    break
-                refs.add(m["data_dir"])
-                refs.update(m.get("deltas", []))
-            if consistent:
-                referenced = refs
-                break
-        for v in drop:
-            try:
-                os.remove(self._meta_path(v))
-            except FileNotFoundError:
-                pass
-        if referenced is None:
-            return
-        now = time.time()
-        for name in os.listdir(self.path):
-            if (name.startswith("v") and name.endswith(".tmp")) or (
-                (name.startswith("snap-") or name.startswith("delta-"))
-                and name not in referenced
-            ):
-                p = os.path.join(self.path, name)
-                try:
-                    if now - os.path.getmtime(p) < orphan_grace_secs:
-                        continue
-                    if os.path.isdir(p):
-                        shutil.rmtree(p, ignore_errors=True)
-                    else:
-                        os.remove(p)
-                except OSError:
-                    continue
+        expire_versions(self.path, keep_last, orphan_grace_secs)

@@ -14,8 +14,10 @@ and each refresh
    is semi-joined on the changed conv_ids BEFORE the assembly groupBy,
    so the read is O(drift), bucket-prunable on a keyed table),
 3. swaps their index rows (anti-join out stale rows ∪ fresh rows) into
-   a new ``data-v{N}`` dir with an atomic meta pointer swap (readers
-   never see a half-written index),
+   a new ``snap-{N}-*`` dir published as ``v{N}.json`` of the index
+   dir's version log (``target/versions.py``: one put-if-absent link, so
+   readers never see a half-written index and of two overlapping runs
+   the first to link wins — the other exits 1 with a conflict),
 4. probes the fresh rows against the updated index and reports the NEW
    near-dup pairs (exact-Jaccard verified; the verify assembles only
    candidate conversations).
@@ -47,8 +49,6 @@ import os
 import sys
 import uuid
 
-META_NAME = "_dedup_index_meta.json"
-
 
 def _docs_frame(turns):
     """Transcript turns → documents-shaped frame (doc_id, text)."""
@@ -75,11 +75,11 @@ def main() -> int:
                          "index's recorded version (falls back to a full "
                          "build when no index exists yet)")
     ap.add_argument("--sweep-grace-secs", type=float, default=300.0,
-                    help="a retired data-v* dir is only removed this many "
-                         "seconds after a sweep first marks it stale "
-                         "(protects readers mid-scan of the superseded "
-                         "version and an overlapping run's not-yet-swapped "
-                         "dir); <=0 removes immediately, no protection")
+                    help="after a publish, an unreferenced snap-* dir (an "
+                         "index older than the last two, or a crashed or "
+                         "conflicting run's build) is removed once its "
+                         "version slot is published and it is older than "
+                         "this many seconds; <=0 removes it at once")
     ap.add_argument("--pairs-out", default=None,
                     help="also write the new near-dup pairs parquet here")
     args = ap.parse_args()
@@ -97,14 +97,14 @@ def main() -> int:
         minhash_band_index,
         probe_band_index,
     )
-    from etl_reconciliate_spark.target.maintenance import (
-        claim_build_dir,
-        measure_changed,
-        release_build_claim,
-        swap_meta_pointer,
-        sweep_stale_data_dirs,
-    )
     from etl_reconciliate_spark.target.table import TargetTable
+    from etl_reconciliate_spark.target.versions import (
+        CommitConflictError,
+        expire_versions,
+        list_versions,
+        publish_version,
+        read_version,
+    )
 
     tbl = TargetTable(spark, args.target)
     if not tbl.exists():
@@ -113,11 +113,9 @@ def main() -> int:
     to_version = tbl.current_version()
     params = {"k": args.k, "bands": args.bands,
               "rows_per_band": args.rows_per_band}
-    meta_path = os.path.join(args.index_dir, META_NAME)
-    prior_meta = None
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            prior_meta = json.load(f)
+    published = list_versions(args.index_dir)
+    base = published[-1] if published else -1
+    prior_meta = read_version(args.index_dir, base) if published else None
     meta = None
     expired = False
     remeasured = False
@@ -128,11 +126,10 @@ def main() -> int:
                               "k/bands/rows_per_band; rebuild without "
                               "--refresh"}))
             return 1
-        if measure_changed(meta, SIGNATURE_VERSION):
-            # tokenizer OR hash family changed since this index was
-            # built (SIGNATURE_VERSION folds both — a hash-family bump
-            # alone de-collides every band): full rebuild, rationale in
-            # maintenance.measure_changed (r5 batch review ×2).
+        if meta.get("measure_version") != SIGNATURE_VERSION:
+            # built under another tokenizer OR hash family (a hash-family
+            # bump alone de-collides every band): full rebuild, see
+            # textstats.TOKENIZER_VERSION
             remeasured = True
             meta = None
     if meta is not None:
@@ -146,27 +143,11 @@ def main() -> int:
 
     out = {"to_version": to_version, **params}
     os.makedirs(args.index_dir, exist_ok=True)
-    # start-of-run sweep (r5 review): a crash-looping build otherwise
-    # leaves one uniquely-named corpus-sized orphan PER attempt, only
-    # collected after two later SUCCESSFUL runs — sweeping up front
-    # marks the previous attempt's orphan and reaps the one before, so
-    # the loop carries at most ~two partial dirs regardless of length
-    sweep_stale_data_dirs(args.index_dir, meta_path,
-                          grace_secs=args.sweep_grace_secs)
-    # unique suffix (r5 jobs review): a REBUILD while the table version
-    # is unchanged would otherwise mode('overwrite') the very dir the
-    # live meta points at — destroying the index in place before the
-    # swap, so a crash mid-write strands the meta on a corrupt dir
-    data_dir = os.path.join(
-        args.index_dir,
-        f"data-v{to_version:06d}-{uuid.uuid4().hex[:8]}",
-    )
-    # hold a live flock claim on the dir for the whole build so no
-    # competing run's sweep can mark/reap it mid-write, however long the
-    # build takes relative to the sweep grace (r5 review); released
-    # after the pointer swap makes the dir live (keep-set protection)
-    # and on the no-op path that never writes it
-    build_claim = claim_build_dir(data_dir)
+    # the slot this run publishes, named into its build dir: expiry
+    # never collects a dir whose slot is not yet published. The random
+    # suffix keeps an overlapping run on the same base out of this dir.
+    data_name = f"snap-{base + 1:06d}-{uuid.uuid4().hex[:8]}"
+    data_dir = os.path.join(args.index_dir, data_name)
     new_pairs = None
 
     def build_index(docs):
@@ -236,7 +217,6 @@ def main() -> int:
                 [], empty_schema
             ).write.mode("overwrite").parquet(args.pairs_out)
             out["pairs_path"] = args.pairs_out
-        release_build_claim(build_claim, data_dir)  # never written
         print(json.dumps(out))
         return 0
     else:
@@ -260,7 +240,9 @@ def main() -> int:
         )
         fresh = build_index(_docs_frame(delta_turns)).localCheckpoint()
         out["changed_docs"] = changed.count()
-        stale = spark.read.parquet(meta["data_dir"])
+        stale = spark.read.parquet(
+            os.path.join(args.index_dir, meta["data_dir"])
+        )
         # swap: every changed doc's rows leave (covers deletes — a
         # vanished conversation simply contributes no fresh rows)
         idx = stale.join(changed, "doc_id", "left_anti").unionByName(fresh)
@@ -292,20 +274,17 @@ def main() -> int:
             out["pairs_path"] = args.pairs_out
         else:
             out["new_pairs"] = new_pairs.count()
-    # atomic pointer swap + swap-time retirement stamp on the dir this
-    # swap supersedes (the true grace clock; see target.maintenance)
-    swap_meta_pointer(meta_path, {
-        "table_version": to_version, **params,
-        "data_dir": data_dir, "index_rows": rows,
-        "measure_version": SIGNATURE_VERSION,
-    })
-    release_build_claim(build_claim, data_dir)  # live now — meta-kept
-    # sweep data-v* dirs the fresh meta no longer points at — the prior
-    # meta's dir, plus any orphan a crash left between a write and its
-    # pointer swap (those accumulate corpus-sized copies); deferred-reap
-    # with a grace window, see target.maintenance.sweep_stale_data_dirs
-    sweep_stale_data_dirs(args.index_dir, meta_path, data_dir,
-                          grace_secs=args.sweep_grace_secs)
+    try:
+        publish_version(args.index_dir, base + 1, {
+            "table_version": to_version, **params,
+            "data_dir": data_name, "index_rows": rows,
+            "measure_version": SIGNATURE_VERSION,
+        })
+    except CommitConflictError as e:
+        print(json.dumps({"error": f"publish conflict: {e}"}))
+        return 1
+    expire_versions(args.index_dir, keep_last=2,
+                    orphan_grace_secs=args.sweep_grace_secs)
     print(json.dumps(out))
     return 0
 

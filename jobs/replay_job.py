@@ -32,17 +32,8 @@ def main() -> int:
                     help="approx text payload bytes for generated events")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--no-lineage", action="store_true")
-    # mor default: cow rewrites the WHOLE table per slice — O(table)
-    # write amplification that at 10^10 events makes every slice cost as
-    # much as a full rebuild. MoR's O(slice) delta append + periodic
-    # compaction is the only viable default at scale (round-1 verdict
-    # item 6); cow remains for small targets / infrequent batches.
-    ap.add_argument("--target-mode", choices=["cow", "mor"], default="mor",
-                    help="merge-on-read (delta append + compaction; the "
-                         "scale path, default) or copy-on-write "
-                         "(rewrite per slice)")
     ap.add_argument("--compact-every", type=int, default=8,
-                    help="mor: fold deltas into the base every N commits")
+                    help="fold deltas into the base every N commits")
     ap.add_argument("--expire-keep", type=int, default=2,
                     help="keep the newest N snapshots after each slice "
                          "(0 disables expiry). Raise this — or disable — "
@@ -79,7 +70,6 @@ def main() -> int:
         slice_size=args.slice_size,
         n_partitions=args.partitions,
         collect_lineage=not args.no_lineage,
-        target_mode=args.target_mode,
         compact_threshold=args.compact_every,
         max_slices=args.max_slices,
         expire_keep=args.expire_keep,

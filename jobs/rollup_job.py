@@ -26,10 +26,13 @@ keys the rollup's recorded FROM-version snapshot is probed (semi-join
 on the changed keys — O(changed)) to dirty the PREIMAGE cells too, so
 a turn whose ``ts``/``role`` itself changed vacates its old cell.
 
-The refreshed rollup is written to a fresh ``data-v{N}`` dir and the
-meta pointer swapped afterwards — a reader following the meta never
-sees a half-written refresh. Prints one JSON line with mode,
-from/to versions, dirty-cell count and rollup row count.
+The rollup dir is a version log (``target/versions.py``): each run
+builds into a fresh ``snap-{N}-*`` dir and publishes ``v{N}.json`` with
+one put-if-absent link, so a reader of the highest version never sees a
+half-written refresh, and of two overlapping runs the first to link
+wins (the other exits 1 with a conflict). The last two versions stay
+readable. Prints one JSON line with mode, from/to versions, dirty-cell
+count and rollup row count.
 """
 
 from __future__ import annotations
@@ -39,8 +42,6 @@ import json
 import os
 import sys
 import uuid
-
-META_NAME = "_rollup_meta.json"
 
 
 def _events_frame(tbl, key_cols, version=None):
@@ -66,11 +67,11 @@ def main() -> int:
                          "rollup's recorded version (falls back to a full "
                          "build when no rollup exists yet)")
     ap.add_argument("--sweep-grace-secs", type=float, default=300.0,
-                    help="a retired data-v* dir is only removed this many "
-                         "seconds after a sweep first marks it stale "
-                         "(protects readers mid-scan of the superseded "
-                         "version and an overlapping run's not-yet-swapped "
-                         "dir); <=0 removes immediately, no protection")
+                    help="after a publish, an unreferenced snap-* dir (an "
+                         "output older than the last two, or a crashed or "
+                         "conflicting run's build) is removed once its "
+                         "version slot is published and it is older than "
+                         "this many seconds; <=0 removes it at once")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -92,20 +93,18 @@ def main() -> int:
         print(json.dumps({"error": f"no table at {args.target}"}))
         return 1
     to_version = tbl.current_version()
-    meta_path = os.path.join(args.rollup_dir, META_NAME)
-    prior_meta = None  # whatever exists on disk — used for cleanup
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            prior_meta = json.load(f)
     from etl_reconciliate_spark.operators.textstats import TOKENIZER_VERSION
-    from etl_reconciliate_spark.target.maintenance import (
-        claim_build_dir,
-        measure_changed,
-        release_build_claim,
-        swap_meta_pointer,
-        sweep_stale_data_dirs,
+    from etl_reconciliate_spark.target.versions import (
+        CommitConflictError,
+        expire_versions,
+        list_versions,
+        publish_version,
+        read_version,
     )
 
+    published = list_versions(args.rollup_dir)
+    base = published[-1] if published else -1
+    prior_meta = read_version(args.rollup_dir, base) if published else None
     meta = None  # the refresh base, only when refreshing is possible
     remeasured = False
     if args.refresh and prior_meta is not None:
@@ -114,12 +113,9 @@ def main() -> int:
             print(json.dumps({"error": "existing rollup has different "
                               "grains/key_cols; rebuild without --refresh"}))
             return 1
-        if measure_changed(meta, TOKENIZER_VERSION):
-            # the tokenizer the n_tokens measure derives from changed
-            # semantics since this rollup was built (token counts don't
-            # depend on the hash family, so TOKENIZER_VERSION alone is
-            # the right key here): full rebuild, rationale in
-            # maintenance.measure_changed (r5 batch review).
+        if meta.get("measure_version") != TOKENIZER_VERSION:
+            # built under another tokenizer (token counts don't depend on
+            # the hash family): full rebuild, see textstats.TOKENIZER_VERSION
             remeasured = True
             meta = None
 
@@ -128,28 +124,11 @@ def main() -> int:
     if remeasured:
         out["mode"] = "rebuild_measure_changed"
     os.makedirs(args.rollup_dir, exist_ok=True)
-    # start-of-run sweep (r5 review): a crash-looping build otherwise
-    # leaves one uniquely-named corpus-sized orphan PER attempt, only
-    # collected after two later SUCCESSFUL runs — sweeping up front
-    # marks the previous attempt's orphan and reaps the one before, so
-    # the loop carries at most ~two partial dirs regardless of length
-    sweep_stale_data_dirs(args.rollup_dir, meta_path,
-                          grace_secs=args.sweep_grace_secs)
-    # unique suffix (r5 jobs review): a REBUILD while the table version
-    # is unchanged would otherwise mode('overwrite') the very dir the
-    # live meta points at — deleting its files before the swap, so a
-    # crash mid-write (or any concurrent reader) breaks the advertised
-    # write-then-swap atomicity
-    data_dir = os.path.join(
-        args.rollup_dir,
-        f"data-v{to_version:06d}-{uuid.uuid4().hex[:8]}",
-    )
-    # hold a live flock claim on the dir for the whole build so no
-    # competing run's sweep can mark/reap it mid-write, however long the
-    # build takes relative to the sweep grace (r5 review); released
-    # after the pointer swap makes the dir live (keep-set protection)
-    # and on the no-op path that never writes it
-    build_claim = claim_build_dir(data_dir)
+    # the slot this run publishes, named into its build dir: expiry
+    # never collects a dir whose slot is not yet published. The random
+    # suffix keeps an overlapping run on the same base out of this dir.
+    data_name = f"snap-{base + 1:06d}-{uuid.uuid4().hex[:8]}"
+    data_dir = os.path.join(args.rollup_dir, data_name)
 
     if meta is not None:
         from_version = meta["table_version"]
@@ -182,7 +161,6 @@ def main() -> int:
     elif meta["table_version"] == to_version:
         out["dirty_cells"] = 0
         out["rollup_rows"] = meta["rollup_rows"]
-        release_build_claim(build_claim, data_dir)  # never written
         print(json.dumps(out))
         return 0
     else:
@@ -207,7 +185,9 @@ def main() -> int:
         )
         dirty = post.unionByName(pre).distinct()
         out["dirty_cells"] = dirty.count()
-        stale = spark.read.parquet(meta["data_dir"])
+        stale = spark.read.parquet(
+            os.path.join(args.rollup_dir, meta["data_dir"])
+        )
         refreshed = refresh_rollup(
             _events_frame(tbl, key_cols, version=to_version), stale, dirty,
             grains=grains, key_cols=key_cols, value_col="n_tokens",
@@ -217,20 +197,17 @@ def main() -> int:
 
     rows = spark.read.parquet(data_dir).count()
     out["rollup_rows"] = rows
-    # atomic pointer swap + swap-time retirement stamp on the dir this
-    # swap supersedes (the true grace clock; see target.maintenance)
-    swap_meta_pointer(meta_path, {
-        "table_version": to_version, "grains": list(grains),
-        "key_cols": list(key_cols), "data_dir": data_dir,
-        "rollup_rows": rows, "measure_version": TOKENIZER_VERSION,
-    })
-    release_build_claim(build_claim, data_dir)  # live now — meta-kept
-    # sweep data-v* dirs the fresh meta no longer points at — the prior
-    # meta's dir, plus any orphan a crash left between a write and its
-    # pointer swap (r5 review: those accumulate silently); deferred-reap
-    # with a grace window, see target.maintenance.sweep_stale_data_dirs
-    sweep_stale_data_dirs(args.rollup_dir, meta_path, data_dir,
-                          grace_secs=args.sweep_grace_secs)
+    try:
+        publish_version(args.rollup_dir, base + 1, {
+            "table_version": to_version, "grains": list(grains),
+            "key_cols": list(key_cols), "data_dir": data_name,
+            "rollup_rows": rows, "measure_version": TOKENIZER_VERSION,
+        })
+    except CommitConflictError as e:
+        print(json.dumps({"error": f"publish conflict: {e}"}))
+        return 1
+    expire_versions(args.rollup_dir, keep_last=2,
+                    orphan_grace_secs=args.sweep_grace_secs)
     print(json.dumps(out))
     return 0
 

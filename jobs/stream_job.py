@@ -28,7 +28,6 @@ def main() -> int:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
-    ap.add_argument("--target-mode", choices=["cow", "mor"], default="mor")
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument("--dedup-within-watermark", default=None,
                     help="e.g. '10 minutes': drop re-delivered LSNs in "
@@ -53,7 +52,6 @@ def main() -> int:
         args.checkpoint,
         n_partitions=args.partitions,
         max_files_per_trigger=args.max_files_per_trigger,
-        target_mode=args.target_mode,
         compact_threshold=args.compact_every,
         dedup_within_watermark=args.dedup_within_watermark,
         changelog_format=args.changelog_format,

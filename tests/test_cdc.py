@@ -190,7 +190,7 @@ def test_reconcile_job_changelog_source(
         sys.path.pop(0)
 
     tgt = str(tmp_path / "target")
-    replay(spark, changelog_path, tgt, slice_size=6000, target_mode="mor")
+    replay(spark, changelog_path, tgt, slice_size=6000)
     monkeypatch.setattr(sys, "argv", [
         "reconcile_job.py", "--source", changelog_path,
         "--source-kind", "changelog", "--target", tgt,
@@ -215,7 +215,7 @@ def test_replay_with_empty_slices(spark, tmp_path):
     p = str(tmp_path / "sparse_log")
     write_changelog(spark, df, p)
     tgt = str(tmp_path / "t")
-    stats = replay(spark, p, tgt, slice_size=5_000, target_mode="mor")
+    stats = replay(spark, p, tgt, slice_size=5_000)
     assert stats["slices"] > 20  # plenty of empty slices were planned
     assert stats["events"] == len(df)
     want = fold_changelog(df)

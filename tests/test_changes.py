@@ -32,7 +32,7 @@ def _by_key(df):
 
 @pytest.fixture()
 def table(spark, tmp_path):
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2,
                     compact_threshold=100)
     t.init(SCHEMA)
     t.merge_apply(

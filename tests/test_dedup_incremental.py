@@ -15,6 +15,7 @@ from etl_reconciliate_spark.operators.dedupe_docs import (
     minhash_band_index,
 )
 from etl_reconciliate_spark.target.table import TargetTable
+from etl_reconciliate_spark.target.versions import list_versions, read_version
 
 import os
 
@@ -82,17 +83,20 @@ def _run(monkeypatch, capsys, *argv):
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
+def _index_dir(idx_dir):
+    return os.path.join(idx_dir, read_version(idx_dir)["data_dir"])
+
+
 def _index_docs(spark, idx_dir):
-    meta = json.load(open(f"{idx_dir}/{dedup_index_job.META_NAME}"))
     return {
         r.doc_id
-        for r in spark.read.parquet(meta["data_dir"]).select("doc_id")
+        for r in spark.read.parquet(_index_dir(idx_dir)).select("doc_id")
         .distinct().collect()
     }
 
 
 def test_dedup_index_job_cycle(spark, tmp_path, capsys, monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),
@@ -123,10 +127,9 @@ def test_dedup_index_job_cycle(spark, tmp_path, capsys, monkeypatch):
     assert _index_docs(spark, idir) == {"c1", "c3"}  # c2 vacated
 
     # refresh result must equal a from-scratch rebuild (band-row level)
-    meta = json.load(open(f"{idir}/{dedup_index_job.META_NAME}"))
     refreshed = {
         (r.doc_id, r.band, r.bh)
-        for r in spark.read.parquet(meta["data_dir"]).collect()
+        for r in spark.read.parquet(_index_dir(idir)).collect()
     }
     rebuilt = {
         (r.doc_id, r.band, r.bh)
@@ -141,11 +144,9 @@ def test_dedup_index_job_pairs_out_and_orphan_sweep(
     spark, tmp_path, capsys, monkeypatch
 ):
     """--pairs-out on a BUILD writes the full-corpus pair set (not a
-    stale file from a prior refresh), and the pointer swap sweeps any
-    orphaned data-v* dir a crash left behind."""
-    import os
-
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    stale file from a prior refresh), and the publish sweeps an orphaned
+    snap-* dir a crashed run left behind for the slot it publishes."""
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),
@@ -155,7 +156,7 @@ def test_dedup_index_job_pairs_out_and_orphan_sweep(
     idir = str(tmp_path / "idx")
     pdir = str(tmp_path / "pairs")
     # simulate a crash orphan from a previous attempted run
-    os.makedirs(os.path.join(idir, "data-v999999"))
+    os.makedirs(os.path.join(idir, "snap-000000-dead"))
     built = _run(monkeypatch, capsys, "--target", tbl.path,
                  "--index-dir", idir, "--pairs-out", pdir,
                  "--sweep-grace-secs", "0")
@@ -163,7 +164,8 @@ def test_dedup_index_job_pairs_out_and_orphan_sweep(
     assert built["new_pairs"] == 1  # (c1, c2) are near-dups
     pairs = {(r.doc_a, r.doc_b) for r in spark.read.parquet(pdir).collect()}
     assert pairs == {("c1", "c2")}
-    assert not os.path.exists(os.path.join(idir, "data-v999999"))
+    assert not os.path.exists(os.path.join(idir, "snap-000000-dead"))
+    assert list_versions(idir) == [0]
 
 
 def test_dedup_index_job_measure_version_mismatch_rebuilds(
@@ -177,15 +179,15 @@ def test_dedup_index_job_measure_version_mismatch_rebuilds(
     --refresh degrades to a full rebuild and restamps the version.
     Also covers the legacy int-stamped meta (pre-SIGNATURE_VERSION
     indexes carried TOKENIZER_VERSION): any non-equal stamp rebuilds."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),
     ], BATCH), {"lsn_hi": 1})
     idir = str(tmp_path / "idx")
     _run(monkeypatch, capsys, "--target", tbl.path, "--index-dir", idir)
-    meta_path = f"{idir}/{dedup_index_job.META_NAME}"
-    meta = json.load(open(meta_path))
+    meta_path = f"{idir}/v{list_versions(idir)[-1]:06d}.json"
+    meta = read_version(idir)
     from etl_reconciliate_spark.operators.dedupe_docs import (
         SIGNATURE_VERSION,
     )

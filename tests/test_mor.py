@@ -56,14 +56,16 @@ def assert_matches_oracle(spark, target_path, changelog_df):
 
 def test_mor_replay_matches_oracle(spark, changelog_df, changelog_path, tmp_path):
     tgt = str(tmp_path / "t")
-    stats = replay(
+    replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=100,
+        slice_size=3000, compact_threshold=100,
     )
-    assert stats["mode"] == "mor"
     # no compaction happened: every commit was a pure delta append
     assert TargetTable(spark, tgt).metadata()["deltas"]
     assert_matches_oracle(spark, tgt, changelog_df)
+    # merge-on-read is the one table mode: copy-on-write is refused
+    with pytest.raises(ValueError, match="cow"):
+        replay(spark, changelog_path, tgt, target_mode="cow")
 
 
 def test_mor_compaction_folds_and_preserves_state(
@@ -72,7 +74,7 @@ def test_mor_compaction_folds_and_preserves_state(
     tgt = str(tmp_path / "t")
     replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=2,
+        slice_size=3000, compact_threshold=2,
     )
     table = TargetTable(spark, tgt)
     # threshold 2 with 4 slices → compactions fired; final state identical
@@ -90,13 +92,13 @@ def test_mor_kill_resume_and_idempotence(spark, changelog_df, changelog_path, tm
     tgt = str(tmp_path / "t")
     s1 = replay(
         spark, changelog_path, tgt,
-        slice_size=2500, max_slices=2, target_mode="mor", compact_threshold=3,
+        slice_size=2500, max_slices=2, compact_threshold=3,
     )
     assert s1["slices"] == 2
-    s2 = replay(spark, changelog_path, tgt, slice_size=2500, target_mode="mor")
+    s2 = replay(spark, changelog_path, tgt, slice_size=2500)
     assert s1["events"] + s2["events"] == len(changelog_df)
     # replaying again applies nothing
-    s3 = replay(spark, changelog_path, tgt, slice_size=2500, target_mode="mor")
+    s3 = replay(spark, changelog_path, tgt, slice_size=2500)
     assert s3["slices"] == 0
     assert_matches_oracle(spark, tgt, changelog_df)
 
@@ -106,11 +108,11 @@ def test_mor_schema_evolution(spark, changelog_df, changelog_path, tmp_path):
     tgt = str(tmp_path / "t")
     replay(
         spark, changelog_path, tgt,
-        slice_size=epoch, max_slices=1, target_mode="mor",
+        slice_size=epoch, max_slices=1,
     )
     table = TargetTable(spark, tgt)
     assert "tool" not in table.schema().fieldNames()
-    replay(spark, changelog_path, tgt, slice_size=N, target_mode="mor")
+    replay(spark, changelog_path, tgt, slice_size=N)
     table = TargetTable(spark, tgt)
     assert "tool" in table.schema().fieldNames()
     assert_matches_oracle(spark, tgt, changelog_df)
@@ -122,7 +124,7 @@ def test_mor_expire_keeps_shared_deltas(spark, changelog_df, changelog_path, tmp
     tgt = str(tmp_path / "t")
     replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=100,
+        slice_size=3000, compact_threshold=100,
         expire_keep=0,  # keep all, then expire manually
     )
     table = TargetTable(spark, tgt)
@@ -202,7 +204,7 @@ def test_spark_datagen_replay_end_to_end(spark, tmp_path):
     log = str(tmp_path / "log")
     tgt = str(tmp_path / "t")
     write_changelog_spark(spark, log, 30_000, seed=8, block=8_000, text_len=64)
-    stats = replay(spark, log, tgt, slice_size=10_000, target_mode="mor",
+    stats = replay(spark, log, tgt, slice_size=10_000,
                    compact_threshold=2)
     pdf = gen_changelog_spark(spark, 30_000, seed=8, block=8_000, text_len=64).toPandas()
     want = fold_changelog(pdf)
@@ -233,13 +235,15 @@ def test_orphan_delta_invisible_and_cleaned(spark, changelog_df, changelog_path,
     import shutil as sh
 
     tgt = str(tmp_path / "t")
-    replay(spark, changelog_path, tgt, slice_size=N, target_mode="mor")
+    replay(spark, changelog_path, tgt, slice_size=N)
     table = TargetTable(spark, tgt)
     before = table.read().count()
 
     # fabricate the crash artifact: a data dir written but never committed
     src_dir = os.path.join(tgt, table.metadata()["data_dir"])
-    orphan = os.path.join(tgt, "delta-999999-deadbeef")
+    # tagged with a published slot: a writer that lost it, not one
+    # that may still link it
+    orphan = os.path.join(tgt, f"delta-{table.current_version():06d}-deadbeef")
     sh.copytree(src_dir, orphan)
 
     assert table.read().count() == before  # invisible
@@ -262,7 +266,7 @@ def test_compaction_sorts_buckets_by_key(spark, tmp_path):
 
     from etl_reconciliate_spark.target.table import TargetTable
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2,
                     compact_threshold=100)
     t.init(T.StructType([
         T.StructField("conv_id", T.StringType()),

@@ -211,7 +211,7 @@ def test_reconcile_incremental_from_read_changes(spark, tmp_path):
     from etl_reconciliate_spark.target.table import TargetTable
 
     ts = datetime.datetime(2026, 1, 1)
-    t = TargetTable(spark, str(tmp_path / "tbl"), mode="mor")
+    t = TargetTable(spark, str(tmp_path / "tbl"))
     t.init(TRANSCRIPTS_SCHEMA)
     ev1 = spark.createDataFrame(
         [
@@ -318,7 +318,7 @@ def test_reconcile_job_expired_since_falls_back_to_full(spark, tmp_path,
         sys.path.pop(0)
 
     ts = datetime.datetime(2026, 1, 1)
-    t = TargetTable(spark, str(tmp_path / "tbl"), mode="mor")
+    t = TargetTable(spark, str(tmp_path / "tbl"))
     t.init(TRANSCRIPTS_SCHEMA)
     for lsn, conv, txt in ((1, "a", "one"), (2, "b", "two"), (3, "c", "three")):
         t.merge_apply(

@@ -3,12 +3,15 @@ from the table's CDC-out, preimage-cell vacation, no-op fast path."""
 
 import datetime
 import json
+import os
 import sys
 
 import pytest
 from pyspark.sql import types as T
 
+from etl_reconciliate_spark.target import versions
 from etl_reconciliate_spark.target.table import TargetTable
+from etl_reconciliate_spark.target.versions import list_versions, read_version
 
 sys.path.insert(0, "/root/repo/jobs")
 try:
@@ -41,16 +44,17 @@ def _run(monkeypatch, capsys, *argv):
 
 
 def _rollup_rows(spark, rollup_dir):
-    meta = json.load(open(f"{rollup_dir}/{rollup_job.META_NAME}"))
+    meta = read_version(rollup_dir)
     return {
         (r["grain"], r["bucket"], r["role"]): (
             r["n_events"], r["sum_value"], r["min_value"], r["max_value"])
-        for r in spark.read.parquet(meta["data_dir"]).collect()
+        for r in spark.read.parquet(
+            os.path.join(rollup_dir, meta["data_dir"])).collect()
     }
 
 
 def test_rollup_build_refresh_cycle(spark, tmp_path, capsys, monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", "one two three", _ts(0)),
@@ -94,7 +98,7 @@ def test_rollup_build_refresh_cycle(spark, tmp_path, capsys, monkeypatch):
 
 def test_rollup_refresh_grain_mismatch_rejected(spark, tmp_path, capsys,
                                                 monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello", _ts(0))], BATCH), {"lsn_hi": 1})
@@ -114,7 +118,7 @@ def test_rollup_refresh_expired_base_rebuilds(spark, tmp_path, capsys,
     """When expire_snapshots removed the rollup's recorded snapshot,
     --refresh degrades to a full rebuild with a JSON line, not a
     traceback (code-review r4)."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello there", _ts(0))], BATCH),
@@ -146,7 +150,7 @@ def test_rollup_refresh_measure_version_mismatch_rebuilds(
     counts next to untouched old-tokenizer cells, breaking the
     refresh == rebuild guarantee. --refresh degrades to a full rebuild
     (r5 batch review)."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello there", _ts(0))], BATCH),
@@ -154,8 +158,8 @@ def test_rollup_refresh_measure_version_mismatch_rebuilds(
     rdir = str(tmp_path / "rollup")
     _run(monkeypatch, capsys, "--target", tbl.path, "--rollup-dir", rdir)
     # simulate a rollup persisted by an older engine build
-    meta_path = f"{rdir}/{rollup_job.META_NAME}"
-    meta = json.load(open(meta_path))
+    meta_path = f"{rdir}/v{list_versions(rdir)[-1]:06d}.json"
+    meta = read_version(rdir)
     meta["measure_version"] = meta.get("measure_version", 0) - 1
     with open(meta_path, "w") as f:
         json.dump(meta, f)
@@ -177,25 +181,65 @@ def test_rollup_refresh_measure_version_mismatch_rebuilds(
 
 def test_rollup_rebuild_cleans_previous_data_dir(spark, tmp_path, capsys,
                                                  monkeypatch):
-    """A rebuild over an existing rollup must remove the superseded
-    data-v{N} dir, not orphan it (code-review r4)."""
-    import os
-
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    """A rebuild over an existing rollup keeps the superseded snap-* dir
+    readable for one more publish, then removes it instead of orphaning
+    it (code-review r4)."""
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello", _ts(0))], BATCH), {"lsn_hi": 1})
     rdir = str(tmp_path / "rollup")
     _run(monkeypatch, capsys, "--target", tbl.path, "--rollup-dir", rdir)
-    old_meta = json.load(open(f"{rdir}/{rollup_job.META_NAME}"))
+    old_dir = os.path.join(rdir, read_version(rdir)["data_dir"])
     tbl.merge_apply(spark.createDataFrame(
         [(2, "I", "c2", 0, "user", "bye", _ts(1))], BATCH), {"lsn_hi": 2})
     # rebuild WITHOUT --refresh (e.g. to change grains); grace 0 so the
-    # sweep is observable in-test (the default protects overlapping
-    # runs' young dirs)
-    rebuilt = _run(monkeypatch, capsys, "--target", tbl.path,
-                   "--rollup-dir", rdir, "--grains", "minute,hour",
-                   "--sweep-grace-secs", "0")
+    # expiry is observable in-test (the default protects young dirs)
+    rebuild = ("--target", tbl.path, "--rollup-dir", rdir,
+               "--grains", "minute,hour", "--sweep-grace-secs", "0")
+    rebuilt = _run(monkeypatch, capsys, *rebuild)
     assert rebuilt["mode"] == "rebuild"
-    assert not os.path.exists(old_meta["data_dir"])
+    assert os.path.isdir(old_dir)  # superseded, still readable
+    assert _run(monkeypatch, capsys, *rebuild)["mode"] == "rebuild"
+    assert not os.path.exists(old_dir)
+    assert list_versions(rdir) == [1, 2]
+    assert len([n for n in os.listdir(rdir) if n.startswith("snap-")]) == 2
     assert _rollup_rows(spark, rdir)  # new rollup readable
+
+
+def test_rollup_overlapping_runs_first_linker_wins(spark, tmp_path, capsys,
+                                                   monkeypatch):
+    """Two rollup runs on one base both build slot 0. The one that links
+    second exits 1 with a conflict, and the winner's output is intact."""
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    tbl.init(SCHEMA)
+    tbl.merge_apply(spark.createDataFrame(
+        [(1, "I", "c1", 0, "user", "hello there", _ts(0))], BATCH),
+        {"lsn_hi": 1})
+    rdir = str(tmp_path / "rollup")
+    argv = ["rollup_job.py", "--target", tbl.path, "--rollup-dir", rdir,
+            "--sweep-grace-secs", "0"]
+    real_publish = versions.publish_version
+    state = {"winner": None}
+
+    def overlapped(root, version, meta):
+        # the first run has built its output; the second runs to
+        # completion on the same base before the first one links
+        if state["winner"] is None:
+            state["winner"] = "pending"
+            assert rollup_job.main() == 0
+            state["winner"] = read_version(rdir)
+        return real_publish(root, version, meta)
+
+    monkeypatch.setattr(versions, "publish_version", overlapped)
+    monkeypatch.setattr(sys, "argv", argv)
+    assert rollup_job.main() == 1
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert json.loads(lines[0])["mode"] == "build"  # the winner
+    assert "conflict" in json.loads(lines[-1])["error"]
+
+    assert list_versions(rdir) == [0]
+    assert read_version(rdir) == state["winner"]
+    win_dir = os.path.join(rdir, state["winner"]["data_dir"])
+    assert spark.read.parquet(win_dir).count() == (
+        state["winner"]["rollup_rows"])

@@ -40,7 +40,7 @@ def test_stream_backlog_drain_matches_oracle(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stats = replay_stream(
         spark, log, tgt, ckpt,
-        max_files_per_trigger=8, target_mode="mor", compact_threshold=3,
+        max_files_per_trigger=8, compact_threshold=3,
     )
     assert stats["batches"] >= 2  # maxFilesPerTrigger forced multiple batches
     _assert_state(spark, tgt, df)
@@ -115,7 +115,7 @@ def test_stream_out_of_order_delete_not_resurrected(spark, tmp_path):
     # worst case — the tombstone is compacted before lsn 15 arrives
     stats = replay_stream(
         spark, log, str(tmp_path / "tbl"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, target_mode="mor", compact_threshold=1,
+        max_files_per_trigger=1, compact_threshold=1,
     )
     assert stats["batches"] == 3
     assert TargetTable(spark, str(tmp_path / "tbl")).read().count() == 0

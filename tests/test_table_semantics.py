@@ -9,6 +9,7 @@ import time
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from etl_reconciliate_spark.target import versions
 from etl_reconciliate_spark.target.table import (
     CommitConflictError,
     TargetTable,
@@ -33,7 +34,7 @@ def _batch(spark, rows, with_tool=False):
 def test_time_travel_uses_pinned_schema(spark, tmp_path):
     """A version pinned BEFORE a schema evolution must not show the
     late-added column (round-1 verdict item 7)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "hello")]), {"lsn_hi": 1})
     v_pre = t.current_version()
@@ -51,7 +52,7 @@ def test_commit_conflict_and_stale_takeover(spark, tmp_path):
     """A PUBLISHED next slot is a conflict for any writer still targeting
     it; a crashed writer leaves only aged temp litter, which blocks
     nothing and is reaped by expire_snapshots."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -62,7 +63,7 @@ def test_commit_conflict_and_stale_takeover(spark, tmp_path):
     # a second writer still targeting that slot conflicts
     with pytest.raises(CommitConflictError):
         t._commit(nxt, SCHEMA, t.metadata()["data_dir"], {},
-                  row_count=0, parent=nxt - 1, mode="mor", deltas=[])
+                  row_count=0, parent=nxt - 1, deltas=[])
     assert t.current_version() == nxt
     assert t.metadata(nxt)["offsets"] == {"lsn_hi": 2}  # winner intact
 
@@ -86,7 +87,7 @@ def test_merge_retry_after_conflict(spark, tmp_path):
     """A commit conflict from a racing writer is retried from fresh
     state inside merge_apply (r2 verdict item 8) — the first conflicted
     attempt's work is discarded and the retry lands on the next slot."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -113,7 +114,7 @@ def test_merge_retry_with_real_interleaved_writer(spark, tmp_path):
     built-in retry must recompute from the fresh state — B's row
     visible — and land on the next slot with BOTH writers' rows."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode="mor")
+    a = TargetTable(spark, path, n_buckets=2)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "base")]), {"lsn_hi": 1})
     b = TargetTable(spark, path, n_buckets=2)
@@ -149,7 +150,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
     a deleted row. ordered_commits=False retains them; the deleted key
     must stay dead."""
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -162,7 +163,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
 
     # control: the ordered-commits default DROPS the tombstone, which is
     # exactly why it must not be used with an out-of-order writer
-    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2, mode="mor")
+    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2)
     t2.init(SCHEMA)
     t2.merge_apply(_batch(spark, [(10, "I", "c1", 0, "v10")]), {"b": 1})
     t2.merge_apply(_batch(spark, [(20, "D", "c1", 0, None)]), {"b": 2})
@@ -173,7 +174,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
 
 def test_compact_retained_tombstone_row_count_is_live(spark, tmp_path):
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -243,15 +244,14 @@ SCORE_SCHEMA = T.StructType(
 )
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_schema_widening_int_to_long(spark, tmp_path, mode):
+def test_schema_widening_int_to_long(spark, tmp_path):
     """A batch carrying a wider type (int -> long) widens the table
     schema; pre-widening data files are cast at read time; a later
     NARROWER batch (old epoch replay) is cast up without changing the
     schema; time travel to a pre-widening version keeps int."""
     from etl_reconciliate_spark.target.table import _wider  # noqa: F401
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode=mode)
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCORE_SCHEMA)
     t.merge_apply(_score_batch(spark, [(1, "I", "c1", 0, 5)]), {"lsn_hi": 1})
     v_pre = t.current_version()
@@ -316,7 +316,7 @@ def test_read_keys_bucket_pruned_lookup(spark, tmp_path):
     fewer files: inputFiles() must show one file per (bucket, dir), not
     n_buckets per dir. Covers winners across deltas, tombstones, missing
     keys, and schema evolution padding."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=8,
                     compact_threshold=99)
     t.init(SCHEMA)
     rows = [(i, "I", f"c{i % 10}", i // 10, f"v{i}") for i in range(40)]
@@ -362,7 +362,7 @@ def test_read_keys_bucket_pruned_lookup(spark, tmp_path):
 
 
 def test_read_keys_version_pinned_and_empty(spark, tmp_path):
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=4, mode="cow")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=4)
     t.init(SCHEMA)
     with pytest.raises(ValueError):
         t.read_keys([])
@@ -375,16 +375,14 @@ def test_read_keys_version_pinned_and_empty(spark, tmp_path):
     assert t.read_keys([("c1", 0)], version=v1).collect()[0]["text"] == "a"
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path, mode):
+def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path):
     """The lost-update TOCTOU (r4 core review): writer B commits BETWEEN
     writer A's metadata read and A's commit. A's commit slot must derive
     from the snapshot A actually read — so A CONFLICTS and retries on
     top of B — not from the live pointer at commit time, which would let
-    A silently overwrite B (cow: B's rows dropped from the full
-    rewrite; mor: B's delta dropped from the delta list)."""
+    A silently overwrite B (B's delta dropped from the delta list)."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode=mode)
+    a = TargetTable(spark, path, n_buckets=2)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "base")]), {"lsn_hi": 1})
     b = TargetTable(spark, path, n_buckets=2)
@@ -415,7 +413,7 @@ def test_claim_placeholder_not_a_published_version(spark, tmp_path):
     versions() must skip it, current_version() must not move, and
     expire_snapshots must leave it alone while it is younger than the
     orphan grace (it may be milliseconds from its link)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(1, 4):
         t.merge_apply(_batch(spark, [(i, "I", f"c{i}", 0, "x")]), {"lsn_hi": i})
@@ -438,7 +436,7 @@ def test_n_buckets_is_a_table_property(spark, tmp_path):
     with another shuffle-partitions default must not break read_keys'
     bucket pruning (r4 core review)."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode="mor")
+    a = TargetTable(spark, path, n_buckets=2)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -450,12 +448,11 @@ def test_n_buckets_is_a_table_property(spark, tmp_path):
     assert got == {("c1", 0): "a", ("c9", 5): "late"}
 
 
-def test_cow_compact_vacuums_tombstones(spark, tmp_path):
-    """A delete-heavy cow table reclaims its tombstones through
-    compact() (the cow vacuum) — merges retain them for the row-level
-    replay guard, maintenance drops them under the ordered-commits
-    argument (r4 core review)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="cow")
+def test_compact_vacuums_tombstones(spark, tmp_path):
+    """A delete-heavy table reclaims its tombstones through compact()
+    — merges retain them for the row-level replay guard, maintenance
+    drops them under the ordered-commits argument (r4 core review)."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a"),
                                  (2, "I", "c2", 0, "b")]), {"lsn_hi": 2})
@@ -466,16 +463,56 @@ def test_cow_compact_vacuums_tombstones(spark, tmp_path):
     assert stats["row_count"] == 1
     assert t.read(include_meta=True).count() == 1  # tombstone reclaimed
     assert [r["conv_id"] for r in t.read().collect()] == ["c2"]
-    assert t.metadata()["mode"] == "cow"  # mode survives the vacuum
 
-    # out-of-order tables refuse the vacuum (no-op)
-    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2, mode="cow",
+    # with nothing pending, the implicit maintenance call is a no-op
+    v = t.current_version()
+    t.compact()
+    assert t.current_version() == v
+
+    # out-of-order tables fold their deltas but keep the tombstones
+    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2,
                      ordered_commits=False)
     t2.init(SCHEMA)
     t2.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
-    v = t2.current_version()
-    t2.compact()
-    assert t2.current_version() == v
+    t2.merge_apply(_batch(spark, [(2, "D", "c1", 0, None)]), {"lsn_hi": 2})
+    assert t2.compact()["n_deltas"] == 0
+    assert t2.read(include_meta=True).count() == 1
+    assert t2.read().count() == 0
+
+
+def test_legacy_cow_table_reads_and_merges(spark, tmp_path):
+    """A table written by an engine that still had the copy-on-write
+    mode records ``"mode": "cow"`` and no deltas. It reads as its base,
+    and the next merge appends a delta on top — no migration."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    t.init(SCHEMA)
+    t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a"),
+                                 (2, "I", "c2", 0, "b")]), {"lsn_hi": 2})
+    t.compact()  # base-only, like a cow snapshot
+    legacy = t.current_version()
+    meta_path = t._meta_path(legacy)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["deltas"] == []
+    meta["mode"] = "cow"
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+    assert sorted(r["text"] for r in t.read().collect()) == ["a", "b"]
+    stats = t.merge_apply(
+        _batch(spark, [(3, "U", "c1", 0, "a2"), (4, "D", "c2", 0, None),
+                       (5, "I", "c3", 0, "c")]), {"lsn_hi": 5},
+    )
+    assert stats["n_deltas"] == 1
+    assert {r["conv_id"]: r["text"] for r in t.read().collect()} == {
+        "c1": "a2", "c3": "c"}
+    changes = {r["conv_id"]: r["_change_type"]
+               for r in t.read_changes(legacy).collect()}
+    assert changes == {"c1": "update", "c2": "delete", "c3": "insert"}
+    assert t.compact()["row_count"] == 2
+    assert t.metadata()["deltas"] == []
+    assert {r["conv_id"]: r["text"] for r in t.read().collect()} == {
+        "c1": "a2", "c3": "c"}
 
 
 def test_ordered_commits_is_a_table_property(spark, tmp_path):
@@ -485,7 +522,7 @@ def test_ordered_commits_is_a_table_property(spark, tmp_path):
     and let a later lower-LSN delivery resurrect the deleted row (r4
     review)."""
     path = str(tmp_path / "t")
-    t = TargetTable(spark, path, n_buckets=2, mode="mor",
+    t = TargetTable(spark, path, n_buckets=2,
                     ordered_commits=False)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(10, "I", "c1", 0, "v10")]), {"b": 1})
@@ -527,7 +564,7 @@ def test_compact_refuses_explicit_drop_on_unordered_table(spark, tmp_path):
     which also forces the zero-delta MoR base rewrite so base-resident
     tombstones have an exit."""
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -560,7 +597,7 @@ def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
     expire_snapshots already deleted; the commit must still detect the
     newer published versions and withdraw instead of REWINDING the
     table (r5 review: a rewind silently discards every newer commit)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(4):
         t.merge_apply(
@@ -592,7 +629,7 @@ def test_expire_skips_sweep_when_kept_metadata_unreadable(spark, tmp_path, monke
     old `continue` let the orphan sweep delete the still-live shared
     MoR base/delta dirs. When no consistent read of the kept snapshots
     is possible, the sweep is skipped entirely."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(4):
         t.merge_apply(
@@ -607,15 +644,15 @@ def test_expire_skips_sweep_when_kept_metadata_unreadable(spark, tmp_path, monke
     for n in live_dirs:
         os.utime(os.path.join(t.path, n), (1, 1))
 
-    real = TargetTable.metadata
+    real = versions.read_version
     kept = {cur, cur - 1}
 
-    def flaky(self, version=None):
+    def flaky(root, version=None):
         if version in kept:
             raise FileNotFoundError("simulated concurrent expirer")
-        return real(self, version)
+        return real(root, version)
 
-    monkeypatch.setattr(TargetTable, "metadata", flaky)
+    monkeypatch.setattr(versions, "read_version", flaky)
     t.expire_snapshots(keep_last=2, orphan_grace_secs=0)
     monkeypatch.undo()
 
@@ -635,7 +672,7 @@ def test_stalled_creator_resume_preserves_takeover_publish(
     resumes, its link must fail on B's published v{version}.json — never
     replace it — and A must conflict and retry onto the next slot with
     B's metadata intact."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c0", 0, "base")]), {"lsn_hi": 1})
     contested = t.current_version() + 1
@@ -681,7 +718,7 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
     clobbered. All rows present, no clobber window at all."""
     import json as json_mod
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c0", 0, "base")]), {"lsn_hi": 1})
     contested = t.current_version() + 1
@@ -701,14 +738,11 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
             b = TargetTable(spark, t.path, n_buckets=2)
             b._commit(contested, SCHEMA, b.metadata()["data_dir"],
                       {"lsn_hi": 50}, row_count=0, parent=contested - 1,
-                      mode="mor",
                       deltas=list(b.metadata().get("deltas") or []))
             assert b.current_version() == contested
         return real_dump(obj, fh, **kw)
 
-    monkeypatch.setattr(
-        "etl_reconciliate_spark.target.table.json.dump", hook
-    )
+    monkeypatch.setattr(json_mod, "dump", hook)
     stats = t.merge_apply(
         _batch(spark, [(2, "I", "cA", 0, "stalled")]), {"lsn_hi": 2}
     )
@@ -735,14 +769,16 @@ def test_concurrent_writer_hammer_loses_nothing(spark, tmp_path):
     four writers (own TargetTable instances, one shared session —
     ``os.link`` put-if-absent conflicts between threads exactly as
     across processes) race 5 merges each onto one MoR table, crossing a
-    compaction threshold mid-hammer. Every CommitConflictError is
-    retried from fresh state. NOTHING may be lost: all 20 batches'
-    rows present with their final text, versions strictly monotone,
-    and the metadata row count consistent with a direct read."""
+    compaction threshold mid-hammer, while a fifth thread loops
+    ``expire_snapshots(keep_last=2)`` at the default orphan grace. Every
+    CommitConflictError is retried from fresh state. NOTHING may be
+    lost: all 20 batches' rows present with their final text, versions
+    strictly monotone, and the metadata row count consistent with a
+    direct read."""
     import threading
 
     path = str(tmp_path / "t")
-    t0 = TargetTable(spark, path, n_buckets=2, mode="mor",
+    t0 = TargetTable(spark, path, n_buckets=2,
                      compact_threshold=7)
     t0.init(SCHEMA)
 
@@ -767,13 +803,29 @@ def test_concurrent_writer_hammer_loses_nothing(spark, tmp_path):
                 errors.append(f"writer {w} batch {b} never committed")
                 return
 
+    done = threading.Event()
+
+    def expirer() -> None:
+        t = TargetTable(spark, path, n_buckets=2)
+        while not done.is_set():
+            try:
+                t.expire_snapshots(keep_last=2)
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append(f"expirer: {e!r}")
+                return
+            time.sleep(0.01)
+
     threads = [
         threading.Thread(target=writer, args=(w,)) for w in range(n_writers)
     ]
+    expiry = threading.Thread(target=expirer)
+    expiry.start()
     for th in threads:
         th.start()
     for th in threads:
         th.join()
+    done.set()
+    expiry.join()
     assert errors == []
 
     t = TargetTable(spark, path, n_buckets=2)
@@ -803,7 +855,7 @@ def test_commit_crash_at_every_step_recovers(spark, tmp_path, monkeypatch):
         """Stands in for a kill: not caught by ``except Exception``."""
 
     path = str(tmp_path / "t")
-    t = TargetTable(spark, path, n_buckets=2, mode="mor")
+    t = TargetTable(spark, path, n_buckets=2)
     t.init(SCHEMA, offsets={"lsn_hi": 0})
 
     armed = {"on": False}
