@@ -50,7 +50,6 @@ from etl_reconciliate_spark.plans.metrics import (
     observe_count,
     observe_ops,
     observed_or,
-    slice_lineage,
 )
 from etl_reconciliate_spark.session import pinned_shuffle_partitions
 from etl_reconciliate_spark.sources.changelog import ChangeLogSource
@@ -132,11 +131,10 @@ def _replay_loop(
     )
 
     if not table.exists():
-        # Initial schema = key + payload columns of the earliest epoch;
-        # later epochs evolve it (add-column) through merge_apply.
-        first_epoch = source.initial_schema()
+        # Initial schema = key + payload columns of the earliest events;
+        # later files evolve it (add-column, widening) through merge_apply.
         payload = T.StructType(
-            [f for f in first_epoch.fields if f.name not in ("lsn", "op")]
+            [f for f in source.initial_schema().fields if f.name not in ("lsn", "op")]
         )
         table.init(payload)
 
@@ -152,7 +150,7 @@ def _replay_loop(
         st = time.monotonic()
         # LSN-gap fast path (r5 review): real WAL/Debezium LSNs are
         # sparse byte offsets, so densely-tiled slices routinely cover
-        # pure gaps. The driver-side footer index PROVES such a slice
+        # pure gaps. The source's footer index PROVES such a slice
         # empty — merging it anyway cost an empty delta (counting toward
         # the compaction threshold → a full base rewrite every Nth gap).
         # Skip the merge entirely: zero Spark jobs. The offset is
@@ -161,7 +159,7 @@ def _replay_loop(
         # offsets-only commit after the loop (r5 final review: with
         # max_slices set, a gap wider than the slice budget would
         # otherwise re-plan the same gap slices forever — livelock).
-        overlap = slice_lineage(source.file_index, lo, hi)
+        overlap = source.lineage(lo, hi)
         if not overlap:
             trailing_gap_hi = max(trailing_gap_hi, hi)
             ckpt.append_manifest(
@@ -170,9 +168,10 @@ def _replay_loop(
             )
             continue
         trailing_gap_hi = -1
-        # Per-file lineage comes from the footer index (driver-side
-        # metadata, built once at open); the event and op counts ride
-        # along with the merge's write (apply_slice).
+        # One index describes the log: the per-file lineage here and the
+        # files read_slice scans are the same overlapping footer-index
+        # entries (driver-side metadata, built once at open). The event
+        # and op counts ride along with the merge's write (apply_slice).
         lineage = overlap if collect_lineage else []
         stats, n_events, ops = apply_slice(
             table, source.read_slice(lo, hi), ckpt.offsets_for(hi, lineage),

@@ -72,6 +72,8 @@ _PROMOTION_CHAINS = (
 def _wider(a: T.DataType, b: T.DataType) -> T.DataType:
     """The wider of two types along a safe promotion chain; raises
     SchemaConflictError when they are on no common chain."""
+    if a == b:
+        return a
     an, bn = a.typeName(), b.typeName()
     for chain in _PROMOTION_CHAINS:
         if an in chain and bn in chain:

@@ -51,7 +51,9 @@ def main() -> int:
     ap.add_argument("--no-broadcast-benchmark", action="store_true",
                     help="shuffle-join the benchmark shingle set instead "
                     "of broadcasting it — use when the benchmark corpus "
-                    "is too large for executor memory")
+                    "is too large for executor memory. A partial opt-out: "
+                    "the per-document sizes frame (one row per benchmark "
+                    "doc) stays broadcast")
     ap.add_argument("--budget-tokens", type=int, default=2048)
     ap.add_argument("--shards", type=int, default=64)
     ap.add_argument("--seed", type=int, default=7, help="split seed")

@@ -145,7 +145,7 @@ def test_footer_lineage_index(spark, changelog_df, changelog_path):
     """Lineage comes from parquet footers (driver-side metadata, no Spark
     job); the index must account for every row and the true LSN bounds,
     and per-slice selection must cover every file the slice reads."""
-    from etl_reconciliate_spark.plans.metrics import footer_index, slice_lineage
+    from etl_reconciliate_spark.sources.changelog import footer_index, slice_lineage
 
     idx = footer_index(changelog_path)
     assert sum(f["rows"] for f in idx) == len(changelog_df)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import types as T
 
 from etl_reconciliate_spark.target import versions
-from etl_reconciliate_spark.target.table import TargetTable
+from etl_reconciliate_spark.target.table import SnapshotExpiredError, TargetTable
 from etl_reconciliate_spark.target.versions import list_versions, read_version
 
 sys.path.insert(0, "/root/repo/jobs")
@@ -243,3 +243,74 @@ def test_rollup_overlapping_runs_first_linker_wins(spark, tmp_path, capsys,
     win_dir = os.path.join(rdir, state["winner"]["data_dir"])
     assert spark.read.parquet(win_dir).count() == (
         state["winner"]["rollup_rows"])
+
+
+def test_rollup_refresh_races_replay_with_expiry(spark, tmp_path, capsys,
+                                                 monkeypatch):
+    """``--refresh`` runs in a loop on a thread while ``replay()``
+    commits slices to the same table (compacting every 3 deltas, and
+    expiring all but 2 versions after each commit — so a refresh's base
+    version is expired under it). After each commit the writer waits
+    only for a refresh to START, then commits its next slice alongside
+    it. One more refresh afterwards must equal a fresh build at the
+    final version: no raced run may leave a wrong rollup behind."""
+    import threading
+    import time
+
+    from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
+    from etl_reconciliate_spark.streaming.runner import replay
+
+    log = str(tmp_path / "log")
+    write_changelog(spark, gen_changelog(6_000, seed=11), log,
+                    epoch_lsn=2_000, n_files=8)
+    tgt = str(tmp_path / "t")
+
+    def commit_slice():
+        return replay(spark, log, tgt, slice_size=1_000, max_slices=1,
+                      expire_keep=2, compact_threshold=3)["slices"]
+
+    commit_slice()
+    rdir = str(tmp_path / "rollup")
+    refresh = ("--target", tgt, "--rollup-dir", rdir, "--refresh",
+               "--sweep-grace-secs", "0")
+    assert _run(monkeypatch, capsys, *refresh)["mode"] == "build"
+
+    monkeypatch.setattr(sys, "argv", ["rollup_job.py", *refresh])
+    done = threading.Event()
+    commits = [0]
+    started, errors = [], []
+
+    def loop():
+        while not done.is_set():
+            started.append(commits[0])
+            try:
+                rollup_job.main()
+            except (FileNotFoundError, SnapshotExpiredError):
+                pass  # a version it pinned expired mid-run: no publish
+            except Exception as e:
+                errors.append(e)
+                return
+            time.sleep(0.05)
+
+    t = threading.Thread(target=loop)
+    t.start()
+    try:
+        while commit_slice():
+            commits[0] += 1
+            deadline = time.monotonic() + 120
+            while commits[0] not in started[-1:] and not errors:
+                assert time.monotonic() < deadline, "refresher stalled"
+                time.sleep(0.01)
+    finally:
+        done.set()
+        t.join(timeout=300)
+    assert not t.is_alive() and not errors, errors
+    raced = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert any(r.get("mode") == "refresh" and r["dirty_cells"] > 0
+               for r in raced), raced  # incremental runs did race
+
+    final = _run(monkeypatch, capsys, *refresh)
+    assert final["to_version"] == TargetTable(spark, tgt).current_version()
+    fresh = str(tmp_path / "fresh")
+    _run(monkeypatch, capsys, "--target", tgt, "--rollup-dir", fresh)
+    assert _rollup_rows(spark, rdir) == _rollup_rows(spark, fresh)

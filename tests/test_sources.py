@@ -1,6 +1,8 @@
 """Source adapters: JDBC option surface (no driver ships offline — the
 adapter must fail with a clear, actionable error, reference-parity S5)."""
 
+import os
+
 import pytest
 
 from etl_reconciliate_spark.sources.jdbc import read_jdbc_table
@@ -88,10 +90,10 @@ def test_debezium_envelope_parse_and_merge(spark, tmp_path):
 
 
 def test_changelog_stray_file_rejected(spark, tmp_path):
-    """A parquet file outside the epoch= dirs is invisible to the epoch
-    DataFrames — its events would be silently lost (or a phantom-epoch
-    KeyError thrown later). The source must refuse the layout loudly
-    (r4 review)."""
+    """A parquet file outside the epoch= dirs has no place in the log's
+    layout — reading it would guess where its events belong, skipping it
+    would lose them. The source must refuse the layout loudly (r4
+    review)."""
     from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
     from etl_reconciliate_spark.sources.changelog import ChangeLogSource
 
@@ -119,7 +121,7 @@ def test_footer_index_backfills_missing_stats(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl_reconciliate_spark.plans.metrics import footer_index
+    from etl_reconciliate_spark.sources.changelog import footer_index
 
     t = pa.table({"lsn": [7, 3, 11], "op": ["I", "I", "D"]})
     d = tmp_path / "log"
@@ -130,11 +132,91 @@ def test_footer_index_backfills_missing_stats(tmp_path):
     assert idx[0]["lsn_lo"] == 3 and idx[0]["lsn_hi"] == 11
 
 
-def test_empty_slice_plans_one_epoch_scan(spark, tmp_path):
+def test_changelog_open_runs_no_spark_job(spark, tmp_path):
+    """The source opens from its footer index alone: schemas, bounds
+    and lineage are parquet-footer metadata, so construction must not
+    start a single Spark job (no per-epoch schema inference)."""
+    from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
+    from etl_reconciliate_spark.sources.changelog import ChangeLogSource
+
+    p = str(tmp_path / "log")
+    write_changelog(spark, gen_changelog(500, seed=3), p, epoch_lsn=250)
+    sc = spark.sparkContext
+    sc.setJobGroup("changelog-open", "ChangeLogSource open")
+    try:
+        src = ChangeLogSource(spark, p)
+        src.initial_schema(), src.max_lsn(), src.lineage(100, 300)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("changelog-open")) == []
+    assert {f["file"].split("/")[0] for f in src.file_index} == {
+        "epoch=0", "epoch=1"}
+
+
+def test_read_slice_scans_only_overlapping_files(spark, tmp_path):
+    """A mid-log slice plans exactly the files the footer index says
+    overlap it — not every file of the epochs it touches — and returns
+    exactly the slice's events."""
+    from urllib.parse import urlparse
+
+    from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
+    from etl_reconciliate_spark.sources.changelog import ChangeLogSource
+
+    df = gen_changelog(2000, seed=5)
+    p = str(tmp_path / "log")
+    write_changelog(spark, df, p, epoch_lsn=1000, n_files=16)
+    src = ChangeLogSource(spark, p)
+    lo, hi = 900, 1300
+    sl = src.read_slice(lo, hi)
+    scanned = {
+        os.path.relpath(urlparse(u).path, p) for u in sl.inputFiles()
+    }
+    overlapping = {f["file"] for f in src.lineage(lo, hi)}
+    assert scanned == overlapping
+    assert {f.split("/")[0] for f in scanned} == {"epoch=0", "epoch=1"}
+    assert len(scanned) < len(src.file_index)
+    assert sl.count() == int(((df["lsn"] > lo) & (df["lsn"] <= hi)).sum())
+
+
+def test_read_slice_widens_int_to_long_across_epochs(spark, tmp_path):
+    """Epoch 1 widens a payload column from int32 to int64: a slice over
+    both epochs reads it as long (the wider type, never the first
+    file's), with every value equal to a pyarrow read of the files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_reconciliate_spark.sources.changelog import ChangeLogSource
+
+    p = tmp_path / "log"
+    for epoch, typ, lsns in ((0, pa.int32(), range(0, 5)),
+                             (1, pa.int64(), range(5, 10))):
+        (p / f"epoch={epoch}").mkdir(parents=True)
+        n = [lsn * 1_000 if epoch == 0 else lsn * 2**33 for lsn in lsns]
+        pq.write_table(pa.table({
+            "lsn": pa.array(lsns, pa.int64()),
+            "op": ["I"] * 5,
+            "conv_id": [f"c{lsn}" for lsn in lsns],
+            "turn_idx": pa.array([0] * 5, pa.int32()),
+            "n_tokens": pa.array(n, typ),
+        }), str(p / f"epoch={epoch}" / "part-0.parquet"))
+    src = ChangeLogSource(spark, str(p))
+    sl = src.read_slice(-1, src.max_lsn())
+    assert dict(sl.dtypes)["n_tokens"] == "bigint"
+    assert src.initial_schema()["n_tokens"].dataType.typeName() == "integer"
+    expect = {}
+    for f in sorted(p.glob("epoch=*/*.parquet")):
+        t = pq.read_table(str(f))
+        expect.update(zip(t["lsn"].to_pylist(), t["n_tokens"].to_pylist()))
+    assert {r["lsn"]: r["n_tokens"] for r in sl.collect()} == expect
+    assert max(expect.values()) > 2**31
+
+
+def test_empty_slice_plans_no_file_scan(spark, tmp_path):
     """A slice entirely outside the log's LSN range must return an
-    empty-but-typed frame planned over ONE epoch only — the earlier
-    fallback unioned every epoch, planning a scan of the whole log for
-    a provably-empty result (r4 verdict item 6)."""
+    empty-but-typed frame with NO file scan — the footer index proves
+    it empty (earlier versions planned a scan of one epoch, and before
+    that of every epoch, for a provably-empty result)."""
     from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
     from etl_reconciliate_spark.sources.changelog import ChangeLogSource
 
@@ -142,71 +224,75 @@ def test_empty_slice_plans_one_epoch_scan(spark, tmp_path):
     p = str(tmp_path / "log")
     write_changelog(spark, df, p, epoch_lsn=100)
     src = ChangeLogSource(spark, p)
-    assert len(src._epochs) >= 2  # multi-epoch, or the test proves nothing
+    # multi-epoch, or the test proves nothing
+    assert len({f["file"].split("/")[0] for f in src.file_index}) >= 2
     sl = src.read_slice(10_000_000, 10_050_000)  # beyond max_lsn
     assert sl.count() == 0
-    assert "lsn" in sl.columns  # typed, usable downstream
+    assert sl.schema == src.initial_schema()  # typed, usable downstream
     plan = sl._jdf.queryExecution().executedPlan().toString()
     import re
     n_scans = len(re.findall(r"Scan parquet|FileScan", plan))
-    assert n_scans == 1, f"expected 1 epoch scan, plan has {n_scans}"
+    assert n_scans == 0, f"expected no file scan, plan has {n_scans}"
 
 
-def test_epoch_dirs_numeric_order(spark, tmp_path):
-    """With 10+ epoch dirs, lexicographic sort puts epoch=10 before
-    epoch=2 — initial_schema() would then return an EVOLVED epoch's
-    schema and the empty-slice fallback would plan the wrong epoch
-    (r5 review). Epochs must order numerically."""
+def _write_epochs(spark, p, n_epochs, rows):
+    """Epoch dirs ``epoch=0..n-1`` of ``rows`` insert events each, lsns
+    ascending with the epoch number; epoch 0 lacks the ``tool`` column."""
     import datetime
 
     from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA
+
+    ts = datetime.datetime(2026, 1, 1)
+    for i in range(n_epochs):
+        df = spark.createDataFrame(
+            [(i * 10 + j, "I", f"c{i}", j, "user", "x", None, ts)
+             for j in range(rows)],
+            CHANGELOG_SCHEMA,
+        )
+        if i == 0:
+            df = df.drop("tool")
+        df.coalesce(1).write.parquet(f"{p}/epoch={i}")
+
+
+def test_epoch_dirs_numeric_order(spark, tmp_path):
+    """With 10+ epoch dirs, lexicographic order puts epoch=10 before
+    epoch=2 (r5 review). The source orders by events, not by dir names:
+    initial_schema() is the earliest epoch's (pre-``tool``) schema, the
+    empty slice is typed by it, and a slice across epoch=9 and epoch=10
+    sees both."""
+    from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA_V0
     from etl_reconciliate_spark.sources.changelog import ChangeLogSource
 
     p = str(tmp_path / "log")
-    ts = datetime.datetime(2026, 1, 1)
-    for i in range(12):
-        spark.createDataFrame(
-            [(i * 10 + j, "I", f"c{i}", j, "user", "x", None, ts)
-             for j in range(10)],
-            CHANGELOG_SCHEMA,
-        ).coalesce(1).write.parquet(f"{p}/epoch={i}")
+    _write_epochs(spark, p, 12, 10)
     src = ChangeLogSource(spark, p)
-    nums = [int(e.split("=", 1)[1]) for e in src._epochs]
-    assert len(nums) == 12
-    assert nums == sorted(nums)
-    assert src._epochs[0] == "epoch=0"
-    # the empty-slice fallback must plan the NUMERICALLY earliest epoch
+    assert src.initial_schema().fieldNames() == CHANGELOG_SCHEMA_V0.fieldNames()
     sl = src.read_slice(10_000_000, 10_000_100)
-    assert sl.count() == 0 and "lsn" in sl.columns
+    assert sl.count() == 0 and sl.schema == src.initial_schema()
+    assert src.read_slice(94, 104).count() == 10
+    assert src.max_lsn() == 119
 
 
 def test_epoch_dir_non_integer_suffix_tolerated(spark, tmp_path):
     """A non-integer epoch dir (epoch=__HIVE_DEFAULT_PARTITION__ from a
     NULL partition value, or a date-valued epoch) must not crash the
-    source open (r5 final review: the numeric sort key raised
-    ValueError at __init__). Non-numeric epochs sort AFTER the numeric
-    ones, so initial_schema() still sees the earliest real epoch."""
+    source open (r5 final review), its events must be visible to slice
+    reads, and initial_schema() still comes from the earliest events."""
     import datetime
 
-    from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA
+    from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA, CHANGELOG_SCHEMA_V0
     from etl_reconciliate_spark.sources.changelog import ChangeLogSource
 
     p = str(tmp_path / "log")
-    ts = datetime.datetime(2026, 1, 1)
-    for i in range(3):
-        spark.createDataFrame(
-            [(i * 10 + j, "I", f"c{i}", j, "user", "x", None, ts)
-             for j in range(5)],
-            CHANGELOG_SCHEMA,
-        ).coalesce(1).write.parquet(f"{p}/epoch={i}")
+    _write_epochs(spark, p, 3, 5)
     # rows whose epoch partition value was NULL
     spark.createDataFrame(
-        [(100, "I", "cz", 0, "user", "z", None, ts)], CHANGELOG_SCHEMA
+        [(100, "I", "cz", 0, "user", "z", None, datetime.datetime(2026, 1, 1))],
+        CHANGELOG_SCHEMA,
     ).coalesce(1).write.parquet(f"{p}/epoch=__HIVE_DEFAULT_PARTITION__")
 
     src = ChangeLogSource(spark, p)
-    assert src._epochs[0] == "epoch=0"
-    assert src._epochs[-1] == "epoch=__HIVE_DEFAULT_PARTITION__"
+    assert src.initial_schema().fieldNames() == CHANGELOG_SCHEMA_V0.fieldNames()
     # the stray epoch's events are still visible to slice reads
     assert src.read_slice(99, 101).count() == 1
     assert src.max_lsn() == 100
