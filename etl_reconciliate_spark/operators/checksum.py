@@ -15,10 +15,12 @@ no analog) is hierarchical:
 2. **Compare pass** — full-outer join the two digest tables
    (``n_blocks`` rows each; broadcast-sized for any sane ``n_blocks``)
    and keep the dirty blocks.
-3. **Drill-down pass** — run the row-level reconcile ONLY on rows whose
-   block is dirty, pruned with a broadcast semi-join of the dirty block
-   ids. With drift rate ε, the expensive key shuffle touches
-   ~ε·rows + collateral rows sharing a dirty block, never the table.
+3. **Drill-down pass** — collect the dirty block ids (at most
+   ``n_blocks`` ints) and run the row-level reconcile ONLY on rows whose
+   block is among them (an ``isin`` filter). Zero dirty blocks means no
+   drill-down: the result is an empty frame, no join, no side scan.
+   With drift rate ε, the expensive key shuffle touches ~ε·rows +
+   collateral rows sharing a dirty block, never the table.
 
 The row hash is the portable md5-derived family (``functions.hashing``)
 so every digest is DuckDB-verifiable; at 100 TB swap ``xxhash64`` in at
@@ -173,7 +175,8 @@ def checksum_reconcile(
     Pass a precomputed (ideally persisted — it is n_blocks rows) ``diff``
     to share the digest pass with block-level reporting; it must come
     from :func:`checksum_diff` over the same (keys, compare_cols,
-    n_blocks).
+    n_blocks). Eager: the dirty block ids are collected when this is
+    called, so the digests run once either way.
     """
     keys = key_cols or KEY_COLS
     if keys != KEY_COLS:
@@ -185,16 +188,11 @@ def checksum_reconcile(
             block_checksums(source, keys, compare_cols, n_blocks),
             block_checksums(target, keys, compare_cols, n_blocks),
         )
-    dirty_ids = F.broadcast(diff.filter(F.col("dirty")).select("block_id"))
-
-    def _prune(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("_blk", block_expr(keys, n_blocks))
-            .join(dirty_ids, F.col("_blk") == dirty_ids.block_id, "semi")
-            .drop("_blk")
-        )
-
-    recon = reconcile(
-        _prune(source), _prune(target), compare_cols=compare_cols, **recon_kwargs
-    )
+    dirty = [r[0] for r in diff.filter(F.col("dirty")).select("block_id").collect()]
+    if dirty:
+        in_dirty = block_expr(keys, n_blocks).isin(dirty)
+        source, target = source.filter(in_dirty), target.filter(in_dirty)
+    else:  # every block clean: the typed empty result, no join, no scan
+        source, target = source.limit(0), target.limit(0)
+    recon = reconcile(source, target, compare_cols=compare_cols, **recon_kwargs)
     return recon.filter(F.col("status") != STATUS_MATCH)

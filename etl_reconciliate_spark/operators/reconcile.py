@@ -71,6 +71,9 @@ def reconcile(
     (``status_counts``, ``rollup_conversations``) don't need order;
     consumers that want ordered output (the report sink, tests) sort the
     small final result at the emission boundary.
+
+    Eager by one job: the hot-key census (``operators.skew``) runs and
+    is collected when this is called, not at the first action.
     """
     s = source.select(KEY_COLS + [F.col(c).alias(f"cmp_{c}") for c in compare_cols])
     t = target.select(KEY_COLS + [F.col(c).alias(f"cmp_{c}") for c in compare_cols])

@@ -4,7 +4,12 @@ The north rule requires skew "handled explicitly" (BASELINE.json:14), on
 top of AQE's runtime skew-join split. Transcript conversations are
 Zipf-ish — one hot key can dominate a shuffle partition (SURVEY §7.3).
 
-``salted_full_outer`` decomposes FULL OUTER ``L ⟗ R ON keys`` exactly:
+``salted_full_outer`` runs the hot-key census once, as one job at call
+time, and collects it: at most rows / ``hot_threshold`` keys per side,
+through the driver as its broadcast always went. Shipped as data, not a
+sub-plan, it keeps the side plans out of the join's plan. With no hot
+key the result is ONE plain null-safe full outer join; otherwise FULL
+OUTER ``L ⟗ R ON keys`` decomposes exactly:
 
 * **cold keys** → plain full outer join (Catalyst picks the strategy);
 * **hot keys** (per-key row count above ``hot_threshold`` on either
@@ -44,7 +49,14 @@ convention matches ``join(..., "full_outer")`` with both sides aliased.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def _null_safe_eq(a: list[str], b: list[str]) -> Column:
+    """``a[0] <=> b[0] AND ...``: a null key component matches a null."""
+    return reduce(Column.__and__, [F.col(x).eqNullSafe(F.col(y)) for x, y in zip(a, b)])
 
 
 def salted_full_outer(
@@ -61,7 +73,9 @@ def salted_full_outer(
     """Exact FULL OUTER equi-join with explicit hot-key salting.
 
     Returns all columns of both sides, prefixed ``{left_prefix}_`` /
-    ``{right_prefix}_`` (unmatched side → nulls).
+    ``{right_prefix}_`` (unmatched side → nulls). Eager by one job: the
+    hot-key census is collected when this is called; an empty hot set
+    returns one plain null-safe full outer join.
 
     Hot-key detection, cheapest first:
 
@@ -85,9 +99,10 @@ def salted_full_outer(
     rt = tag(right, right_prefix)
     lk = [f"{left_prefix}_{k}" for k in keys]
     rk = [f"{right_prefix}_{k}" for k in keys]
+    hk = [f"_h_{k}" for k in keys]
 
     if hot_keys is not None:
-        hot = F.broadcast(hot_keys.select(keys).distinct())
+        census = hot_keys.select(keys).distinct()
     else:
         lc, rc, thr = lt, rt, hot_threshold
         if sample_fraction is not None:
@@ -96,32 +111,31 @@ def salted_full_outer(
             thr = max(1, int(hot_threshold * sample_fraction))
         # A key is hot if either side exceeds the threshold. One
         # pre-aggregation per side (map-side combine); the hot set is
-        # tiny by construction → broadcast it.
+        # tiny by construction → collect it, broadcast it as data.
         lhot = lc.groupBy(lk).agg(F.count(F.lit(1)).alias("_ln")).filter(
             F.col("_ln") > thr
         ).select([F.col(c).alias(k) for c, k in zip(lk, keys)])
         rhot = rc.groupBy(rk).agg(F.count(F.lit(1)).alias("_rn")).filter(
             F.col("_rn") > thr
         ).select([F.col(c).alias(k) for c, k in zip(rk, keys)])
-        hot = F.broadcast(lhot.unionByName(rhot).distinct())
+        census = lhot.unionByName(rhot).distinct()
+
+    join_cond = _null_safe_eq(lk, rk)
+    out_cols = lt.columns + rt.columns
+    hot_set = census.collect()
+    if not hot_set:
+        return lt.join(rt, join_cond, "full_outer").select(out_cols)
+    hot = F.broadcast(left.sparkSession.createDataFrame(hot_set, census.schema))
 
     def split(df: DataFrame, kcols: list[str]):
-        h = hot.select([F.col(k).alias(f"_h_{k}") for k in keys])
-        cond = None
-        for k, kc in zip(keys, kcols):
-            c = F.col(kc).eqNullSafe(F.col(f"_h_{k}"))
-            cond = c if cond is None else (cond & c)
+        h = hot.select([F.col(k).alias(h_) for k, h_ in zip(keys, hk)])
+        cond = _null_safe_eq(kcols, hk)
         hot_rows = df.join(h, cond, "left_semi")
         cold_rows = df.join(h, cond, "left_anti")
         return hot_rows, cold_rows
 
     l_hot, l_cold = split(lt, lk)
     r_hot, r_cold = split(rt, rk)
-
-    join_cond = None
-    for a, b in zip(lk, rk):
-        c = F.col(a).eqNullSafe(F.col(b))
-        join_cond = c if join_cond is None else (join_cond & c)
 
     cold = l_cold.join(r_cold, join_cond, "full_outer")
 
@@ -198,30 +212,19 @@ def salted_full_outer(
     # distinct key set of a hot side is bounded by the hot-key census,
     # so broadcast it and no skewed shuffle happens at all.
     r_hot_keys = F.broadcast(
-        r_hot.select([F.col(c).alias(f"_h_{k}") for c, k in zip(rk, keys)])
-        .distinct()
+        r_hot.select([F.col(c).alias(h_) for c, h_ in zip(rk, hk)]).distinct()
     )
     l_hot_keys = F.broadcast(
-        l_hot.select([F.col(c).alias(f"_h_{k}") for c, k in zip(lk, keys)])
-        .distinct()
+        l_hot.select([F.col(c).alias(h_) for c, h_ in zip(lk, hk)]).distinct()
     )
-
-    def anti_cond(kcols):
-        cond = None
-        for k, kc in zip(keys, kcols):
-            c = F.col(kc).eqNullSafe(F.col(f"_h_{k}"))
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    l_only = l_hot.join(r_hot_keys, anti_cond(lk), "left_anti")
-    r_only = r_hot.join(l_hot_keys, anti_cond(rk), "left_anti")
+    l_only = l_hot.join(r_hot_keys, _null_safe_eq(lk, hk), "left_anti")
+    r_only = r_hot.join(l_hot_keys, _null_safe_eq(rk, hk), "left_anti")
 
     null_r = [F.lit(None).cast(rt.schema[c].dataType).alias(c) for c in rt.columns]
     null_l = [F.lit(None).cast(lt.schema[c].dataType).alias(c) for c in lt.columns]
     l_only_full = l_only.select([F.col(c) for c in lt.columns] + null_r)
     r_only_full = r_only.select(null_l + [F.col(c) for c in rt.columns])
 
-    out_cols = lt.columns + rt.columns
     return (
         cold.select(out_cols)
         .unionByName(matched.select(out_cols))

@@ -17,7 +17,8 @@ and each refresh
    a new ``snap-{N}-*`` dir published as ``v{N}.json`` of the index
    dir's version log (``target/versions.py``: one put-if-absent link, so
    readers never see a half-written index and of two overlapping runs
-   the first to link wins — the other exits 1 with a conflict),
+   the first to link wins — the other exits 1 with a conflict; a run
+   whose pinned table version is expired under it exits 1, unpublished),
 4. probes the fresh rows against the updated index and reports the NEW
    near-dup pairs (exact-Jaccard verified; the verify assembles only
    candidate conversations).
@@ -97,7 +98,7 @@ def main() -> int:
         minhash_band_index,
         probe_band_index,
     )
-    from etl_reconciliate_spark.target.table import TargetTable
+    from etl_reconciliate_spark.target.table import SnapshotExpiredError, TargetTable
     from etl_reconciliate_spark.target.versions import (
         CommitConflictError,
         expire_versions,
@@ -156,114 +157,123 @@ def main() -> int:
             rows_per_band=args.rows_per_band,
         )
 
-    if meta is None:
-        # "rebuild_expired_base" ONLY when the refresh base actually
-        # expired — it is the signal that expire_snapshots outpaces the
-        # refresh cadence; a deliberate rebuild over a healthy index
-        # (no --refresh) is just "rebuild" (r5 jobs review: the old
-        # label fired false expiry alarms on intentional rebuilds)
-        out["mode"] = ("build" if prior_meta is None
-                       else "rebuild_expired_base" if expired
-                       else "rebuild_measure_changed" if remeasured
-                       else "rebuild")
-        docs = _docs_frame(tbl.read(version=to_version))
-        idx = build_index(docs)
-        idx.write.mode("overwrite").option("compression", "zstd").parquet(
-            data_dir
-        )
-        out["changed_docs"] = None
-        if args.pairs_out:
-            # a (re)build with --pairs-out must not leave a previous
-            # refresh's pairs file in place as if it were this run's
-            # output — write the FULL-corpus pair set (the initial
-            # dedup a build is for)
-            new_pairs = lsh_jaccard_pairs(
-                docs, k=args.k, n_bands=args.bands,
-                rows_per_band=args.rows_per_band,
-                threshold=args.threshold,
+    pins = [to_version] + ([meta["table_version"]] if meta else [])
+    try:
+        if meta is None:
+            # "rebuild_expired_base" ONLY when the refresh base actually
+            # expired — it is the signal that expire_snapshots outpaces the
+            # refresh cadence; a deliberate rebuild over a healthy index
+            # (no --refresh) is just "rebuild" (r5 jobs review: the old
+            # label fired false expiry alarms on intentional rebuilds)
+            out["mode"] = ("build" if prior_meta is None
+                           else "rebuild_expired_base" if expired
+                           else "rebuild_measure_changed" if remeasured
+                           else "rebuild")
+            docs = _docs_frame(tbl.read(version=to_version))
+            idx = build_index(docs)
+            idx.write.mode("overwrite").option("compression", "zstd").parquet(
+                data_dir
             )
-    elif meta["table_version"] == to_version:
-        out.update(mode="refresh", from_version=to_version,
-                   changed_docs=0, new_pairs=0,
-                   index_rows=meta["index_rows"])
-        if args.pairs_out:
-            # a no-op refresh must not leave the PREVIOUS run's pairs
-            # file in place while reporting new_pairs=0 — a consumer
-            # ingesting --pairs-out after each run would re-ingest the
-            # old pairs as this run's output (r5 jobs review; same
-            # stale-file contract the build path already honors).
-            # doc_a/doc_b take the TABLE's conv_id type (not a STRING
-            # literal) so the pairs schema is identical across no-op
-            # and real runs — a hardcoded type flips the column type
-            # whenever the table happens not to have moved. The type
-            # comes straight from the version's recorded schema dict
-            # (already fetched by the refresh-base probe above —
-            # table_version == to_version on this branch): building a
-            # full versioned read PLAN just to ask one column's type is
-            # pure metadata-resolution tax on every no-op cron tick
-            # (r5 review)
-            from pyspark.sql import types as T
+            out["changed_docs"] = None
+            if args.pairs_out:
+                # a (re)build with --pairs-out must not leave a previous
+                # refresh's pairs file in place as if it were this run's
+                # output — write the FULL-corpus pair set (the initial
+                # dedup a build is for)
+                new_pairs = lsh_jaccard_pairs(
+                    docs, k=args.k, n_bands=args.bands,
+                    rows_per_band=args.rows_per_band,
+                    threshold=args.threshold,
+                )
+        elif meta["table_version"] == to_version:
+            out.update(mode="refresh", from_version=to_version,
+                       changed_docs=0, new_pairs=0,
+                       index_rows=meta["index_rows"])
+            if args.pairs_out:
+                # a no-op refresh must not leave the PREVIOUS run's pairs
+                # file in place while reporting new_pairs=0 — a consumer
+                # ingesting --pairs-out after each run would re-ingest the
+                # old pairs as this run's output (r5 jobs review; same
+                # stale-file contract the build path already honors).
+                # doc_a/doc_b take the TABLE's conv_id type (not a STRING
+                # literal) so the pairs schema is identical across no-op
+                # and real runs — a hardcoded type flips the column type
+                # whenever the table happens not to have moved. The type
+                # comes straight from the version's recorded schema dict
+                # (already fetched by the refresh-base probe above —
+                # table_version == to_version on this branch): building a
+                # full versioned read PLAN just to ask one column's type is
+                # pure metadata-resolution tax on every no-op cron tick
+                # (r5 review)
+                from pyspark.sql import types as T
 
-            doc_t = T.StructType.fromJson(
-                base_meta["schema"]
-            )["conv_id"].dataType
-            empty_schema = T.StructType([
-                T.StructField("doc_a", doc_t),
-                T.StructField("doc_b", doc_t),
-                T.StructField("n_common", T.LongType()),
-                T.StructField("jaccard", T.DoubleType()),
-            ])
-            spark.createDataFrame(
-                [], empty_schema
-            ).write.mode("overwrite").parquet(args.pairs_out)
-            out["pairs_path"] = args.pairs_out
-        print(json.dumps(out))
-        return 0
-    else:
-        from_version = meta["table_version"]
-        out.update(mode="refresh", from_version=from_version)
-        # changed-key-count-sized and consumed three times (count, the
-        # delta semi-join, the stale anti-join) — materialize once so
-        # the CDC read does not run per consumer
-        changed = (
-            tbl.read_changes(from_version, to_version)
-            .select(F.col("conv_id").alias("doc_id"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # O(drift): only changed conversations are re-assembled — the
-        # semi-join filters the TURNS frame, below the assembly groupBy
-        turns_now = tbl.read(version=to_version)
-        delta_turns = turns_now.join(
-            F.broadcast(changed.select(F.col("doc_id").alias("conv_id"))),
-            "conv_id", "semi",
-        )
-        fresh = build_index(_docs_frame(delta_turns)).localCheckpoint()
-        out["changed_docs"] = changed.count()
-        stale = spark.read.parquet(
-            os.path.join(args.index_dir, meta["data_dir"])
-        )
-        # swap: every changed doc's rows leave (covers deletes — a
-        # vanished conversation simply contributes no fresh rows)
-        idx = stale.join(changed, "doc_id", "left_anti").unionByName(fresh)
-        idx.write.mode("overwrite").option("compression", "zstd").parquet(
-            data_dir
-        )
-        idx = spark.read.parquet(data_dir)
-        # probe fresh rows against the refreshed index → NEW pairs
-        cand = probe_band_index(fresh, idx)
-        cand_ids = (
-            cand.select(F.col("doc_a").alias("conv_id"))
-            .unionByName(cand.select(F.col("doc_b").alias("conv_id")))
-            .distinct()
-        )
-        # exact verify assembles ONLY candidate conversations
-        cand_docs = _docs_frame(
-            turns_now.join(F.broadcast(cand_ids), "conv_id", "semi")
-        )
-        new_pairs = _exact_jaccard(
-            cand, char_shingles(cand_docs, args.k), args.threshold
-        )
+                doc_t = T.StructType.fromJson(
+                    base_meta["schema"]
+                )["conv_id"].dataType
+                empty_schema = T.StructType([
+                    T.StructField("doc_a", doc_t),
+                    T.StructField("doc_b", doc_t),
+                    T.StructField("n_common", T.LongType()),
+                    T.StructField("jaccard", T.DoubleType()),
+                ])
+                spark.createDataFrame(
+                    [], empty_schema
+                ).write.mode("overwrite").parquet(args.pairs_out)
+                out["pairs_path"] = args.pairs_out
+            print(json.dumps(out))
+            return 0
+        else:
+            from_version = meta["table_version"]
+            out.update(mode="refresh", from_version=from_version)
+            # changed-key-count-sized and consumed three times (count, the
+            # delta semi-join, the stale anti-join) — materialize once so
+            # the CDC read does not run per consumer
+            changed = (
+                tbl.read_changes(from_version, to_version)
+                .select(F.col("conv_id").alias("doc_id"))
+                .distinct()
+                .localCheckpoint()
+            )
+            # O(drift): only changed conversations are re-assembled — the
+            # semi-join filters the TURNS frame, below the assembly groupBy
+            turns_now = tbl.read(version=to_version)
+            delta_turns = turns_now.join(
+                F.broadcast(changed.select(F.col("doc_id").alias("conv_id"))),
+                "conv_id", "semi",
+            )
+            fresh = build_index(_docs_frame(delta_turns)).localCheckpoint()
+            out["changed_docs"] = changed.count()
+            stale = spark.read.parquet(
+                os.path.join(args.index_dir, meta["data_dir"])
+            )
+            # swap: every changed doc's rows leave (covers deletes — a
+            # vanished conversation simply contributes no fresh rows)
+            idx = stale.join(changed, "doc_id", "left_anti").unionByName(fresh)
+            idx.write.mode("overwrite").option("compression", "zstd").parquet(
+                data_dir
+            )
+            idx = spark.read.parquet(data_dir)
+            # probe fresh rows against the refreshed index → NEW pairs
+            cand = probe_band_index(fresh, idx)
+            cand_ids = (
+                cand.select(F.col("doc_a").alias("conv_id"))
+                .unionByName(cand.select(F.col("doc_b").alias("conv_id")))
+                .distinct()
+            )
+            # exact verify assembles ONLY candidate conversations
+            cand_docs = _docs_frame(
+                turns_now.join(F.broadcast(cand_ids), "conv_id", "semi")
+            )
+            new_pairs = _exact_jaccard(
+                cand, char_shingles(cand_docs, args.k), args.threshold
+            )
+    except (FileNotFoundError, SnapshotExpiredError):
+        # a concurrent writer expired a version this run pinned: no publish
+        gone = sorted(set(pins) - set(tbl.versions()))
+        if not gone:
+            raise
+        print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
+        return 1
 
     rows = spark.read.parquet(data_dir).count()
     out["index_rows"] = rows

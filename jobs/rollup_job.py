@@ -30,8 +30,9 @@ The rollup dir is a version log (``target/versions.py``): each run
 builds into a fresh ``snap-{N}-*`` dir and publishes ``v{N}.json`` with
 one put-if-absent link, so a reader of the highest version never sees a
 half-written refresh, and of two overlapping runs the first to link
-wins (the other exits 1 with a conflict). The last two versions stay
-readable. Prints one JSON line with mode, from/to versions, dirty-cell
+wins (the other exits 1 with a conflict), and a run whose pinned table
+version is expired under it exits 1 without publishing. The last two
+versions stay readable. Prints one JSON line with mode, from/to versions, dirty-cell
 count and rollup row count.
 """
 
@@ -84,7 +85,7 @@ def main() -> int:
         release_rollup_partials,
         rollup_timeseries,
     )
-    from etl_reconciliate_spark.target.table import KEY_COLS, TargetTable
+    from etl_reconciliate_spark.target.table import KEY_COLS, SnapshotExpiredError, TargetTable
 
     grains = tuple(g.strip() for g in args.grains.split(",") if g.strip())
     key_cols = tuple(c.strip() for c in args.key_cols.split(",") if c.strip())
@@ -144,56 +145,65 @@ def main() -> int:
             out["mode"] = "rebuild_expired_base"
             meta = None
 
-    if meta is None:
-        # "rebuild" (deliberate, prior rollup exists) vs "build" (first
-        # run); the expiry branch above already stamped
-        # "rebuild_expired_base" when the refresh base was expired
-        out.setdefault("mode", "build" if prior_meta is None else "rebuild")
-        # pin the read to to_version: a commit landing between
-        # current_version() and the read would otherwise leak
-        # post-to_version events into a rollup whose meta records
-        # to_version (mixed-snapshot output until the next refresh)
-        rollup = rollup_timeseries(
-            _events_frame(tbl, key_cols, version=to_version), grains=grains,
-            key_cols=key_cols, value_col="n_tokens",
-        )
-        rollup.write.mode("overwrite").parquet(data_dir)
-    elif meta["table_version"] == to_version:
-        out["dirty_cells"] = 0
-        out["rollup_rows"] = meta["rollup_rows"]
-        print(json.dumps(out))
-        return 0
-    else:
-        from_version = meta["table_version"]
-        changes = tbl.read_changes(from_version, to_version)
-        # postimage cells (inserts/updates) + delete preimages (deletes
-        # carry the last-known payload); a null-ts row occupies no cell
-        post = changes.filter(changes["ts"].isNotNull()).select(
-            "ts", *key_cols
-        )
-        # preimage cells of updated/deleted keys, probed from the
-        # snapshot the rollup was built against (semi-join on the
-        # changed keys — O(changed)) — covers a turn whose ts/role
-        # itself moved and must vacate its old cell
-        from pyspark.sql import functions as F
+    pins = [to_version] + ([meta["table_version"]] if meta else [])
+    try:
+        if meta is None:
+            # "rebuild" (deliberate, prior rollup exists) vs "build" (first
+            # run); the expiry branch above already stamped
+            # "rebuild_expired_base" when the refresh base was expired
+            out.setdefault("mode", "build" if prior_meta is None else "rebuild")
+            # pin the read to to_version: a commit landing between
+            # current_version() and the read would otherwise leak
+            # post-to_version events into a rollup whose meta records
+            # to_version (mixed-snapshot output until the next refresh)
+            rollup = rollup_timeseries(
+                _events_frame(tbl, key_cols, version=to_version), grains=grains,
+                key_cols=key_cols, value_col="n_tokens",
+            )
+            rollup.write.mode("overwrite").parquet(data_dir)
+        elif meta["table_version"] == to_version:
+            out["dirty_cells"] = 0
+            out["rollup_rows"] = meta["rollup_rows"]
+            print(json.dumps(out))
+            return 0
+        else:
+            from_version = meta["table_version"]
+            changes = tbl.read_changes(from_version, to_version)
+            # postimage cells (inserts/updates) + delete preimages (deletes
+            # carry the last-known payload); a null-ts row occupies no cell
+            post = changes.filter(changes["ts"].isNotNull()).select(
+                "ts", *key_cols
+            )
+            # preimage cells of updated/deleted keys, probed from the
+            # snapshot the rollup was built against (semi-join on the
+            # changed keys — O(changed)) — covers a turn whose ts/role
+            # itself moved and must vacate its old cell
+            from pyspark.sql import functions as F
 
-        pre = (
-            tbl.read(version=from_version)
-            .join(changes.select(*KEY_COLS).distinct(), list(KEY_COLS), "semi")
-            .filter(F.col("ts").isNotNull())
-            .select("ts", *key_cols)
-        )
-        dirty = post.unionByName(pre).distinct()
-        out["dirty_cells"] = dirty.count()
-        stale = spark.read.parquet(
-            os.path.join(args.rollup_dir, meta["data_dir"])
-        )
-        refreshed = refresh_rollup(
-            _events_frame(tbl, key_cols, version=to_version), stale, dirty,
-            grains=grains, key_cols=key_cols, value_col="n_tokens",
-        )
-        refreshed.write.mode("overwrite").parquet(data_dir)
-        release_rollup_partials()
+            pre = (
+                tbl.read(version=from_version)
+                .join(changes.select(*KEY_COLS).distinct(), list(KEY_COLS), "semi")
+                .filter(F.col("ts").isNotNull())
+                .select("ts", *key_cols)
+            )
+            dirty = post.unionByName(pre).distinct()
+            out["dirty_cells"] = dirty.count()
+            stale = spark.read.parquet(
+                os.path.join(args.rollup_dir, meta["data_dir"])
+            )
+            refreshed = refresh_rollup(
+                _events_frame(tbl, key_cols, version=to_version), stale, dirty,
+                grains=grains, key_cols=key_cols, value_col="n_tokens",
+            )
+            refreshed.write.mode("overwrite").parquet(data_dir)
+            release_rollup_partials()
+    except (FileNotFoundError, SnapshotExpiredError):
+        # a concurrent writer expired a version this run pinned: no publish
+        gone = sorted(set(pins) - set(tbl.versions()))
+        if not gone:
+            raise
+        print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
+        return 1
 
     rows = spark.read.parquet(data_dir).count()
     out["rollup_rows"] = rows

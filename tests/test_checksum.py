@@ -121,3 +121,17 @@ def test_key_cols_guard(spark, drifted):
     src, tgt = drifted
     with pytest.raises(ValueError, match="key_cols"):
         checksum_reconcile(src, tgt, key_cols=["conv_id"])
+
+
+def test_identical_tables_no_drill_down(spark, drifted, tmp_path):
+    """Zero dirty blocks: the dirty ids are collected on the driver and
+    the result is an empty frame whose plan neither joins nor scans."""
+    src, _ = drifted
+    path = str(tmp_path / "src")
+    src.write.parquet(path)
+    df = spark.read.parquet(path)
+    out = checksum_reconcile(df, df, n_blocks=N_BLOCKS)
+    assert out.collect() == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "FileScan" not in plan, plan
+    assert out.columns == ["conv_id", "turn_idx", "status", "src_text", "tgt_text"]

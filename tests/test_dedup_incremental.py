@@ -207,3 +207,38 @@ def test_dedup_index_job_measure_version_mismatch_rebuilds(
     noop = _run(monkeypatch, capsys, "--target", tbl.path,
                 "--index-dir", idir, "--refresh")
     assert noop["mode"] == "refresh" and noop["changed_docs"] == 0
+
+
+def test_dedup_index_job_refresh_expired_mid_run(spark, tmp_path, capsys,
+                                                 monkeypatch):
+    """A refresh whose pinned table version a concurrent writer expires
+    under it exits 1 with one JSON error line naming that version, and
+    publishes nothing."""
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    tbl.init(SCHEMA)
+    tbl.merge_apply(spark.createDataFrame(
+        [(1, "I", "c1", 0, "user", LONG, T0)], BATCH), {"lsn_hi": 1})
+    idir = str(tmp_path / "idx")
+    _run(monkeypatch, capsys, "--target", tbl.path, "--index-dir", idir)
+    from_v = read_version(idir)["table_version"]
+    tbl.merge_apply(spark.createDataFrame(
+        [(2, "I", "c2", 0, "user", "other text", T0)], BATCH), {"lsn_hi": 2})
+    published = list_versions(idir)
+
+    read_changes = TargetTable.read_changes
+
+    def racing(self, *a, **kw):
+        # the concurrent writer: one more commit, then keep only it
+        self.merge_apply(spark.createDataFrame(
+            [(3, "I", "c3", 0, "user", "more", T0)], BATCH), {"lsn_hi": 3})
+        self.expire_snapshots(keep_last=1)
+        return read_changes(self, *a, **kw)
+
+    monkeypatch.setattr(TargetTable, "read_changes", racing)
+    monkeypatch.setattr(sys, "argv", ["dedup_index_job.py", "--target",
+                                      tbl.path, "--index-dir", idir, "--refresh"])
+    assert dedup_index_job.main() == 1
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert [json.loads(x) for x in lines] == [
+        {"error": f"table version {from_v} expired mid-run"}]
+    assert list_versions(idir) == published

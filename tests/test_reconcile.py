@@ -356,3 +356,41 @@ def test_reconcile_job_expired_since_falls_back_to_full(spark, tmp_path,
     assert reconcile_job.main() == 2
     err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "invalid --changed-since-version" in err["error"]
+
+
+def test_no_hot_key_is_one_plain_join(spark, frames):
+    """With no key above ``hot_threshold`` the census resolves to an
+    empty hot set on the driver, and the join is ONE plain full outer
+    join: no salted legs, no union."""
+    src, tgt = frames
+    plan = reconcile(src, tgt)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join ") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def test_salted_null_key_component_hot(spark):
+    """A hot key with a null component round-trips through the
+    driver-side hot set: the salted result equals a null-safe plain full
+    outer join as a multiset."""
+    from collections import Counter
+
+    from etl_reconciliate_spark.operators.skew import salted_full_outer
+
+    rows_s = [(None, 0, f"s{i}") for i in range(5)] + [("c", 1, "x"), (None, 2, "n")]
+    rows_t = [(None, 0, f"t{i}") for i in range(3)] + [("d", 1, "y"), (None, 2, "n")]
+    schema = "conv_id STRING, turn_idx INT, text STRING"
+    src = spark.createDataFrame(rows_s, schema)
+    tgt = spark.createDataFrame(rows_t, schema)
+    salted = salted_full_outer(
+        src, tgt, ["conv_id", "turn_idx"], n_salts=4, hot_threshold=2
+    )
+    ls = src.select([src[c].alias(f"l_{c}") for c in src.columns])
+    rt = tgt.select([tgt[c].alias(f"r_{c}") for c in tgt.columns])
+    plain = ls.join(
+        rt,
+        ls.l_conv_id.eqNullSafe(rt.r_conv_id) & (ls.l_turn_idx == rt.r_turn_idx),
+        "full_outer",
+    )
+    got = Counter(tuple(r) for r in salted.collect())
+    assert got == Counter(tuple(r) for r in plain.collect())
+    assert sum(got.values()) == 5 * 3 + 1 + 1 + 1

@@ -4,13 +4,14 @@ from the table's CDC-out, preimage-cell vacation, no-op fast path."""
 import datetime
 import json
 import os
+import re
 import sys
 
 import pytest
 from pyspark.sql import types as T
 
 from etl_reconciliate_spark.target import versions
-from etl_reconciliate_spark.target.table import SnapshotExpiredError, TargetTable
+from etl_reconciliate_spark.target.table import TargetTable
 from etl_reconciliate_spark.target.versions import list_versions, read_version
 
 sys.path.insert(0, "/root/repo/jobs")
@@ -278,15 +279,13 @@ def test_rollup_refresh_races_replay_with_expiry(spark, tmp_path, capsys,
     monkeypatch.setattr(sys, "argv", ["rollup_job.py", *refresh])
     done = threading.Event()
     commits = [0]
-    started, errors = [], []
+    started, errors, codes = [], [], []
 
     def loop():
         while not done.is_set():
             started.append(commits[0])
             try:
-                rollup_job.main()
-            except (FileNotFoundError, SnapshotExpiredError):
-                pass  # a version it pinned expired mid-run: no publish
+                codes.append(rollup_job.main())
             except Exception as e:
                 errors.append(e)
                 return
@@ -306,6 +305,12 @@ def test_rollup_refresh_races_replay_with_expiry(spark, tmp_path, capsys,
         t.join(timeout=300)
     assert not t.is_alive() and not errors, errors
     raced = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    # a run whose pinned version expired under it exits 1 with one JSON
+    # error line naming that version, and publishes nothing
+    failed = [r["error"] for r in raced if "error" in r]
+    assert len(raced) == len(codes) and codes.count(1) == len(failed), (codes, raced)
+    assert set(codes) <= {0, 1}, codes
+    assert all(re.fullmatch(r"table version \d+ expired mid-run", e) for e in failed), failed
     assert any(r.get("mode") == "refresh" and r["dirty_cells"] > 0
                for r in raced), raced  # incremental runs did race
 
