@@ -36,16 +36,18 @@ from __future__ import annotations
 import functools
 import glob
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
 from etl_reconciliate_spark.schemas import KEY_COLS, META_LSN
-# CommitConflictError is part of this module's API (callers catch it
-# from here); the version log defines it
+# CommitConflictError and SnapshotExpiredError are part of this
+# module's API (callers catch them from here); the version log defines
+# them
 from etl_reconciliate_spark.target.versions import (
     CommitConflictError,
+    SnapshotExpiredError,
+    data_name,
     expire_versions,
     list_versions,
     publish_version,
@@ -87,20 +89,6 @@ def _wider(a: T.DataType, b: T.DataType) -> T.DataType:
 class SchemaConflictError(RuntimeError):
     """A batch column's type conflicts with the table schema and is not
     a safe widening promotion."""
-
-
-class SnapshotExpiredError(ValueError):
-    """A version required by the requested read was dropped by
-    ``expire_snapshots``.
-
-    Subclasses ``ValueError`` for backward compatibility, but exists as
-    its own type because the recovery differs from a plain bad-argument
-    ``ValueError``: an expired base means the deltas are unrecoverable
-    and the caller should re-snapshot / rebuild (the jobs'
-    ``bootstrap_expired_cursor`` / ``rebuild_expired_base`` paths),
-    whereas ``from_version > to_version`` is a caller range error that
-    must fail loudly — conflating the two let a bounded export rewind a
-    consumer cursor (r5 jobs review)."""
 
 
 def _conform(df: DataFrame, want: T.StructType) -> DataFrame:
@@ -269,9 +257,6 @@ class TargetTable:
             raise FileNotFoundError(f"no committed version under {self.path}")
         return vs[-1]
 
-    def _meta_path(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:06d}.json")
-
     def metadata(self, version: int | None = None) -> dict:
         return read_version(self.path, version)
 
@@ -287,7 +272,7 @@ class TargetTable:
     def init(self, schema: T.StructType, offsets: dict | None = None) -> None:
         """Create version 0: an empty snapshot."""
         os.makedirs(self.path, exist_ok=True)
-        data_dir = f"snap-{0:06d}"
+        data_dir = data_name("snap", 0)
         empty = self.spark.createDataFrame([], schema=_with_meta(schema))
         empty.write.mode("overwrite").parquet(os.path.join(self.path, data_dir))
         self._commit(
@@ -722,7 +707,7 @@ class TargetTable:
             )
         )
         version = base_meta["version"] + 1
-        delta_dir = f"delta-{version:06d}-{uuid.uuid4().hex[:8]}"
+        delta_dir = data_name("delta", version)
         out_path = os.path.join(self.path, delta_dir)
         delta_rows.repartition(self.n_buckets, *KEY_COLS).write.option(
             "compression", PARQUET_CODEC
@@ -787,7 +772,7 @@ class TargetTable:
                 ~F.coalesce(F.col(META_DELETED), F.lit(False))
             )
         version = meta["version"] + 1
-        data_dir = f"snap-{version:06d}-{uuid.uuid4().hex[:8]}"
+        data_dir = data_name("snap", version)
         out_path = os.path.join(self.path, data_dir)
         from pyspark.sql import Observation
 

@@ -3,9 +3,9 @@
 Every versioned artifact publishes through this module — the target
 table's snapshots and the rollup / dedup-index job outputs alike. A
 root directory holds the version files plus the data dirs they
-reference (``snap-*`` / ``delta-*``, named by recorded path relative to
-the root). The current version is the highest published file; there is
-no pointer to swap.
+reference (``snap-*`` / ``delta-*``, named by :func:`data_name` and
+recorded by path relative to the root). The current version is the
+highest published file; there is no pointer to swap.
 
 * **publish** — :func:`publish_version` writes the complete metadata to
   a unique temp file and hard-links it into its slot. The link is the
@@ -17,6 +17,9 @@ no pointer to swap.
   references. The slot number in a name is its writer's claim: a name
   whose slot is above the current version may still be linked by a
   live writer, so it is never collected.
+* **refresh** — :func:`refresh_output` is the run of a job output
+  derived from a table: build or incrementally refresh it, publish it
+  as the next version, expire the old ones.
 """
 
 from __future__ import annotations
@@ -26,6 +29,20 @@ import os
 import shutil
 import time
 import uuid
+
+
+class SnapshotExpiredError(ValueError):
+    """A version required by the requested read was dropped by
+    ``expire_snapshots``.
+
+    Subclasses ``ValueError`` for backward compatibility, but exists as
+    its own type because the recovery differs from a plain bad-argument
+    ``ValueError``: an expired base means the deltas are unrecoverable
+    and the caller should re-snapshot / rebuild (the jobs'
+    ``bootstrap_expired_cursor`` / ``rebuild_expired_base`` paths),
+    whereas ``from_version > to_version`` is a caller range error that
+    must fail loudly — conflating the two let a bounded export rewind a
+    consumer cursor (r5 jobs review)."""
 
 
 class CommitConflictError(RuntimeError):
@@ -107,6 +124,14 @@ def publish_version(root: str, version: int, meta: dict) -> None:
             f"version {version} of {root} was already published and "
             f"expired; this writer's base snapshot is stale"
         )
+
+
+def data_name(kind: str, slot: int) -> str:
+    """A fresh name for a ``snap`` or ``delta`` data dir written for
+    version ``slot``: the slot that :func:`_slot` reads back, plus a
+    random suffix that keeps a concurrent writer of the same slot out
+    of this dir."""
+    return f"{kind}-{slot:06d}-{uuid.uuid4().hex[:8]}"
 
 
 def _slot(name: str) -> int | None:
@@ -195,3 +220,105 @@ def expire_versions(
                 os.remove(p)
         except OSError:
             continue
+
+
+def refresh_output(
+    tbl, root: str, *, name: str, params: dict, measure_version,
+    refresh: bool, sweep_grace_secs: float, build, update, unchanged,
+) -> int:
+    """One run of a job output derived from table ``tbl``, published as
+    the next version of ``root``: prints one JSON line and returns the
+    exit code (0, or 1 with an ``{"error": ...}`` line).
+
+    The output's metadata records ``params``, ``measure_version``, the
+    ``table_version`` it was built from, its ``data_dir`` and its
+    ``{name}_rows``. The run pins the table's current version and picks
+    a mode:
+
+    * ``build`` — no output yet; ``rebuild`` — one exists but
+      ``refresh`` is off;
+    * an error — ``refresh`` over an output whose params differ;
+    * ``rebuild_measure_changed`` — the output was measured under
+      another ``measure_version``: refreshed cells would sit next to
+      stale ones, so it is rebuilt;
+    * ``rebuild_expired_base`` — the table version it was built from
+      is expired, so there is nothing to diff against. A deliberate
+      rebuild is plain ``rebuild``, so this label fires only when table
+      expiry outpaces the refresh cadence;
+    * ``refresh`` — otherwise. When the table has not moved it is a
+      no-op: ``unchanged(table_meta)`` supplies the report and nothing
+      is published.
+
+    The bodies write the output into a fresh ``snap-*`` dir and return
+    report fields: ``build(to_version, data_dir)`` and
+    ``update(from_version, to_version, stale_dir, data_dir)``. A table
+    version they read that is expired mid-run ends the run with an
+    error line naming it, unpublished. Of two runs on one base the
+    first to link wins and the other exits 1 with a conflict. After a
+    publish all but the last two versions expire, and unreferenced
+    dirs older than ``sweep_grace_secs`` are collected."""
+    if not tbl.exists():
+        print(json.dumps({"error": f"no table at {tbl.path}"}))
+        return 1
+    to_version = tbl.current_version()
+    published = list_versions(root)
+    base = published[-1] if published else -1
+    prior = read_version(root, base) if published else None
+    rows_key = f"{name}_rows"
+    out = {"to_version": to_version, **params}
+    meta = None  # the refresh base, only when refreshing is possible
+    if prior is None:
+        out["mode"] = "build"
+    elif not refresh:
+        out["mode"] = "rebuild"
+    elif {k: prior.get(k) for k in params} != params:
+        print(json.dumps({"error": f"existing {name} has different "
+                          f"{'/'.join(params)}; rebuild without --refresh"}))
+        return 1
+    elif prior.get("measure_version") != measure_version:
+        out["mode"] = "rebuild_measure_changed"
+    else:
+        out.update(mode="refresh", from_version=prior["table_version"])
+        try:
+            table_meta = tbl.metadata(prior["table_version"])
+            meta = prior
+        except FileNotFoundError:
+            out["mode"] = "rebuild_expired_base"
+    if meta is not None and meta["table_version"] == to_version:
+        out.update(unchanged(table_meta))
+        out[rows_key] = meta[rows_key]
+        print(json.dumps(out))
+        return 0
+
+    os.makedirs(root, exist_ok=True)
+    # the slot this run publishes, named into its build dir: expiry
+    # never collects a dir whose slot is not yet published
+    data_dir = os.path.join(root, data_name("snap", base + 1))
+    pins = [to_version] + ([meta["table_version"]] if meta else [])
+    try:
+        if meta is None:
+            out.update(build(to_version, data_dir))
+        else:
+            out.update(update(meta["table_version"], to_version,
+                              os.path.join(root, meta["data_dir"]), data_dir))
+    except (FileNotFoundError, SnapshotExpiredError):
+        # a concurrent writer expired a version this run pinned
+        gone = sorted(set(pins) - set(tbl.versions()))
+        if not gone:
+            raise
+        print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
+        return 1
+
+    out[rows_key] = tbl.spark.read.parquet(data_dir).count()
+    try:
+        publish_version(root, base + 1, {
+            "table_version": to_version, **params,
+            "data_dir": os.path.basename(data_dir), rows_key: out[rows_key],
+            "measure_version": measure_version,
+        })
+    except CommitConflictError as e:
+        print(json.dumps({"error": f"publish conflict: {e}"}))
+        return 1
+    expire_versions(root, keep_last=2, orphan_grace_secs=sweep_grace_secs)
+    print(json.dumps(out))
+    return 0

@@ -14,11 +14,7 @@ and each refresh
    is semi-joined on the changed conv_ids BEFORE the assembly groupBy,
    so the read is O(drift), bucket-prunable on a keyed table),
 3. swaps their index rows (anti-join out stale rows ∪ fresh rows) into
-   a new ``snap-{N}-*`` dir published as ``v{N}.json`` of the index
-   dir's version log (``target/versions.py``: one put-if-absent link, so
-   readers never see a half-written index and of two overlapping runs
-   the first to link wins — the other exits 1 with a conflict; a run
-   whose pinned table version is expired under it exits 1, unpublished),
+   the next version of the index dir's version log,
 4. probes the fresh rows against the updated index and reports the NEW
    near-dup pairs (exact-Jaccard verified; the verify assembles only
    candidate conversations).
@@ -34,8 +30,9 @@ agree bit-for-bit — no epoch drift, no rebuild-to-trust.
     # scheduled incremental refresh (no-op when the table hasn't moved)
     ... --target /path/tbl --index-dir /path/dedup_idx --refresh
 
-Prints one JSON line with mode, from/to versions, changed/indexed doc
-counts and new-pair count.
+``target.versions.refresh_output`` runs each build or refresh (modes,
+publish, conflicts, expiry) and prints its JSON line: mode, from/to
+versions, changed/indexed doc counts and new-pair count.
 
 reference: no equivalent in the reference app (its only dedup is the
 batch-id NOT-IN filter, reader/*.java) — this is the §"beyond the
@@ -45,10 +42,7 @@ reference" training-data surface, CDC-native.
 from __future__ import annotations
 
 import argparse
-import json
-import os
 import sys
-import uuid
 
 
 def _docs_frame(turns):
@@ -98,58 +92,10 @@ def main() -> int:
         minhash_band_index,
         probe_band_index,
     )
-    from etl_reconciliate_spark.target.table import SnapshotExpiredError, TargetTable
-    from etl_reconciliate_spark.target.versions import (
-        CommitConflictError,
-        expire_versions,
-        list_versions,
-        publish_version,
-        read_version,
-    )
+    from etl_reconciliate_spark.target.table import TargetTable
+    from etl_reconciliate_spark.target.versions import refresh_output
 
     tbl = TargetTable(spark, args.target)
-    if not tbl.exists():
-        print(json.dumps({"error": f"no table at {args.target}"}))
-        return 1
-    to_version = tbl.current_version()
-    params = {"k": args.k, "bands": args.bands,
-              "rows_per_band": args.rows_per_band}
-    published = list_versions(args.index_dir)
-    base = published[-1] if published else -1
-    prior_meta = read_version(args.index_dir, base) if published else None
-    meta = None
-    expired = False
-    remeasured = False
-    if args.refresh and prior_meta is not None:
-        meta = prior_meta
-        if {k: meta.get(k) for k in params} != params:
-            print(json.dumps({"error": "existing index has different "
-                              "k/bands/rows_per_band; rebuild without "
-                              "--refresh"}))
-            return 1
-        if meta.get("measure_version") != SIGNATURE_VERSION:
-            # built under another tokenizer OR hash family (a hash-family
-            # bump alone de-collides every band): full rebuild, see
-            # textstats.TOKENIZER_VERSION
-            remeasured = True
-            meta = None
-    if meta is not None:
-        try:
-            # keep the dict: the no-op branch reads the schema off it
-            base_meta = tbl.metadata(meta["table_version"])
-        except FileNotFoundError:
-            meta = None  # recorded snapshot expired → full rebuild
-            expired = True
-            base_meta = None
-
-    out = {"to_version": to_version, **params}
-    os.makedirs(args.index_dir, exist_ok=True)
-    # the slot this run publishes, named into its build dir: expiry
-    # never collects a dir whose slot is not yet published. The random
-    # suffix keeps an overlapping run on the same base out of this dir.
-    data_name = f"snap-{base + 1:06d}-{uuid.uuid4().hex[:8]}"
-    data_dir = os.path.join(args.index_dir, data_name)
-    new_pairs = None
 
     def build_index(docs):
         return minhash_band_index(
@@ -157,146 +103,110 @@ def main() -> int:
             rows_per_band=args.rows_per_band,
         )
 
-    pins = [to_version] + ([meta["table_version"]] if meta else [])
-    try:
-        if meta is None:
-            # "rebuild_expired_base" ONLY when the refresh base actually
-            # expired — it is the signal that expire_snapshots outpaces the
-            # refresh cadence; a deliberate rebuild over a healthy index
-            # (no --refresh) is just "rebuild" (r5 jobs review: the old
-            # label fired false expiry alarms on intentional rebuilds)
-            out["mode"] = ("build" if prior_meta is None
-                           else "rebuild_expired_base" if expired
-                           else "rebuild_measure_changed" if remeasured
-                           else "rebuild")
-            docs = _docs_frame(tbl.read(version=to_version))
-            idx = build_index(docs)
-            idx.write.mode("overwrite").option("compression", "zstd").parquet(
-                data_dir
-            )
-            out["changed_docs"] = None
-            if args.pairs_out:
-                # a (re)build with --pairs-out must not leave a previous
-                # refresh's pairs file in place as if it were this run's
-                # output — write the FULL-corpus pair set (the initial
-                # dedup a build is for)
-                new_pairs = lsh_jaccard_pairs(
-                    docs, k=args.k, n_bands=args.bands,
-                    rows_per_band=args.rows_per_band,
-                    threshold=args.threshold,
-                )
-        elif meta["table_version"] == to_version:
-            out.update(mode="refresh", from_version=to_version,
-                       changed_docs=0, new_pairs=0,
-                       index_rows=meta["index_rows"])
-            if args.pairs_out:
-                # a no-op refresh must not leave the PREVIOUS run's pairs
-                # file in place while reporting new_pairs=0 — a consumer
-                # ingesting --pairs-out after each run would re-ingest the
-                # old pairs as this run's output (r5 jobs review; same
-                # stale-file contract the build path already honors).
-                # doc_a/doc_b take the TABLE's conv_id type (not a STRING
-                # literal) so the pairs schema is identical across no-op
-                # and real runs — a hardcoded type flips the column type
-                # whenever the table happens not to have moved. The type
-                # comes straight from the version's recorded schema dict
-                # (already fetched by the refresh-base probe above —
-                # table_version == to_version on this branch): building a
-                # full versioned read PLAN just to ask one column's type is
-                # pure metadata-resolution tax on every no-op cron tick
-                # (r5 review)
-                from pyspark.sql import types as T
+    def write_index(idx, data_dir):
+        idx.write.mode("overwrite").option("compression", "zstd").parquet(
+            data_dir
+        )
 
-                doc_t = T.StructType.fromJson(
-                    base_meta["schema"]
-                )["conv_id"].dataType
-                empty_schema = T.StructType([
-                    T.StructField("doc_a", doc_t),
-                    T.StructField("doc_b", doc_t),
-                    T.StructField("n_common", T.LongType()),
-                    T.StructField("jaccard", T.DoubleType()),
-                ])
-                spark.createDataFrame(
-                    [], empty_schema
-                ).write.mode("overwrite").parquet(args.pairs_out)
-                out["pairs_path"] = args.pairs_out
-            print(json.dumps(out))
-            return 0
-        else:
-            from_version = meta["table_version"]
-            out.update(mode="refresh", from_version=from_version)
-            # changed-key-count-sized and consumed three times (count, the
-            # delta semi-join, the stale anti-join) — materialize once so
-            # the CDC read does not run per consumer
-            changed = (
-                tbl.read_changes(from_version, to_version)
-                .select(F.col("conv_id").alias("doc_id"))
-                .distinct()
-                .localCheckpoint()
-            )
-            # O(drift): only changed conversations are re-assembled — the
-            # semi-join filters the TURNS frame, below the assembly groupBy
-            turns_now = tbl.read(version=to_version)
-            delta_turns = turns_now.join(
-                F.broadcast(changed.select(F.col("doc_id").alias("conv_id"))),
-                "conv_id", "semi",
-            )
-            fresh = build_index(_docs_frame(delta_turns)).localCheckpoint()
-            out["changed_docs"] = changed.count()
-            stale = spark.read.parquet(
-                os.path.join(args.index_dir, meta["data_dir"])
-            )
-            # swap: every changed doc's rows leave (covers deletes — a
-            # vanished conversation simply contributes no fresh rows)
-            idx = stale.join(changed, "doc_id", "left_anti").unionByName(fresh)
-            idx.write.mode("overwrite").option("compression", "zstd").parquet(
-                data_dir
-            )
-            idx = spark.read.parquet(data_dir)
-            # probe fresh rows against the refreshed index → NEW pairs
-            cand = probe_band_index(fresh, idx)
-            cand_ids = (
-                cand.select(F.col("doc_a").alias("conv_id"))
-                .unionByName(cand.select(F.col("doc_b").alias("conv_id")))
-                .distinct()
-            )
-            # exact verify assembles ONLY candidate conversations
-            cand_docs = _docs_frame(
-                turns_now.join(F.broadcast(cand_ids), "conv_id", "semi")
-            )
-            new_pairs = _exact_jaccard(
-                cand, char_shingles(cand_docs, args.k), args.threshold
-            )
-    except (FileNotFoundError, SnapshotExpiredError):
-        # a concurrent writer expired a version this run pinned: no publish
-        gone = sorted(set(pins) - set(tbl.versions()))
-        if not gone:
-            raise
-        print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
-        return 1
-
-    rows = spark.read.parquet(data_dir).count()
-    out["index_rows"] = rows
-    if new_pairs is not None:
+    def report_pairs(pairs):
         if args.pairs_out:
-            new_pairs.write.mode("overwrite").parquet(args.pairs_out)
-            out["new_pairs"] = spark.read.parquet(args.pairs_out).count()
-            out["pairs_path"] = args.pairs_out
-        else:
-            out["new_pairs"] = new_pairs.count()
-    try:
-        publish_version(args.index_dir, base + 1, {
-            "table_version": to_version, **params,
-            "data_dir": data_name, "index_rows": rows,
-            "measure_version": SIGNATURE_VERSION,
-        })
-    except CommitConflictError as e:
-        print(json.dumps({"error": f"publish conflict: {e}"}))
-        return 1
-    expire_versions(args.index_dir, keep_last=2,
-                    orphan_grace_secs=args.sweep_grace_secs)
-    print(json.dumps(out))
-    return 0
+            pairs.write.mode("overwrite").parquet(args.pairs_out)
+            return {"new_pairs": spark.read.parquet(args.pairs_out).count(),
+                    "pairs_path": args.pairs_out}
+        return {"new_pairs": pairs.count()}
+
+    def build(to_version, data_dir):
+        docs = _docs_frame(tbl.read(version=to_version))
+        write_index(build_index(docs), data_dir)
+        if not args.pairs_out:
+            return {"changed_docs": None}
+        # a (re)build with --pairs-out must not leave a previous
+        # refresh's pairs file in place as if it were this run's
+        # output — write the FULL-corpus pair set (the initial dedup a
+        # build is for)
+        return {"changed_docs": None, **report_pairs(lsh_jaccard_pairs(
+            docs, k=args.k, n_bands=args.bands,
+            rows_per_band=args.rows_per_band, threshold=args.threshold,
+        ))}
+
+    def update(from_version, to_version, stale_dir, data_dir):
+        # changed-key-count-sized and consumed three times (count, the
+        # delta semi-join, the stale anti-join) — materialize once so
+        # the CDC read does not run per consumer
+        changed = (
+            tbl.read_changes(from_version, to_version)
+            .select(F.col("conv_id").alias("doc_id"))
+            .distinct()
+            .localCheckpoint()
+        )
+        # O(drift): only changed conversations are re-assembled — the
+        # semi-join filters the TURNS frame, below the assembly groupBy
+        turns_now = tbl.read(version=to_version)
+        delta_turns = turns_now.join(
+            F.broadcast(changed.select(F.col("doc_id").alias("conv_id"))),
+            "conv_id", "semi",
+        )
+        fresh = build_index(_docs_frame(delta_turns)).localCheckpoint()
+        changed_docs = changed.count()
+        # swap: every changed doc's rows leave (covers deletes — a
+        # vanished conversation simply contributes no fresh rows)
+        write_index(
+            spark.read.parquet(stale_dir).join(changed, "doc_id", "left_anti")
+            .unionByName(fresh),
+            data_dir,
+        )
+        # probe fresh rows against the refreshed index → NEW pairs
+        cand = probe_band_index(fresh, spark.read.parquet(data_dir))
+        cand_ids = (
+            cand.select(F.col("doc_a").alias("conv_id"))
+            .unionByName(cand.select(F.col("doc_b").alias("conv_id")))
+            .distinct()
+        )
+        # exact verify assembles ONLY candidate conversations
+        cand_docs = _docs_frame(
+            turns_now.join(F.broadcast(cand_ids), "conv_id", "semi")
+        )
+        return {"changed_docs": changed_docs, **report_pairs(_exact_jaccard(
+            cand, char_shingles(cand_docs, args.k), args.threshold
+        ))}
+
+    def unchanged(table_meta):
+        if not args.pairs_out:
+            return {"changed_docs": 0, "new_pairs": 0}
+        # a no-op refresh must not leave the PREVIOUS run's pairs file
+        # in place while reporting new_pairs=0 — a consumer ingesting
+        # --pairs-out after each run would re-ingest the old pairs as
+        # this run's output (r5 jobs review; same stale-file contract
+        # the build path already honors). doc_a/doc_b take the TABLE's
+        # conv_id type (not a STRING literal) so the pairs schema is
+        # identical across no-op and real runs — a hardcoded type flips
+        # the column type whenever the table happens not to have moved.
+        # The type comes straight from the version's recorded schema
+        # dict: building a full versioned read PLAN just to ask one
+        # column's type is pure metadata-resolution tax on every no-op
+        # cron tick (r5 review)
+        from pyspark.sql import types as T
+
+        doc_t = T.StructType.fromJson(table_meta["schema"])["conv_id"].dataType
+        spark.createDataFrame([], T.StructType([
+            T.StructField("doc_a", doc_t),
+            T.StructField("doc_b", doc_t),
+            T.StructField("n_common", T.LongType()),
+            T.StructField("jaccard", T.DoubleType()),
+        ])).write.mode("overwrite").parquet(args.pairs_out)
+        return {"changed_docs": 0, "new_pairs": 0,
+                "pairs_path": args.pairs_out}
+
+    # SIGNATURE_VERSION folds the tokenizer and the hash family: a
+    # hash-family bump alone de-collides every band
+    return refresh_output(
+        tbl, args.index_dir, name="index",
+        params={"k": args.k, "bands": args.bands,
+                "rows_per_band": args.rows_per_band},
+        measure_version=SIGNATURE_VERSION, refresh=args.refresh,
+        sweep_grace_secs=args.sweep_grace_secs, build=build, update=update,
+        unchanged=unchanged,
+    )
 
 
 if __name__ == "__main__":

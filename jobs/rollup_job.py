@@ -26,23 +26,16 @@ keys the rollup's recorded FROM-version snapshot is probed (semi-join
 on the changed keys — O(changed)) to dirty the PREIMAGE cells too, so
 a turn whose ``ts``/``role`` itself changed vacates its old cell.
 
-The rollup dir is a version log (``target/versions.py``): each run
-builds into a fresh ``snap-{N}-*`` dir and publishes ``v{N}.json`` with
-one put-if-absent link, so a reader of the highest version never sees a
-half-written refresh, and of two overlapping runs the first to link
-wins (the other exits 1 with a conflict), and a run whose pinned table
-version is expired under it exits 1 without publishing. The last two
-versions stay readable. Prints one JSON line with mode, from/to versions, dirty-cell
-count and rollup row count.
+The rollup dir is a version log; ``target.versions.refresh_output``
+runs each build or refresh (modes, publish, conflicts, expiry) and
+prints its JSON line: mode, from/to versions, dirty-cell count and
+rollup row count.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
-import os
 import sys
-import uuid
 
 
 def _events_frame(tbl, key_cols, version=None):
@@ -85,141 +78,62 @@ def main() -> int:
         release_rollup_partials,
         rollup_timeseries,
     )
-    from etl_reconciliate_spark.target.table import KEY_COLS, SnapshotExpiredError, TargetTable
+    from etl_reconciliate_spark.operators.textstats import TOKENIZER_VERSION
+    from etl_reconciliate_spark.target.table import KEY_COLS, TargetTable
+    from etl_reconciliate_spark.target.versions import refresh_output
 
     grains = tuple(g.strip() for g in args.grains.split(",") if g.strip())
     key_cols = tuple(c.strip() for c in args.key_cols.split(",") if c.strip())
     tbl = TargetTable(spark, args.target)
-    if not tbl.exists():
-        print(json.dumps({"error": f"no table at {args.target}"}))
-        return 1
-    to_version = tbl.current_version()
-    from etl_reconciliate_spark.operators.textstats import TOKENIZER_VERSION
-    from etl_reconciliate_spark.target.versions import (
-        CommitConflictError,
-        expire_versions,
-        list_versions,
-        publish_version,
-        read_version,
+
+    def build(to_version, data_dir):
+        # pin the read to to_version: a commit landing between
+        # current_version() and the read would otherwise leak
+        # post-to_version events into a rollup whose meta records
+        # to_version (mixed-snapshot output until the next refresh)
+        rollup_timeseries(
+            _events_frame(tbl, key_cols, version=to_version), grains=grains,
+            key_cols=key_cols, value_col="n_tokens",
+        ).write.mode("overwrite").parquet(data_dir)
+        return {}
+
+    def update(from_version, to_version, stale_dir, data_dir):
+        changes = tbl.read_changes(from_version, to_version)
+        # postimage cells (inserts/updates) + delete preimages (deletes
+        # carry the last-known payload); a null-ts row occupies no cell
+        post = changes.filter(changes["ts"].isNotNull()).select(
+            "ts", *key_cols
+        )
+        # preimage cells of updated/deleted keys, probed from the
+        # snapshot the rollup was built against (semi-join on the
+        # changed keys — O(changed)) — covers a turn whose ts/role
+        # itself moved and must vacate its old cell
+        from pyspark.sql import functions as F
+
+        pre = (
+            tbl.read(version=from_version)
+            .join(changes.select(*KEY_COLS).distinct(), list(KEY_COLS), "semi")
+            .filter(F.col("ts").isNotNull())
+            .select("ts", *key_cols)
+        )
+        dirty = post.unionByName(pre).distinct()
+        dirty_cells = dirty.count()
+        refresh_rollup(
+            _events_frame(tbl, key_cols, version=to_version),
+            spark.read.parquet(stale_dir), dirty,
+            grains=grains, key_cols=key_cols, value_col="n_tokens",
+        ).write.mode("overwrite").parquet(data_dir)
+        release_rollup_partials()
+        return {"dirty_cells": dirty_cells}
+
+    # token counts depend on the tokenizer only, not on the hash family
+    return refresh_output(
+        tbl, args.rollup_dir, name="rollup",
+        params={"grains": list(grains), "key_cols": list(key_cols)},
+        measure_version=TOKENIZER_VERSION, refresh=args.refresh,
+        sweep_grace_secs=args.sweep_grace_secs, build=build, update=update,
+        unchanged=lambda table_meta: {"dirty_cells": 0},
     )
-
-    published = list_versions(args.rollup_dir)
-    base = published[-1] if published else -1
-    prior_meta = read_version(args.rollup_dir, base) if published else None
-    meta = None  # the refresh base, only when refreshing is possible
-    remeasured = False
-    if args.refresh and prior_meta is not None:
-        meta = prior_meta
-        if tuple(meta["grains"]) != grains or tuple(meta["key_cols"]) != key_cols:
-            print(json.dumps({"error": "existing rollup has different "
-                              "grains/key_cols; rebuild without --refresh"}))
-            return 1
-        if meta.get("measure_version") != TOKENIZER_VERSION:
-            # built under another tokenizer (token counts don't depend on
-            # the hash family): full rebuild, see textstats.TOKENIZER_VERSION
-            remeasured = True
-            meta = None
-
-    out = {"to_version": to_version, "grains": list(grains),
-           "key_cols": list(key_cols)}
-    if remeasured:
-        out["mode"] = "rebuild_measure_changed"
-    os.makedirs(args.rollup_dir, exist_ok=True)
-    # the slot this run publishes, named into its build dir: expiry
-    # never collects a dir whose slot is not yet published. The random
-    # suffix keeps an overlapping run on the same base out of this dir.
-    data_name = f"snap-{base + 1:06d}-{uuid.uuid4().hex[:8]}"
-    data_dir = os.path.join(args.rollup_dir, data_name)
-
-    if meta is not None:
-        from_version = meta["table_version"]
-        out["mode"] = "refresh"
-        out["from_version"] = from_version
-        try:
-            tbl.metadata(from_version)
-        except FileNotFoundError:
-            # the rollup's recorded snapshot was expired
-            # (expire_snapshots) — read_changes cannot diff against it,
-            # so degrade to a full rebuild instead of dying with a
-            # traceback and no JSON line
-            out["mode"] = "rebuild_expired_base"
-            meta = None
-
-    pins = [to_version] + ([meta["table_version"]] if meta else [])
-    try:
-        if meta is None:
-            # "rebuild" (deliberate, prior rollup exists) vs "build" (first
-            # run); the expiry branch above already stamped
-            # "rebuild_expired_base" when the refresh base was expired
-            out.setdefault("mode", "build" if prior_meta is None else "rebuild")
-            # pin the read to to_version: a commit landing between
-            # current_version() and the read would otherwise leak
-            # post-to_version events into a rollup whose meta records
-            # to_version (mixed-snapshot output until the next refresh)
-            rollup = rollup_timeseries(
-                _events_frame(tbl, key_cols, version=to_version), grains=grains,
-                key_cols=key_cols, value_col="n_tokens",
-            )
-            rollup.write.mode("overwrite").parquet(data_dir)
-        elif meta["table_version"] == to_version:
-            out["dirty_cells"] = 0
-            out["rollup_rows"] = meta["rollup_rows"]
-            print(json.dumps(out))
-            return 0
-        else:
-            from_version = meta["table_version"]
-            changes = tbl.read_changes(from_version, to_version)
-            # postimage cells (inserts/updates) + delete preimages (deletes
-            # carry the last-known payload); a null-ts row occupies no cell
-            post = changes.filter(changes["ts"].isNotNull()).select(
-                "ts", *key_cols
-            )
-            # preimage cells of updated/deleted keys, probed from the
-            # snapshot the rollup was built against (semi-join on the
-            # changed keys — O(changed)) — covers a turn whose ts/role
-            # itself moved and must vacate its old cell
-            from pyspark.sql import functions as F
-
-            pre = (
-                tbl.read(version=from_version)
-                .join(changes.select(*KEY_COLS).distinct(), list(KEY_COLS), "semi")
-                .filter(F.col("ts").isNotNull())
-                .select("ts", *key_cols)
-            )
-            dirty = post.unionByName(pre).distinct()
-            out["dirty_cells"] = dirty.count()
-            stale = spark.read.parquet(
-                os.path.join(args.rollup_dir, meta["data_dir"])
-            )
-            refreshed = refresh_rollup(
-                _events_frame(tbl, key_cols, version=to_version), stale, dirty,
-                grains=grains, key_cols=key_cols, value_col="n_tokens",
-            )
-            refreshed.write.mode("overwrite").parquet(data_dir)
-            release_rollup_partials()
-    except (FileNotFoundError, SnapshotExpiredError):
-        # a concurrent writer expired a version this run pinned: no publish
-        gone = sorted(set(pins) - set(tbl.versions()))
-        if not gone:
-            raise
-        print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
-        return 1
-
-    rows = spark.read.parquet(data_dir).count()
-    out["rollup_rows"] = rows
-    try:
-        publish_version(args.rollup_dir, base + 1, {
-            "table_version": to_version, "grains": list(grains),
-            "key_cols": list(key_cols), "data_dir": data_name,
-            "rollup_rows": rows, "measure_version": TOKENIZER_VERSION,
-        })
-    except CommitConflictError as e:
-        print(json.dumps({"error": f"publish conflict: {e}"}))
-        return 1
-    expire_versions(args.rollup_dir, keep_last=2,
-                    orphan_grace_secs=args.sweep_grace_secs)
-    print(json.dumps(out))
-    return 0
 
 
 if __name__ == "__main__":

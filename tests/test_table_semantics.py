@@ -70,7 +70,7 @@ def test_commit_conflict_and_stale_takeover(spark, tmp_path):
     # a crashed writer's half-written temp for the next slot is not a
     # version and does not block the next merge
     nxt2 = nxt + 1
-    litter = t._meta_path(nxt2) + ".deadbeef.tmp"
+    litter = versions._meta_path(t.path, nxt2) + ".deadbeef.tmp"
     with open(litter, "w") as f:
         f.write('{"version": ')
     os.utime(litter, (time.time() - 3600, time.time() - 3600))
@@ -418,7 +418,7 @@ def test_claim_placeholder_not_a_published_version(spark, tmp_path):
     for i in range(1, 4):
         t.merge_apply(_batch(spark, [(i, "I", f"c{i}", 0, "x")]), {"lsn_hi": i})
     cur = t.current_version()
-    tmp = t._meta_path(cur + 1) + ".0123abcd.tmp"
+    tmp = versions._meta_path(t.path, cur + 1) + ".0123abcd.tmp"
     with open(tmp, "w") as f:
         json.dump({**t.metadata(), "version": cur + 1}, f)
     assert cur + 1 not in t.versions()
@@ -490,7 +490,7 @@ def test_legacy_cow_table_reads_and_merges(spark, tmp_path):
                                  (2, "I", "c2", 0, "b")]), {"lsn_hi": 2})
     t.compact()  # base-only, like a cow snapshot
     legacy = t.current_version()
-    meta_path = t._meta_path(legacy)
+    meta_path = versions._meta_path(t.path, legacy)
     with open(meta_path) as f:
         meta = json.load(f)
     assert meta["deltas"] == []
@@ -606,7 +606,7 @@ def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
     t.expire_snapshots(keep_last=2)
     cur = t.current_version()
     expired = [v for v in range(1, cur - 1)
-               if not os.path.exists(t._meta_path(v))]
+               if not os.path.exists(versions._meta_path(t.path, v))]
     assert expired, "fixture must have an expired version slot"
     v = expired[0]
     with pytest.raises(CommitConflictError, match="stale"):
@@ -614,13 +614,13 @@ def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
                   offsets={}, row_count=0, parent=v - 1)
     assert t.current_version() == cur  # version untouched
     # the stale writer withdrew its link: slot v holds no file
-    assert not os.path.exists(t._meta_path(v))
+    assert not os.path.exists(versions._meta_path(t.path, v))
     assert v not in t.versions()
     # and the table keeps working normally after the stale conflict
     t.merge_apply(_batch(spark, [(50, "I", "c9", 0, "y")]), {"b": 9})
     assert t.current_version() == cur + 1
     t.expire_snapshots(keep_last=2)
-    assert not os.path.exists(t._meta_path(v))
+    assert not os.path.exists(versions._meta_path(t.path, v))
 
 
 def test_expire_skips_sweep_when_kept_metadata_unreadable(spark, tmp_path, monkeypatch):

@@ -13,6 +13,8 @@ import pytest
 
 from etl_reconciliate_spark.target.versions import (
     CommitConflictError,
+    _slot,
+    data_name,
     expire_versions,
     list_versions,
     publish_version,
@@ -172,3 +174,12 @@ def test_expire_rejects_keep_last_below_one(tmp_path):
         with pytest.raises(ValueError):
             expire_versions(root, keep_last=bad, orphan_grace_secs=0)
     assert list_versions(root) == [0]
+
+
+@pytest.mark.parametrize("kind", ["snap", "delta"])
+@pytest.mark.parametrize("n", [0, 123456])
+def test_data_name_carries_its_slot(kind, n):
+    name = data_name(kind, n)
+    assert name.startswith(f"{kind}-")
+    assert _slot(name) == n
+    assert data_name(kind, n) != name  # unique per writer
