@@ -95,13 +95,13 @@ def _conform(df: DataFrame, want: T.StructType) -> DataFrame:
     """Pad columns missing from ``df`` with typed nulls and cast columns
     whose type is narrower than ``want``'s (widening evolution).
 
-    ONE select, not a ``withColumn`` loop — this runs on every base and
-    delta dir of every read, and per-column ``withColumn`` stacks one
-    Project node per evolved column into every such subplan (pure
-    analyzer/optimizer tax on the hottest path — r5 review). Column
-    order and passthrough extras (the ``_lsn``/``_deleted`` meta cols)
-    are preserved exactly as the loop produced them: existing columns
-    in place, missing ``want`` columns appended."""
+    For DataFrames only — the merge batch and ``read_changes``' from-side;
+    data dirs are scanned under the metadata schema instead
+    (:meth:`TargetTable._read_padded`). ONE select, not a ``withColumn``
+    loop: per-column ``withColumn`` stacks one Project node per evolved
+    column into the plan. Existing columns stay in place (passthrough
+    extras such as the meta columns included), missing ``want`` columns
+    are appended."""
     have = {f_.name: f_.dataType for f_ in df.schema.fields}
     want_types = {f_.name: f_.dataType for f_ in want.fields}
     cols = []
@@ -154,6 +154,10 @@ class TargetTable:
     max-``_lsn`` winner across base+deltas at scan time. Write cost is
     O(slice) regardless of table size, with automatic compaction folding
     deltas back into the base every ``compact_threshold`` commits.
+
+    Reads plan from the commit metadata alone: each data dir is scanned
+    under the read version's recorded schema, never an inferred one, so
+    a read starts no schema-inference job per base or delta dir.
 
     Tombstones (``_deleted``) are kept in deltas so the read-time winner
     selection sees the delete's LSN high-water mark. Whether compaction
@@ -282,13 +286,15 @@ class TargetTable:
 
     # ------------------------------------------------------------- read
     def _read_padded(self, data_dir: str, want: T.StructType) -> DataFrame:
-        """One data dir, padded to schema ``want`` (late-added columns
-        read as nulls, Iceberg-style) with meta columns last."""
-        df = self.spark.read.parquet(os.path.join(self.path, data_dir))
-        # _conform also casts files written before a widening promotion
-        # (int32 base files under an int64 evolved schema)
-        df = _conform(df, want)
-        return df.select([f_.name for f_ in want.fields] + META_COLS)
+        """One data dir scanned under schema ``want`` with meta columns
+        last — the read version's schema from its metadata, so planning
+        the scan runs no schema-inference job. Spark reads a late-added
+        column as nulls (Iceberg-style) and widens files written before
+        a promotion (int32 under an int64 schema); a file WIDER than
+        ``want`` fails the read instead of being narrowed."""
+        return self.spark.read.schema(_with_meta(want)).parquet(
+            os.path.join(self.path, data_dir)
+        )
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Current (or pinned-version) table contents.
@@ -296,7 +302,9 @@ class TargetTable:
         Live rows only unless ``include_meta``. The per-key
         max-``_lsn`` winner is resolved across base + deltas at scan
         time (one window over a key-hash shuffle — the read-side
-        cost MoR trades for O(slice) writes)."""
+        cost MoR trades for O(slice) writes). Every dir is scanned
+        under the version's metadata schema, so building the plan runs
+        no Spark job, however many deltas are pending."""
         meta = self.metadata(version)
         # the PINNED version's schema — time-travel must not show columns
         # added after that snapshot (round-1 verdict item 7)
@@ -324,8 +332,8 @@ class TargetTable:
         places a row in partition ``pmod(murmur3(keys), n_buckets)`` and
         the ``part-NNNNN-*`` file prefix IS that partition index. The
         same function is available as a Column (``pmod(hash(...), n)``),
-        so the reader computes each key's bucket with a literal-only
-        one-row job (no scan) and opens one file per (bucket, dir)
+        so the reader computes each key's bucket on the driver (no job,
+        no scan) and opens one file per (bucket, dir)
         instead of the whole table: O(dirs × distinct_buckets) files —
         at 10^10 rows a point lookup touches ``1 + n_deltas`` files, not
         ``n_buckets × (1 + n_deltas)``. This is Iceberg's
@@ -343,24 +351,24 @@ class TargetTable:
         meta = self.metadata(version)
         want = T.StructType.fromJson(meta["schema"])
         n_buckets = meta.get("n_buckets", self.n_buckets)
-        by_name = {f_.name: f_ for f_ in want.fields}
-        key_schema = T.StructType([by_name[k] for k in KEY_COLS])
-        # buckets via Spark's own hash partitioning function, over values
-        # cast to the TABLE's key types (murmur3 of int32 != int64)
-        kdf = self.spark.createDataFrame(keys, schema=key_schema)
-        buckets = sorted(
-            r[0]
-            for r in kdf.select(
-                F.pmod(F.hash(*KEY_COLS), F.lit(n_buckets))
-            ).distinct().collect()
-        )
-        key_filter = None
+        key_types = {f_.name: f_.dataType for f_ in want.fields}
+        bucket_cols, key_filter = [], None
         for kt in keys:
-            cond = None
-            for k, v in zip(KEY_COLS, kt):
-                c = F.col(k).eqNullSafe(F.lit(v))
-                cond = c if cond is None else cond & c
+            if len(kt) != len(KEY_COLS):
+                raise ValueError(f"read_keys takes {KEY_COLS} tuples, got {kt!r}")
+            # values cast to the TABLE's key types (murmur3 of int32 != int64)
+            lits = [F.lit(v).cast(key_types[k]) for k, v in zip(KEY_COLS, kt)]
+            bucket_cols.append(F.pmod(F.hash(*lits), F.lit(n_buckets)))
+            cond = functools.reduce(
+                lambda a, b: a & b,
+                [F.col(k).eqNullSafe(x) for k, x in zip(KEY_COLS, lits)],
+            )
             key_filter = cond if key_filter is None else key_filter | cond
+        # buckets via Spark's own hash partitioning function, projected
+        # from a one-row local relation: folded on the driver, no job
+        buckets = sorted(set(
+            self.spark.sql("VALUES (0)").select(F.array(*bucket_cols)).first()[0]
+        ))
 
         def _read_pruned(data_dir: str) -> DataFrame | None:
             paths = []
@@ -374,17 +382,11 @@ class TargetTable:
                 )
             if not paths:
                 return None  # all matching buckets empty in this dir
-            df = _conform(self.spark.read.parquet(*paths), want)
-            return df.select(
-                [f_.name for f_ in want.fields] + META_COLS
-            ).filter(key_filter)
+            df = self.spark.read.schema(_with_meta(want)).parquet(*paths)
+            return df.filter(key_filter)
 
-        parts = [
-            p
-            for p in [_read_pruned(meta["data_dir"])]
-            + [_read_pruned(d) for d in meta.get("deltas", [])]
-            if p is not None
-        ]
+        dirs = [meta["data_dir"], *meta.get("deltas", [])]
+        parts = [p for p in map(_read_pruned, dirs) if p is not None]
         if parts:
             df = _winners(parts)
         else:
@@ -480,11 +482,9 @@ class TargetTable:
             else None
         )
 
-        def _pad_to_want(df: DataFrame) -> DataFrame:
-            return _conform(df, want).select(
-                [f_.name for f_ in want.fields] + META_COLS
-            )
-
+        # the from-side under the TO schema: columns added in the range
+        # read as nulls, columns widened in it are cast up
+        prior = _conform(self.read(include_meta=True, version=from_version), want)
         dead = lambda side: F.coalesce(  # noqa: E731 — local predicate
             F.col(f"{side}.{META_DELETED}"), F.lit(False)
         )
@@ -492,9 +492,6 @@ class TargetTable:
             if not new_deltas:
                 return self.read_changes(from_version, from_version)
             winner = _winners([self._read_padded(d, want) for d in new_deltas])
-            prior = _pad_to_want(
-                self.read(include_meta=True, version=from_version)
-            )
             j = winner.alias("s").join(
                 prior.alias("t"),
                 [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in KEY_COLS],
@@ -524,9 +521,8 @@ class TargetTable:
             )
             return out.filter(F.col(self.CHANGE_TYPE).isNotNull()).select(out_fields)
 
-        fr = _pad_to_want(self.read(include_meta=True, version=from_version))
-        tt = _pad_to_want(self.read(include_meta=True, version=to_version))
-        j = fr.alias("t").join(
+        tt = self.read(include_meta=True, version=to_version)
+        j = prior.alias("t").join(
             tt.alias("s"),
             [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in KEY_COLS],
             "full_outer",
@@ -796,7 +792,7 @@ class TargetTable:
         ).mode("overwrite").parquet(
             out_path
         )
-        row_count = self._observed_live(obs, out_path)
+        row_count = self._observed_live(obs, out_path, schema)
         self._commit(
             version, schema, data_dir, meta.get("offsets", {}),
             row_count=row_count, parent=version - 1, deltas=[],
@@ -804,7 +800,7 @@ class TargetTable:
         return {"version": version, "row_count": row_count, "data_dir": data_dir,
                 "n_deltas": 0}
 
-    def _observed_live(self, obs, out_path: str) -> int:
+    def _observed_live(self, obs, out_path: str, schema: T.StructType) -> int:
         """Live-row count from the write's Observation, with a fallback:
         when the written plan is EMPTY, AQE propagates the empty
         relation through the sort and eliminates the CollectMetrics
@@ -814,7 +810,7 @@ class TargetTable:
         try:
             return int(obs.get["live"] or 0)
         except Exception:
-            out = self.spark.read.parquet(out_path)
+            out = self.spark.read.schema(_with_meta(schema)).parquet(out_path)
             return out.filter(
                 ~F.coalesce(F.col(META_DELETED), F.lit(False))
             ).count()

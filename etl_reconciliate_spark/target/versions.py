@@ -309,7 +309,14 @@ def refresh_output(
         print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
         return 1
 
-    out[rows_key] = tbl.spark.read.parquet(data_dir).count()
+    # the row count from the parquet footers: no Spark job
+    import pyarrow.parquet as pq
+
+    out[rows_key] = sum(
+        pq.read_metadata(os.path.join(data_dir, n)).num_rows
+        for n in os.listdir(data_dir)
+        if n.startswith("part-") and n.endswith(".parquet")
+    )
     try:
         publish_version(root, base + 1, {
             "table_version": to_version, **params,

@@ -5,6 +5,7 @@ commits, and the results/report sink."""
 import json
 import os
 import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -373,6 +374,199 @@ def test_read_keys_version_pinned_and_empty(spark, tmp_path):
     t.merge_apply(_batch(spark, [(2, "U", "c1", 0, "b")]), {"lsn_hi": 2})
     assert t.read_keys([("c1", 0)]).collect()[0]["text"] == "b"
     assert t.read_keys([("c1", 0)], version=v1).collect()[0]["text"] == "a"
+    with pytest.raises(ValueError):
+        t.read_keys([("c1",)])  # not a (conv_id, turn_idx) tuple
+
+
+_SPARK_TYPES = {
+    "TINYINT": T.ByteType(), "SMALLINT": T.ShortType(), "INT": T.IntegerType(),
+    "BIGINT": T.LongType(), "FLOAT": T.FloatType(), "DOUBLE": T.DoubleType(),
+}
+
+
+@pytest.mark.parametrize("chain, values", [
+    (["TINYINT", "SMALLINT", "INT", "BIGINT"], [5, 300, 70_000, 3_000_000_000]),
+    (["FLOAT", "DOUBLE"], [1.5, 0.1]),
+])
+def test_promotion_chain_reads_under_metadata_schema(spark, tmp_path, chain, values):
+    """Every step of a promotion chain, from a pre-widening base through
+    one post-widening delta per step: read(), read_keys, read_changes,
+    time travel (each version keeps its own type) and compaction. The
+    last step also adds a column, which reads as null from older dirs."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2,
+                    compact_threshold=99)
+    t.init(T.StructType(
+        SCORE_SCHEMA.fields[:2] + [T.StructField("score", _SPARK_TYPES[chain[0]])]
+    ))
+    t.merge_apply(_score_batch(spark, [(1, "I", "c0", 0, values[0])], chain[0]),
+                  {"lsn_hi": 1})
+    base = t.compact()["version"]
+    want = {("c0", 0): values[0]}
+    pinned = {base: (chain[0], dict(want))}
+    for i, (ty, v) in enumerate(zip(chain[1:], values[1:]), start=1):
+        last = i == len(chain) - 1
+        ddl = (f"lsn BIGINT, op STRING, conv_id STRING, turn_idx INT, score {ty}"
+               + (", tool STRING" if last else ""))
+        row = (i + 1, "I", f"c{i}", 0, v) + (("calc",) if last else ())
+        t.merge_apply(spark.createDataFrame([row], ddl), {"lsn_hi": i + 1})
+        want[(f"c{i}", 0)] = v
+        pinned[t.current_version()] = (ty, dict(want))
+
+    def scores(df):
+        return {(r["conv_id"], r["turn_idx"]): r["score"] for r in df.collect()}
+
+    def check_current():
+        for df in (t.read(), t.read_keys(list(want))):
+            assert dict(df.dtypes)["score"] == chain[-1].lower()
+            assert scores(df) == want
+        tools = {r["conv_id"]: r["tool"] for r in t.read().collect()}
+        assert tools == {c: ("calc" if c == f"c{len(chain) - 1}" else None)
+                         for c, _ in want}
+
+    check_current()
+    changes = t.read_changes(base)
+    assert dict(changes.dtypes)["score"] == chain[-1].lower()
+    assert {(r["conv_id"], r["turn_idx"]): (r["_change_type"], r["score"])
+            for r in changes.collect()} == {
+        k: ("insert", v) for k, v in want.items() if k != ("c0", 0)}
+    for version, (ty, rows) in pinned.items():
+        df = t.read(version=version)
+        assert dict(df.dtypes)["score"] == ty.lower()
+        assert scores(df) == rows
+    t.compact()
+    check_current()
+    assert dict(t.read(version=base).dtypes)["score"] == chain[0].lower()
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_file_wider_than_metadata_schema_fails_read(spark, tmp_path, vectorized):
+    """A data file whose type is WIDER than its version's recorded
+    schema (here a hand-edited v*.json) fails the read loudly — under
+    both parquet readers — instead of being narrowed silently."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    t.init(SCORE_SCHEMA)
+    t.merge_apply(_score_batch(spark, [(1, "I", "c1", 0, 5)], "BIGINT"),
+                  {"lsn_hi": 1})
+    meta_path = versions._meta_path(t.path, t.current_version())
+    with open(meta_path) as f:
+        meta = json.load(f)
+    [score] = [f_ for f_ in meta["schema"]["fields"] if f_["name"] == "score"]
+    assert score["type"] == "long"
+    score["type"] = "integer"
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    key = "spark.sql.parquet.enableVectorizedReader"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, vectorized)
+    try:
+        for df in (t.read(), t.read_keys([("c1", 0)])):
+            with pytest.raises(Exception, match="FAILED_READ_FILE"):
+                df.collect()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts (its own job group; the
+    listener bus is drained first, so no started job goes uncounted)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _table_with_pending(spark, path, n_deltas):
+    """A compacted base of 8 live rows plus ``n_deltas`` pending deltas,
+    each updating one row."""
+    t = TargetTable(spark, path, n_buckets=2, compact_threshold=99)
+    t.init(SCHEMA)
+    t.merge_apply(
+        _batch(spark, [(i, "I", f"c{i}", 0, f"v{i}") for i in range(8)]),
+        {"lsn_hi": 7},
+    )
+    t.compact()
+    for i in range(n_deltas):
+        t.merge_apply(_batch(spark, [(8 + i, "U", f"c{i}", 0, f"u{i}")]),
+                      {"lsn_hi": 8 + i})
+    return t
+
+
+def test_table_reads_plan_with_no_spark_job(spark, tmp_path):
+    """Data dirs are scanned under the read version's metadata schema
+    and read_keys' buckets are folded on the driver, so building any
+    read's DataFrame starts no Spark job, however many deltas are
+    pending."""
+    t = _table_with_pending(spark, str(tmp_path / "t"), 3)
+    base, cur = t.current_version() - 3, t.current_version()
+    plans = {
+        "read": lambda: t.read(),
+        "read_pinned": lambda: t.read(version=base + 1),
+        "read_keys": lambda: t.read_keys([("c1", 0), ("c5", 0)]),
+        "read_changes": lambda: t.read_changes(base, cur),
+        "read_changes_diff": lambda: t.read_changes(0, cur),
+    }
+    assert {n: _spark_jobs(spark, f) for n, f in plans.items()} == dict.fromkeys(
+        plans, 0)
+    assert {r["conv_id"]: r["text"]
+            for r in t.read_keys([("c1", 0), ("c5", 0)]).collect()} == {
+        "c1": "u1", "c5": "v5"}
+    assert {r["conv_id"]: r["_change_type"]
+            for r in t.read_changes(base, cur).collect()} == dict.fromkeys(
+        ["c0", "c1", "c2"], "update")
+
+
+def test_count_live_jobs_do_not_grow_with_pending_deltas(spark, tmp_path):
+    """count_live() resolves winners across base + pending deltas in a
+    fixed number of jobs: no per-dir schema-inference job."""
+    one = _table_with_pending(spark, str(tmp_path / "one"), 1)
+    three = _table_with_pending(spark, str(tmp_path / "three"), 3)
+    assert _spark_jobs(spark, one.count_live) == _spark_jobs(
+        spark, three.count_live)
+    assert one.count_live() == three.count_live() == 8
+
+
+def test_replay_trigger_jobs_do_not_grow_with_pending_deltas(spark, tmp_path):
+    """A replay(max_slices=1) trigger that leaves 3 pending deltas costs
+    as many Spark jobs as one that leaves 1 (its count_live reads them
+    all)."""
+    from etl_reconciliate_spark.datagen import gen_changelog, write_changelog
+    from etl_reconciliate_spark.streaming.runner import replay
+
+    log, target = str(tmp_path / "log"), str(tmp_path / "t")
+    write_changelog(spark, gen_changelog(2000, seed=11), log)
+
+    def trigger():
+        return replay(spark, log, target, slice_size=400, max_slices=1,
+                      compact_threshold=99)
+
+    trigger()
+    TargetTable(spark, target).compact()
+    jobs = [_spark_jobs(spark, trigger) for _ in range(3)]
+    assert len(TargetTable(spark, target).metadata()["deltas"]) == 3
+    assert jobs[0] == jobs[2]
+
+
+def test_target_reads_name_their_schema():
+    """Every parquet read in ``target/`` is an explicit-schema scan: a
+    ``.read.parquet(`` without ``.schema(...)`` would bring back one
+    schema-inference job per data dir."""
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+        __file__))), "etl_reconciliate_spark", "target")
+    bad = []
+    for name in sorted(os.listdir(pkg)):
+        if name.endswith(".py"):
+            with open(os.path.join(pkg, name)) as f:
+                bad += [(name, m.group(0)) for m in
+                        re.finditer(r"\.read\s*\.\s*parquet\(", f.read())]
+    assert bad == []
 
 
 def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path):
