@@ -17,8 +17,11 @@ no analog) is hierarchical:
    and keep the dirty blocks.
 3. **Drill-down pass** — collect the dirty block ids (at most
    ``n_blocks`` ints) and run the row-level reconcile ONLY on rows whose
-   block is among them (an ``isin`` filter). Zero dirty blocks means no
-   drill-down: the result is an empty frame, no join, no side scan.
+   block is among them (one SQL ``IN``, planned as ``InSet``). A key
+   lies in one block, so with no dirty block above ``hot_threshold``
+   source rows the drill-down runs no hot-key census. Zero dirty blocks
+   means no drill-down: the result is an empty frame, no join, no side
+   scan.
    With drift rate ε, the expensive key shuffle touches ~ε·rows +
    collateral rows sharing a dirty block, never the table.
 
@@ -47,6 +50,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from etl_reconciliate_spark.functions.hashing import hash32, hash60
 from etl_reconciliate_spark.operators.reconcile import reconcile
+from etl_reconciliate_spark.operators.skew import HOT_THRESHOLD
 from etl_reconciliate_spark.schemas import KEY_COLS, STATUS_MATCH
 
 NULL_SENTINEL = "\x00"
@@ -176,7 +180,8 @@ def checksum_reconcile(
     to share the digest pass with block-level reporting; it must come
     from :func:`checksum_diff` over the same (keys, compare_cols,
     n_blocks). Eager: the dirty block ids are collected when this is
-    called, so the digests run once either way.
+    called, so the digests run once either way; the drill-down filter
+    over them costs a fixed number of driver calls, however many.
     """
     keys = key_cols or KEY_COLS
     if keys != KEY_COLS:
@@ -188,10 +193,23 @@ def checksum_reconcile(
             block_checksums(source, keys, compare_cols, n_blocks),
             block_checksums(target, keys, compare_cols, n_blocks),
         )
-    dirty = [r[0] for r in diff.filter(F.col("dirty")).select("block_id").collect()]
+    dirty = diff.filter(F.col("dirty")).select("block_id", "src_rows").collect()
     if dirty:
-        in_dirty = block_expr(keys, n_blocks).isin(dirty)
-        source, target = source.filter(in_dirty), target.filter(in_dirty)
+        # a key lies in one block: no dirty block above the threshold,
+        # no hot key, so the drill-down needs no census job
+        if max(r[1] for r in dirty) <= recon_kwargs.get("hot_threshold", HOT_THRESHOLD):
+            recon_kwargs.setdefault("hot_keys", source.select(keys).limit(0))
+        # one SQL IN over a scratch block column (Column.isin would send
+        # one py4j call per id); Spark plans it as the same InSet filter
+        blk, cols = "_block_id", set(source.columns) | set(target.columns)
+        while blk in cols:
+            blk += "_"
+        block = block_expr(keys, n_blocks)
+        in_dirty = F.expr(f"`{blk}` IN ({', '.join(str(r[0]) for r in dirty)})")
+        source, target = (
+            df.withColumn(blk, block).filter(in_dirty).drop(blk)
+            for df in (source, target)
+        )
     else:  # every block clean: the typed empty result, no join, no scan
         source, target = source.limit(0), target.limit(0)
     recon = reconcile(source, target, compare_cols=compare_cols, **recon_kwargs)

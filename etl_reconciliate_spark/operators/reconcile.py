@@ -24,7 +24,11 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from etl_reconciliate_spark.operators.skew import salted_full_outer
+from etl_reconciliate_spark.operators.skew import (
+    HOT_THRESHOLD,
+    hot_key_census,
+    salted_full_outer,
+)
 from etl_reconciliate_spark.schemas import (
     KEY_COLS,
     STATUS_MATCH,
@@ -38,7 +42,7 @@ def reconcile(
     source: DataFrame,
     target: DataFrame,
     n_salts: int = 8,
-    hot_threshold: int = 100_000,
+    hot_threshold: int = HOT_THRESHOLD,
     compare_cols: tuple[str, ...] = ("text",),
     hot_keys: DataFrame | None = None,
     sample_fraction: float | None = None,
@@ -72,16 +76,23 @@ def reconcile(
     consumers that want ordered output (the report sink, tests) sort the
     small final result at the emission boundary.
 
-    Eager by one job: the hot-key census (``operators.skew``) runs and
-    is collected when this is called, not at the first action.
+    The hot-key census (``operators.skew.hot_key_census``) covers the
+    source side only: the target contract is one row per key (the CDC
+    table enforces it), so only the source can repeat a key. The census
+    is collected when this is called, not at the first action — eager
+    by one job, which never reads ``target``. A target that does repeat
+    keys is still classified exactly (both the hot and the cold route
+    are exact); to salt them, pass ``hot_keys``, which replaces the
+    census.
     """
     s = source.select(KEY_COLS + [F.col(c).alias(f"cmp_{c}") for c in compare_cols])
     t = target.select(KEY_COLS + [F.col(c).alias(f"cmp_{c}") for c in compare_cols])
 
+    if hot_keys is None:
+        hot_keys = hot_key_census(s, KEY_COLS, hot_threshold, sample_fraction)
     j = salted_full_outer(
-        s, t, KEY_COLS, n_salts=n_salts, hot_threshold=hot_threshold,
-        left_prefix="s", right_prefix="t",
-        hot_keys=hot_keys, sample_fraction=sample_fraction,
+        s, t, KEY_COLS, n_salts=n_salts, left_prefix="s", right_prefix="t",
+        hot_keys=hot_keys,
     )
 
     s_present = F.col("s_conv_id").isNotNull() | F.col("s_turn_idx").isNotNull()

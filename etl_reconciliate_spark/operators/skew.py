@@ -4,16 +4,20 @@ The north rule requires skew "handled explicitly" (BASELINE.json:14), on
 top of AQE's runtime skew-join split. Transcript conversations are
 Zipf-ish — one hot key can dominate a shuffle partition (SURVEY §7.3).
 
-``salted_full_outer`` runs the hot-key census once, as one job at call
-time, and collects it: at most rows / ``hot_threshold`` keys per side,
-through the driver as its broadcast always went. Shipped as data, not a
-sub-plan, it keeps the side plans out of the join's plan. With no hot
-key the result is ONE plain null-safe full outer join; otherwise FULL
-OUTER ``L ⟗ R ON keys`` decomposes exactly:
+``hot_key_census`` counts one side's rows per key and keeps the keys
+above ``hot_threshold``. ``salted_full_outer`` collects the hot set
+once, as one job at call time: the census over both sides, or the
+caller's ``hot_keys``. It is at most rows / ``hot_threshold`` keys per
+side, through the driver as its broadcast always went. Shipped as data,
+not a sub-plan, it keeps the side plans out of the join's plan.
+``operators.reconcile`` passes the census of its source side only: its
+target is the CDC table, one row per key, where a count finds no hot
+key. With no hot key the result is ONE plain null-safe full outer join;
+otherwise FULL OUTER ``L ⟗ R ON keys`` decomposes exactly:
 
 * **cold keys** → plain full outer join (Catalyst picks the strategy);
-* **hot keys** (per-key row count above ``hot_threshold`` on either
-  side) → three legs that together equal the full outer join:
+* **hot keys** (the collected hot set) → three legs that together
+  equal the full outer join:
     1. matched:   L_hot(+salt) ⋈ R_hot(×S replicas) on (keys, salt) —
        every L row meets every R row of its key exactly once, but the
        key's rows now spread across S reducers;
@@ -53,10 +57,32 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+HOT_THRESHOLD = 100_000  # rows of one key on one side that make it hot
+
 
 def _null_safe_eq(a: list[str], b: list[str]) -> Column:
     """``a[0] <=> b[0] AND ...``: a null key component matches a null."""
     return reduce(Column.__and__, [F.col(x).eqNullSafe(F.col(y)) for x, y in zip(a, b)])
+
+
+def hot_key_census(df: DataFrame, keys: list[str], threshold: int = HOT_THRESHOLD,
+                   sample_fraction: float | None = None) -> DataFrame:
+    """The ``keys`` values with more than ``threshold`` rows in ``df``:
+    one pre-aggregation (map-side combined), tiny by construction.
+
+    With ``sample_fraction`` the count runs on a seeded (deterministic
+    across retries) Bernoulli sample against the threshold scaled down
+    proportionally: a 100k-row hot key is found by a 1% sample with
+    ~±10% count error, and aggregation state shrinks by 1/fraction."""
+    if sample_fraction is not None:
+        df = df.sample(fraction=sample_fraction, seed=7)
+        threshold = max(1, int(threshold * sample_fraction))
+    return (
+        df.groupBy(keys)
+        .agg(F.count(F.lit(1)).alias("_hot_n"))
+        .filter(F.col("_hot_n") > threshold)
+        .select(keys)
+    )
 
 
 def salted_full_outer(
@@ -64,7 +90,7 @@ def salted_full_outer(
     right: DataFrame,
     keys: list[str],
     n_salts: int = 8,
-    hot_threshold: int = 100_000,
+    hot_threshold: int = HOT_THRESHOLD,
     left_prefix: str = "l",
     right_prefix: str = "r",
     hot_keys: DataFrame | None = None,
@@ -83,14 +109,12 @@ def salted_full_outer(
       columns. At 100 TB the hot set is usually KNOWN ahead of time
       (previous run's census, table statistics, the run manifest) —
       passing it skips the census scans entirely.
-    * ``sample_fraction`` — census on a Bernoulli sample with the
-      threshold scaled down proportionally (seeded: deterministic
-      across retries). A 100k-row hot key is found by a 1% sample with
-      ~±10% count error — set the threshold with that slack in mind.
-      Aggregation state shrinks by 1/fraction; exactness of the JOIN is
-      unaffected (only the hot/cold routing is approximate, and both
-      routes are exact).
-    * default — exact per-key counts on both sides (map-side combined).
+    * ``sample_fraction`` — census on a seeded Bernoulli sample (see
+      :func:`hot_key_census`). Exactness of the JOIN is unaffected:
+      only the hot/cold routing is approximate, and both routes are
+      exact.
+    * default — :func:`hot_key_census` over each side, exact per-key
+      counts (map-side combined).
     """
     def tag(df: DataFrame, prefix: str) -> DataFrame:
         return df.select([F.col(c).alias(f"{prefix}_{c}") for c in df.columns])
@@ -101,24 +125,11 @@ def salted_full_outer(
     rk = [f"{right_prefix}_{k}" for k in keys]
     hk = [f"_h_{k}" for k in keys]
 
-    if hot_keys is not None:
-        census = hot_keys.select(keys).distinct()
-    else:
-        lc, rc, thr = lt, rt, hot_threshold
-        if sample_fraction is not None:
-            lc = lt.sample(fraction=sample_fraction, seed=7)
-            rc = rt.sample(fraction=sample_fraction, seed=7)
-            thr = max(1, int(hot_threshold * sample_fraction))
-        # A key is hot if either side exceeds the threshold. One
-        # pre-aggregation per side (map-side combine); the hot set is
-        # tiny by construction → collect it, broadcast it as data.
-        lhot = lc.groupBy(lk).agg(F.count(F.lit(1)).alias("_ln")).filter(
-            F.col("_ln") > thr
-        ).select([F.col(c).alias(k) for c, k in zip(lk, keys)])
-        rhot = rc.groupBy(rk).agg(F.count(F.lit(1)).alias("_rn")).filter(
-            F.col("_rn") > thr
-        ).select([F.col(c).alias(k) for c, k in zip(rk, keys)])
-        census = lhot.unionByName(rhot).distinct()
+    if hot_keys is None:  # a key is hot if either side exceeds the threshold
+        hot_keys = hot_key_census(
+            left, keys, hot_threshold, sample_fraction
+        ).unionByName(hot_key_census(right, keys, hot_threshold, sample_fraction))
+    census = hot_keys.select(keys).distinct()
 
     join_cond = _null_safe_eq(lk, rk)
     out_cols = lt.columns + rt.columns

@@ -34,7 +34,6 @@ emulation approximates this by hash-clustering data files on the key.
 from __future__ import annotations
 
 import functools
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -285,16 +284,20 @@ class TargetTable:
         )
 
     # ------------------------------------------------------------- read
-    def _read_padded(self, data_dir: str, want: T.StructType) -> DataFrame:
+    def _read_padded(
+        self, data_dir: str, want: T.StructType, files: str | None = None
+    ) -> DataFrame:
         """One data dir scanned under schema ``want`` with meta columns
         last — the read version's schema from its metadata, so planning
         the scan runs no schema-inference job. Spark reads a late-added
         column as nulls (Iceberg-style) and widens files written before
         a promotion (int32 under an int64 schema); a file WIDER than
-        ``want`` fails the read instead of being narrowed."""
-        return self.spark.read.schema(_with_meta(want)).parquet(
-            os.path.join(self.path, data_dir)
-        )
+        ``want`` fails the read instead of being narrowed. ``files``, if
+        given, is a glob the dir's file names must match."""
+        reader = self.spark.read.schema(_with_meta(want))
+        if files is not None:
+            reader = reader.option("pathGlobFilter", files)
+        return reader.parquet(os.path.join(self.path, data_dir))
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Current (or pinned-version) table contents.
@@ -370,27 +373,14 @@ class TargetTable:
             self.spark.sql("VALUES (0)").select(F.array(*bucket_cols)).first()[0]
         ))
 
-        def _read_pruned(data_dir: str) -> DataFrame | None:
-            paths = []
-            # glob.escape the directory part: a table path containing
-            # glob metacharacters ('[', '?', '*') would otherwise match
-            # nothing and silently return empty lookups (r5 review)
-            base = glob.escape(os.path.join(self.path, data_dir))
-            for b in buckets:
-                paths.extend(
-                    glob.glob(os.path.join(base, f"part-{b:05d}-*.parquet"))
-                )
-            if not paths:
-                return None  # all matching buckets empty in this dir
-            df = self.spark.read.schema(_with_meta(want)).parquet(*paths)
-            return df.filter(key_filter)
-
-        dirs = [meta["data_dir"], *meta.get("deltas", [])]
-        parts = [p for p in map(_read_pruned, dirs) if p is not None]
-        if parts:
-            df = _winners(parts)
-        else:
-            df = self.spark.createDataFrame([], schema=_with_meta(want))
+        # one listing per dir, filtered to the buckets' files by name:
+        # explicit file paths above 32 would start a parallel listing job
+        # (spark.sql.sources.parallelPartitionDiscovery.threshold)
+        files = f"part-{{{','.join(f'{b:05d}' for b in buckets)}}}-*.parquet"
+        df = _winners([
+            self._read_padded(d, want, files).filter(key_filter)
+            for d in [meta["data_dir"], *meta.get("deltas", [])]
+        ])
         return _visible(df, want, include_meta)
 
     CHANGE_TYPE = "_change_type"

@@ -30,6 +30,11 @@ import shutil
 import time
 import uuid
 
+from pyspark.sql.types import StructType
+
+# the key under which Spark's parquet writer stores the row schema (JSON)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 class SnapshotExpiredError(ValueError):
     """A version required by the requested read was dropped by
@@ -251,9 +256,11 @@ def refresh_output(
 
     The bodies write the output into a fresh ``snap-*`` dir and return
     report fields: ``build(to_version, data_dir)`` and
-    ``update(from_version, to_version, stale_dir, data_dir)``. A table
-    version they read that is expired mid-run ends the run with an
-    error line naming it, unpublished. Of two runs on one base the
+    ``update(from_version, to_version, stale, data_dir)``, where
+    ``stale`` is the previous output scanned under the Spark schema its
+    metadata records (from a part file's footer): no inference job. A
+    table version they read that is expired mid-run ends the run with
+    an error line naming it, unpublished. Of two runs on one base the
     first to link wins and the other exits 1 with a conflict. After a
     publish all but the last two versions expire, and unreferenced
     dirs older than ``sweep_grace_secs`` are collected."""
@@ -299,8 +306,12 @@ def refresh_output(
         if meta is None:
             out.update(build(to_version, data_dir))
         else:
-            out.update(update(meta["table_version"], to_version,
-                              os.path.join(root, meta["data_dir"]), data_dir))
+            stale = tbl.spark.read
+            if "schema" in meta:  # outputs published before it was recorded
+                stale = stale.schema(StructType.fromJson(meta["schema"]))
+            stale = stale.parquet(os.path.join(root, meta["data_dir"]))
+            out.update(update(meta["table_version"], to_version, stale,
+                              data_dir))
     except (FileNotFoundError, SnapshotExpiredError):
         # a concurrent writer expired a version this run pinned
         gone = sorted(set(pins) - set(tbl.versions()))
@@ -309,19 +320,23 @@ def refresh_output(
         print(json.dumps({"error": f"table version {gone[0]} expired mid-run"}))
         return 1
 
-    # the row count from the parquet footers: no Spark job
+    # the row count and the Spark schema from the footers: no Spark job
     import pyarrow.parquet as pq
 
-    out[rows_key] = sum(
-        pq.read_metadata(os.path.join(data_dir, n)).num_rows
+    footers = [
+        pq.read_metadata(os.path.join(data_dir, n))
         for n in os.listdir(data_dir)
         if n.startswith("part-") and n.endswith(".parquet")
-    )
+    ]
+    out[rows_key] = sum(f.num_rows for f in footers)
+    schema = next((f.metadata[SPARK_SCHEMA_KEY] for f in footers
+                   if SPARK_SCHEMA_KEY in (f.metadata or {})), None)
     try:
         publish_version(root, base + 1, {
             "table_version": to_version, **params,
             "data_dir": os.path.basename(data_dir), rows_key: out[rows_key],
             "measure_version": measure_version,
+            **({"schema": json.loads(schema)} if schema else {}),
         })
     except CommitConflictError as e:
         print(json.dumps({"error": f"publish conflict: {e}"}))

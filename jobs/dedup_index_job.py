@@ -129,7 +129,7 @@ def main() -> int:
             rows_per_band=args.rows_per_band, threshold=args.threshold,
         ))}
 
-    def update(from_version, to_version, stale_dir, data_dir):
+    def update(from_version, to_version, stale, data_dir):
         # changed-key-count-sized and consumed three times (count, the
         # delta semi-join, the stale anti-join) — materialize once so
         # the CDC read does not run per consumer
@@ -151,12 +151,13 @@ def main() -> int:
         # swap: every changed doc's rows leave (covers deletes — a
         # vanished conversation simply contributes no fresh rows)
         write_index(
-            spark.read.parquet(stale_dir).join(changed, "doc_id", "left_anti")
+            stale.join(changed, "doc_id", "left_anti")
             .unionByName(fresh),
             data_dir,
         )
         # probe fresh rows against the refreshed index → NEW pairs
-        cand = probe_band_index(fresh, spark.read.parquet(data_dir))
+        cand = probe_band_index(
+            fresh, spark.read.schema(stale.schema).parquet(data_dir))
         cand_ids = (
             cand.select(F.col("doc_a").alias("conv_id"))
             .unionByName(cand.select(F.col("doc_b").alias("conv_id")))

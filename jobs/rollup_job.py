@@ -97,7 +97,7 @@ def main() -> int:
         ).write.mode("overwrite").parquet(data_dir)
         return {}
 
-    def update(from_version, to_version, stale_dir, data_dir):
+    def update(from_version, to_version, stale, data_dir):
         changes = tbl.read_changes(from_version, to_version)
         # postimage cells (inserts/updates) + delete preimages (deletes
         # carry the last-known payload); a null-ts row occupies no cell
@@ -120,7 +120,7 @@ def main() -> int:
         dirty_cells = dirty.count()
         refresh_rollup(
             _events_frame(tbl, key_cols, version=to_version),
-            spark.read.parquet(stale_dir), dirty,
+            stale, dirty,
             grains=grains, key_cols=key_cols, value_col="n_tokens",
         ).write.mode("overwrite").parquet(data_dir)
         release_rollup_partials()

@@ -2,8 +2,10 @@
 pruning, and exact equivalence with the full row-level reconcile."""
 
 import datetime
+import threading
 
 import pytest
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
 
 from etl_reconciliate_spark.operators.checksum import (
@@ -13,6 +15,7 @@ from etl_reconciliate_spark.operators.checksum import (
 )
 from etl_reconciliate_spark.operators.reconcile import reconcile
 from etl_reconciliate_spark.schemas import STATUS_MATCH, TRANSCRIPTS_SCHEMA
+from test_table_semantics import _spark_jobs
 
 TS = datetime.datetime(2026, 1, 1)
 N_BLOCKS = 16
@@ -135,3 +138,66 @@ def test_identical_tables_no_drill_down(spark, drifted, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "FileScan" not in plan, plan
     assert out.columns == ["conv_id", "turn_idx", "status", "src_text", "tgt_text"]
+
+
+def _py4j_round_trips(monkeypatch, fn) -> int:
+    """The driver-to-JVM round trips this thread makes while ``fn()``
+    runs (other threads' calls, e.g. callbacks, are not counted)."""
+    me, n, send = threading.get_ident(), [0], GatewayClient.send_command
+
+    def counted(self, *a, **kw):
+        n[0] += threading.get_ident() == me
+        return send(self, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", counted)
+        fn()
+    return n[0]
+
+
+def test_drill_down_calls_do_not_grow_with_dirty_blocks(spark, monkeypatch):
+    """The dirty-block filter is one SQL IN: building the drill-down
+    over 1,000+ dirty blocks costs about as many driver round trips as
+    over one (``Column.isin`` sent one literal per id), and it still
+    plans as an InSet filter."""
+    n_blocks = 4096
+    rows = [(f"c{i}", 0, f"t{i}") for i in range(3000)]
+    src = _df(spark, rows)
+    tgt = _df(spark, [(c, t, f"{x}!") for c, t, x in rows])
+    diff = checksum_diff(
+        block_checksums(src, n_blocks=n_blocks),
+        block_checksums(tgt, n_blocks=n_blocks),
+    ).localCheckpoint()
+    dirty = diff.filter(F.col("dirty"))
+    assert dirty.count() >= 1000
+    one = dirty.orderBy("block_id").limit(1).localCheckpoint()
+    out = {}
+
+    def run(key, d):
+        out[key] = checksum_reconcile(src, tgt, n_blocks=n_blocks, diff=d)
+
+    calls = {k: _py4j_round_trips(monkeypatch, lambda: run(k, d))
+             for k, d in (("one", one), ("many", dirty))}
+    assert calls["many"] - calls["one"] < 300, calls
+    plan = out["many"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "INSET" in plan, plan
+    assert out["many"].count() == 3000
+    assert out["one"].count() < 10
+
+
+def test_small_dirty_blocks_skip_the_census(spark, drifted):
+    """A key lies in one block, so dirty blocks of at most
+    ``hot_threshold`` source rows hold no hot key: building the
+    drill-down starts one job (the dirty-id collect) and no census."""
+    src, tgt = drifted
+    diff = checksum_diff(
+        block_checksums(src, n_blocks=N_BLOCKS),
+        block_checksums(tgt, n_blocks=N_BLOCKS),
+    ).localCheckpoint()
+
+    def jobs(**kw):
+        return _spark_jobs(spark, lambda: checksum_reconcile(
+            src, tgt, n_blocks=N_BLOCKS, diff=diff, **kw))
+
+    # blocks above a threshold of 1 row: the census runs
+    assert jobs() == 1 < jobs(hot_threshold=1)

@@ -394,3 +394,38 @@ def test_salted_null_key_component_hot(spark):
     got = Counter(tuple(r) for r in salted.collect())
     assert got == Counter(tuple(r) for r in plain.collect())
     assert sum(got.values()) == 5 * 3 + 1 + 1 + 1
+
+
+def test_census_never_reads_the_target(spark, frames):
+    """The eager hot-key census counts the source side only: building
+    the reconcile never evaluates the target (one row per key by
+    contract), and the target's first evaluation is the first action."""
+    from pyspark.sql import functions as F
+
+    @F.udf("boolean")
+    def boom(_):
+        raise RuntimeError("target evaluated")
+
+    src, tgt = frames
+    rec = reconcile(src, tgt.filter(boom("conv_id")))
+    with pytest.raises(Exception, match="target evaluated"):
+        status_counts(rec).collect()
+
+
+def test_target_only_hot_key_takes_the_cold_route(spark):
+    """A key that repeats only on the target is not in the source-side
+    census: it joins on the plain route and the result still equals
+    the salted one, where ``hot_keys`` names it."""
+    from collections import Counter
+
+    src = _df(spark, [("hot", 0, "s"), ("c", 1, "x")])
+    tgt = _df(spark, [("hot", 0, f"t{i}") for i in range(5)] + [("d", 1, "y")])
+    cold = reconcile(src, tgt, hot_threshold=2)
+    plan = cold._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join ") == 1 and "Union" not in plan, plan
+    hk = spark.createDataFrame([("hot", 0)], "conv_id STRING, turn_idx INT")
+    salted = reconcile(src, tgt, hot_keys=hk, n_salts=4)
+    assert Counter(map(tuple, cold.collect())) == Counter(
+        map(tuple, salted.collect()))
+    assert _counts(cold) == {
+        "VALUE_DISCREPANCY": 5, "SOURCE_ONLY": 1, "TARGET_ONLY": 1}

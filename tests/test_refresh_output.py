@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 from etl_reconciliate_spark.target import versions
 from etl_reconciliate_spark.target.table import TargetTable
 from etl_reconciliate_spark.target.versions import list_versions, read_version
+from test_table_semantics import _spark_jobs
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
 try:
@@ -135,3 +136,34 @@ def test_refresh_output_lifecycle(spark, tmp_path, capsys, monkeypatch,
         assert rc == 1
         assert lines == [{"error": f"table version {built_from} expired mid-run"}]
         assert list_versions(root) == published
+
+
+def test_refresh_input_plans_with_no_spark_job(spark, tmp_path):
+    """A published output records its Spark schema (read from a written
+    file's footer), and a refresh scans the previous output under it:
+    building the refresh's input plan starts no Spark job."""
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    tbl.init(SCHEMA)
+    _commit(spark, tbl, 1)
+    root = str(tmp_path / "out")
+    built = spark.createDataFrame([("a", 1, 2.5)], "k STRING, n BIGINT, x DOUBLE")
+    seen = {}
+
+    def update(from_version, to_version, stale, data_dir):
+        seen["stale"] = stale
+        os.makedirs(data_dir)
+        return {}
+
+    def run(refresh):
+        return versions.refresh_output(
+            tbl, root, name="out", params={}, measure_version=1,
+            refresh=refresh, sweep_grace_secs=0,
+            build=lambda to_version, data_dir: built.write.parquet(data_dir) or {},
+            update=update, unchanged=lambda table_meta: {})
+
+    assert run(False) == 0
+    recorded = T.StructType.fromJson(read_version(root)["schema"])
+    assert recorded.simpleString() == built.schema.simpleString()
+    _commit(spark, tbl, 2)
+    assert _spark_jobs(spark, lambda: run(True)) == 0
+    assert [tuple(r) for r in seen["stale"].collect()] == [("a", 1, 2.5)]

@@ -521,6 +521,28 @@ def test_table_reads_plan_with_no_spark_job(spark, tmp_path):
         ["c0", "c1", "c2"], "update")
 
 
+def test_read_keys_over_many_buckets_plans_with_no_spark_job(spark, tmp_path):
+    """A lookup whose keys span more than 32 bucket files lists each dir
+    once under a file-name glob: explicit paths above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    would start a parallel listing job at plan time."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=64,
+                    compact_threshold=99)
+    t.init(SCHEMA)
+    t.merge_apply(_batch(spark, [(i, "I", f"c{i % 50}", i // 50, f"v{i}")
+                                 for i in range(400)]), {"lsn_hi": 399})
+    keys = [(f"c{i % 50}", i // 50) for i in range(0, 400, 2)]
+    assert len(keys) == 200
+    assert _spark_jobs(spark, lambda: t.read_keys(keys)) == 0
+    got = t.read_keys(keys)
+    assert len(set(got.inputFiles())) > 32
+    full = t.read().join(
+        spark.createDataFrame(keys, "conv_id STRING, turn_idx INT"),
+        ["conv_id", "turn_idx"], "semi")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, full.select(*got.columns).collect()))
+
+
 def test_count_live_jobs_do_not_grow_with_pending_deltas(spark, tmp_path):
     """count_live() resolves winners across base + pending deltas in a
     fixed number of jobs: no per-dir schema-inference job."""
